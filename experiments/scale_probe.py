@@ -6,8 +6,8 @@ and wall-clock under the production ('xxhash') id strategy.
 
     python3 experiments/scale_probe.py [REPLICAS=10]
     python3 experiments/scale_probe.py --capped [REPLICAS=10]
-        capped-vs-uncapped candidate-path A/B: uncapped banded_pairs vs
-        banded_pairs_capped under 'drop' and 'auto' at the same probe.
+        capped-vs-uncapped candidate-path A/B: banded_pairs uncapped vs
+        capped under 'drop' and 'auto' at the same probe.
     python3 experiments/scale_probe.py --groups [REPLICAS=160]
         the GROUP-LEVEL flagship at the scale where the pair-list path
         dies (160x: ~67M true pairs exhausted ~70 GB of shuffle-spill
@@ -75,8 +75,6 @@ def capped_probe(replicas: int) -> None:
     """Capped-vs-uncapped candidate path at the replication probe: the
     production cap policies must not regress the uncapped wall when no
     bucket exceeds the cap region (r4 #1's A/B)."""
-    from mapreduce_minhash_lsh_spark.operators.lsh import banded_pairs_capped
-
     spark = get_spark(app_name="capped-probe")
     spark.range(1).count()
     base, big = _replicated(spark, replicas)
@@ -89,8 +87,8 @@ def capped_probe(replicas: int) -> None:
     # relation ONCE: the A/B isolates the candidate stage.
     rel_warm = signature_set_relation(explode_shingles(base, cfg.k), cfg)
     banded_pairs(rel_warm, cfg).count()
-    banded_pairs_capped(rel_warm, cfg, 256, "drop").count()
-    banded_pairs_capped(rel_warm, cfg, 256, "auto").count()
+    banded_pairs(rel_warm, cfg, max_bucket_size=256, oversize="drop").count()
+    banded_pairs(rel_warm, cfg, max_bucket_size=256, oversize="auto").count()
     _drop_all_persisted(spark)
     big = _replicated(spark, replicas)[1]
     rel = signature_set_relation(explode_shingles(big, cfg.k), cfg)
@@ -99,8 +97,10 @@ def capped_probe(replicas: int) -> None:
            "cap": 256, "paths": {}}
     runs = [
         ("uncapped", lambda: banded_pairs(rel, cfg)),
-        ("capped_drop", lambda: banded_pairs_capped(rel, cfg, 256, "drop")),
-        ("capped_auto", lambda: banded_pairs_capped(rel, cfg, 256, "auto")),
+        ("capped_drop", lambda: banded_pairs(
+            rel, cfg, max_bucket_size=256, oversize="drop")),
+        ("capped_auto", lambda: banded_pairs(
+            rel, cfg, max_bucket_size=256, oversize="auto")),
     ]
     for name, mk in runs:
         best, n = 9e9, None
@@ -335,58 +335,10 @@ def premium_probe(n_runs: int = 3) -> None:
     spark.stop()
 
 
-def prepart_ab_probe(replicas: int) -> None:
-    """Same-session interleaved A/B of the valve's payload pre-partition
-    at the 160x design point (VERDICT r9 #3: the r9 798.4-vs-911.5 s
-    comparison was cross-session on a ±25% box).  Both arms run the
-    DEFAULT-budget chunked valve over the same replicated corpus; the
-    only difference is similarity._VALVE_PREPARTITION.  Checksums prove
-    bit-identity; this run doubles as the r10 'valve_160x still
-    completes' evidence."""
-    from mapreduce_minhash_lsh_spark.operators import similarity as S
-
-    spark = get_spark(app_name="prepart-ab-probe")
-    spark.range(1).count()
-    base, big = _replicated(spark, replicas)
-    n_docs = big.count()
-    cfg = MinHashLSHConfig(
-        num_hashes=128, num_bands=8, threshold=0.8,
-        id_strategy="xxhash", band_key_strategy="xxhash",
-    )
-    similar_pairs(base, cfg).count()  # warm codegen at base scale
-    _drop_all_persisted(spark)
-
-    arms = {}
-    # "force" bypasses the r10 n_chunks <= 4 depth gate so the A/B keeps
-    # measuring the cache even at depths where production gates it off
-    for arm, flag in (("prepartitioned", "force"), ("baseline", False)):
-        big = _replicated(spark, replicas)[1]
-        S._VALVE_PREPARTITION = flag
-        try:
-            t0 = time.perf_counter()
-            sig = _pairs_checksum(similar_pairs(big, cfg))
-            wall = round(time.perf_counter() - t0, 1)
-        finally:
-            S._VALVE_PREPARTITION = True
-        arms[arm] = {"pairs": sig[0], "checksum": list(sig[1:]), "wall_sec": wall}
-        _drop_all_persisted(spark)
-    print(json.dumps({
-        "mode": "prepart_ab", "replicas": replicas, "docs": n_docs,
-        "pair_budget": S.PAIR_VERIFY_BUDGET, **arms,
-        "identical": arms["prepartitioned"]["pairs"] == arms["baseline"]["pairs"]
-        and arms["prepartitioned"]["checksum"] == arms["baseline"]["checksum"],
-    }))
-    spark.stop()
-
-
 def main() -> None:
     if "--premium" in sys.argv:
         args = [a for a in sys.argv[1:] if not a.startswith("-")]
         premium_probe(int(args[0]) if args else 3)
-        return
-    if "--prepart-ab" in sys.argv:
-        args = [a for a in sys.argv[1:] if not a.startswith("-")]
-        prepart_ab_probe(int(args[0]) if args else 160)
         return
     if "--valve-ab" in sys.argv:
         args = [a for a in sys.argv[1:] if not a.startswith("-")]

@@ -30,7 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
-from mapreduce_minhash_lsh_spark.operators.lsh import bands_for, candidate_pairs
+from mapreduce_minhash_lsh_spark.operators.lsh import banded_pairs
 from mapreduce_minhash_lsh_spark.operators.minhash import minhash_signatures_array
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.session import get_spark
@@ -65,13 +65,12 @@ def main() -> None:
     )
     sh = explode_shingles(docs, cfg.k).persist()
     sig = minhash_signatures_array(sh, cfg).localCheckpoint(eager=True)
-    bands = bands_for(sig, cfg).localCheckpoint(eager=True)
 
     def run(policy: str) -> dict:
         if policy == "uncapped":
-            c = candidate_pairs(bands, cfg)
+            c = banded_pairs(sig, cfg)
         else:
-            c = candidate_pairs(bands, cfg, max_bucket_size=cap, oversize=policy)
+            c = banded_pairs(sig, cfg, max_bucket_size=cap, oversize=policy)
         c.count()  # warm the generated code
         t0 = time.perf_counter()
         n = c.count()

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
-from mapreduce_minhash_lsh_spark.operators.lsh import compact_band_keys
+from mapreduce_minhash_lsh_spark.operators.lsh import band_row_pairs, compact_band_keys
 from mapreduce_minhash_lsh_spark.operators.minhash import minhash_signatures_array
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
@@ -139,26 +139,8 @@ def cross_pairs_against_store(
     sids_seen, sig_seen, bands_seen = load_band_store(spark, store_dir)
     sh_new = explode_shingles(new_docs, cfg.k).persist()
     sig_new = _materialize(minhash_signatures_array(sh_new, cfg), checkpoint_dir)
-    bands_new = compact_band_keys(sig_new, cfg)
-
-    def _cap(b: DataFrame) -> DataFrame:
-        if max_bucket_size is None:
-            return b
-        sized = b.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
-        return b.join(
-            sized.where(F.col("_n") <= max_bucket_size), ["band", "band_key"]
-        ).drop("_n")
-
-    cands = (
-        _cap(bands_new)
-        .withColumnRenamed("doc_id", "doc_id_a")
-        .join(
-            _cap(bands_seen).withColumnRenamed("doc_id", "doc_id_b"),
-            ["band", "band_key"],
-        )
-        .where(F.col("doc_id_a") != F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .distinct()
+    cands = band_row_pairs(
+        compact_band_keys(sig_new, cfg), bands_seen, max_bucket_size
     )
     cands = _materialize(
         signature_prefilter(

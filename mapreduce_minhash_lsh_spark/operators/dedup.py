@@ -276,10 +276,7 @@ def similar_groups(
     explicitly; exhaustion raises rather than mislabeling.
     """
     from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig  # noqa: F401
-    from mapreduce_minhash_lsh_spark.operators.lsh import (
-        banded_pairs,
-        banded_pairs_capped,
-    )
+    from mapreduce_minhash_lsh_spark.operators.lsh import banded_pairs
     from mapreduce_minhash_lsh_spark.operators.similarity import (
         _materialize,
         fused_overlap_counts,
@@ -291,10 +288,9 @@ def similar_groups(
     rel = signature_set_relation(
         explode_shingles(docs, cfg.k), cfg, checkpoint_dir
     )
-    if max_bucket_size is None:
-        cands = banded_pairs(rel, cfg)
-    else:
-        cands = banded_pairs_capped(rel, cfg, max_bucket_size, oversize)
+    cands = banded_pairs(
+        rel, cfg, max_bucket_size=max_bucket_size, oversize=oversize
+    )
     obs_edges = Observation()
     edges = _materialize(
         signature_prefilter(
@@ -693,21 +689,8 @@ def hybrid_dedup_drop_ids(
     exact geometry; library callers should take these defaults instead.
 
     Plan: the two chains are independent (no cross shuffle) and meet in
-    one full outer join on bounded drop lists.  Since r15 they are
-    CONSTRUCTED from two driver threads (guide §2.6 — overlap
-    independent jobs): both chains run eager materialization actions
-    (the text chain's signature/verify checkpoints, the embedding
-    chain's quantizer sample collect), and sequential construction
-    serialized them — the embedding chain's small jobs now back-fill
-    executors freed by the text chain's stage tails.  Each chain's
-    result is deterministic in isolation and they share no state beyond
-    the (lock-guarded) table memos and idempotent session confs, so the
-    output is schedule-independent; ``inheritable_thread_target`` keeps
-    JVM thread-local job properties sane on both."""
+    one full outer join on bounded drop lists."""
     import math
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
 
     from mapreduce_minhash_lsh_spark.operators.semdedup import semdedup_drop_ids
     from mapreduce_minhash_lsh_spark.operators.similarity import similar_pairs
@@ -715,30 +698,19 @@ def hybrid_dedup_drop_ids(
     if n_lists is None:
         n_lists = max(1, math.isqrt(emb.count()))
 
-    def text_chain() -> DataFrame:
-        pairs = similar_pairs(docs, cfg)
-        # prepared: the flagship's verified pairs are unique (a < b)
-        # rows projected off the checkpointed counts relation (r15).
-        groups = near_dup_groups(pairs, prepared=True)
-        return groups.where(F.col("doc_id") != F.col("group_id")).select(
-            "doc_id", F.lit(True).alias("by_text")
-        )
-
-    def emb_chain() -> DataFrame:
-        return semdedup_drop_ids(
-            emb,
-            threshold=threshold,
-            n_lists=n_lists,
-            lloyd_iters=lloyd_iters,
-            soft_assign=soft_assign,
-        ).select(
-            F.col("vec_id").alias("doc_id"), F.lit(True).alias("by_embedding")
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        ft = pool.submit(inheritable_thread_target(text_chain))
-        fs = pool.submit(inheritable_thread_target(emb_chain))
-        t, s = ft.result(), fs.result()
+    # prepared: the flagship's verified pairs are unique (a < b) rows
+    # projected off the checkpointed counts relation (r15).
+    groups = near_dup_groups(similar_pairs(docs, cfg), prepared=True)
+    t = groups.where(F.col("doc_id") != F.col("group_id")).select(
+        "doc_id", F.lit(True).alias("by_text")
+    )
+    s = semdedup_drop_ids(
+        emb,
+        threshold=threshold,
+        n_lists=n_lists,
+        lloyd_iters=lloyd_iters,
+        soft_assign=soft_assign,
+    ).select(F.col("vec_id").alias("doc_id"), F.lit(True).alias("by_embedding"))
     return t.join(s, "doc_id", "full").select(
         "doc_id",
         F.coalesce(F.col("by_text"), F.lit(False)).alias("by_text"),

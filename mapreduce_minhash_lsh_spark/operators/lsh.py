@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
-from mapreduce_minhash_lsh_spark.operators.minhash import minhash_signatures
 
 
 def band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
@@ -75,44 +74,16 @@ def compact_band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame
     )
 
 
-def xxhash_band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """``band_keys`` semantics with the key computed as ONE ``xxhash64``
-    over (band index, the band's r minhash longs) — the production band
-    strategy.
-
-    Versus :func:`compact_band_keys` this skips BOTH intermediate
-    representations: no comma-joined string is ever materialized (the r
-    longs are hashed directly, seeded by the band index so identical
-    value-slices in different bands cannot collide into one bucket) and
-    no cryptographic md5 runs per band row.  At N docs x b bands that
-    removes ~170 B of string building plus an md5 per row from the
-    widest relation the flagship shuffles.  Not oracle-replayable
-    (DuckDB has no xxhash64), so the md5 form stays the default for
-    checked queries; a 64-bit collision only ADDs a candidate pair,
-    which exact verification then scores — tests pin that the verified
-    output is identical to the md5 path.
-    """
-    r = cfg.rows_per_band
-    if "sig" in signatures.columns:
-        def cols(band: int) -> list:
-            return [F.col("sig")[band * r + i] for i in range(r)]
-    else:
-        def cols(band: int) -> list:
-            return [F.col(f"mh_{band * r + i}") for i in range(r)]
-    keys = F.array(*[
-        F.xxhash64(F.lit(band), *cols(band)) for band in range(cfg.num_bands)
-    ])
-    return signatures.select(
-        "doc_id", F.posexplode(keys).alias("band", "band_key")
-    )
-
-
 def bands_for(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """Dispatch on ``cfg.band_key_strategy``: 'md5' (engine-portable,
-    oracle-checkable — default) or 'xxhash' (cheapest; production)."""
-    if cfg.band_key_strategy == "xxhash":
-        return xxhash_band_keys(signatures, cfg)
-    return compact_band_keys(signatures, cfg)
+    """(doc_id, band, band_key) under ``cfg.band_key_strategy``: 'md5'
+    (engine-portable, oracle-checkable — default; the same keys as
+    :func:`compact_band_keys`) or 'xxhash' (one xxhash64 over the band
+    index and its r minhash longs — no string build, no md5; cheapest,
+    production).  A 64-bit collision only ADDs a candidate pair, which
+    exact verification then scores."""
+    return signatures.select(
+        "doc_id", F.posexplode(_key_array(signatures, cfg)).alias("band", "band_key")
+    )
 
 
 def _key_array(signatures: DataFrame, cfg: MinHashLSHConfig):
@@ -180,133 +151,36 @@ def _not_earlier(
     return F.expr("CASE " + " ".join(whens) + " END")
 
 
-def banded_pairs(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """Uncapped candidate pairs WITHOUT the global distinct: each pair is
-    emitted exactly once, by its LOWEST agreeing band.
+def _lowest_band_join(
+    cfg: MinHashLSHConfig,
+    rows_a: DataFrame,
+    rows_b: DataFrame | None = None,
+    on: tuple[str, ...] = ("band", "band_key"),
+    keys: str = "keys",
+    survs: bool = False,
+    claim=None,
+) -> DataFrame:
+    """Band rows -> (doc_id_a, doc_id_b), each pair kept only at its
+    lowest agreeing (with ``survs``: surviving) band.  Self-join keeps
+    doc_id_a < doc_id_b; with ``rows_b`` a-side ids stay in doc_id_a.
+    ``claim`` is an extra per-match filter ahead of that check."""
+    a = rows_a.alias("a")
+    b = (rows_a if rows_b is None else rows_b).alias("b")
+    ida, idb = F.col("a.doc_id"), F.col("b.doc_id")
+    pairs = a.join(b, list(on)).where(ida < idb if rows_b is None else ida != idb)
+    if claim is not None:
+        pairs = pairs.where(claim)
+    surv = "a.survs[{j}]" if survs else None
+    ne = _not_earlier(cfg, f"a.{keys}[{{j}}]", f"b.{keys}[{{j}}]", surv)
+    return pairs.where(ne).select(ida.alias("doc_id_a"), idb.alias("doc_id_b"))
 
-    The distinct-based form emits a pair once per agreeing band and
-    deduplicates with a ``.distinct()`` — for near-identical docs all b
-    bands agree, so the distinct shuffles ~b rows per true pair (the
-    widest shuffle of the flagship at the 10x probe).  Here each band
-    row carries the doc's full band-key vector (b longs — +~64 B on the
-    band relation, negligible), and after the equi-join a codegen'd
-    CASE-over-band filter keeps the match only if NO earlier band also
-    matched.  Two docs can match a given band in exactly one bucket
-    (the bucket IS their shared key), so "lowest agreeing band" is
-    unique — each pair survives exactly once and the distinct (a full
-    shuffle + hash-dedup of the pair fan-out) disappears.
 
-    Capped twin: :func:`banded_pairs_capped` (lowest SURVIVING band).
-    """
-    bands = signatures.select(
+def _band_rows(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
+    """(doc_id, keys, band, band_key): one row per band, each carrying
+    the doc's full band-key vector — computed map-side, no regroup."""
+    return signatures.select(
         "doc_id", _key_array(signatures, cfg).alias("keys")
     ).select("doc_id", "keys", F.posexplode("keys").alias("band", "band_key"))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .where(_not_earlier(cfg, "a.keys[{j}]", "b.keys[{j}]"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-    )
-
-
-def candidate_volume_bound(
-    rel: DataFrame,
-    cfg: MinHashLSHConfig,
-    rel_b: DataFrame | None = None,
-    bucket_cap: int | None = None,
-) -> int:
-    """Upper bound on the DISTINCT candidate pairs the band join over
-    ``rel`` (x ``rel_b`` cross-corpus) can emit — sum over (band,
-    bucket) of C(n, 2) (or n_a * n_b) — computed BEFORE any pair
-    exists: one partial-aggregated shuffle of (band_key, count) rows,
-    never the pairs themselves.  It is a bound, not an estimate:
-    lowest-band emission / the cross-corpus distinct only ever emit
-    FEWER distinct pairs than the per-band sum, so "bound <= budget"
-    proves the unbarriered verify join is safe.
-
-    This is the pair-volume valve's cheap trigger (VERDICT r9 #2): the
-    always-on persist+count of the full candidate list — a 12%
-    flagship premium at benign scale — is replaced by this scalar; the
-    exact count is paid only when the bound exceeds budget, i.e. when
-    chunking is already on the table.
-
-    ``bucket_cap`` mirrors ``oversize='drop'`` (a capped bucket emits
-    nothing).  Under 'split'/'auto' leave it None: splitting preserves
-    the bucket's pair set, so C(n, 2) still bounds it.
-    """
-    def _bands(r: DataFrame) -> DataFrame:
-        return r.select(
-            F.posexplode(_key_array(r, cfg)).alias("band", "band_key")
-        )
-
-    if rel_b is None:
-        sized = _bands(rel).groupBy("band", "band_key").agg(
-            F.count(F.lit(1)).alias("na")
-        )
-        contrib = F.expr("na * (na - 1) div 2")
-        fits = F.col("na") <= bucket_cap if bucket_cap is not None else None
-    else:
-        sized = (
-            _bands(rel).withColumn("side", F.lit(0))
-            .unionByName(_bands(rel_b).withColumn("side", F.lit(1)))
-            .groupBy("band", "band_key")
-            .agg(
-                F.count(F.when(F.col("side") == 0, 1)).alias("na"),
-                F.count(F.when(F.col("side") == 1, 1)).alias("nb"),
-            )
-        )
-        contrib = F.col("na") * F.col("nb")
-        fits = (
-            (F.col("na") <= bucket_cap) & (F.col("nb") <= bucket_cap)
-            if bucket_cap is not None else None
-        )
-    if fits is not None:
-        contrib = F.when(fits, contrib).otherwise(F.lit(0))
-    row = sized.agg(F.sum(contrib).alias("est")).first()
-    return int(row.est or 0)
-
-
-def _pairs_from(bands: DataFrame, keys: list[str]) -> DataFrame:
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, keys)
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-    )
-
-
-def banded_cross_pairs(
-    sig_a: DataFrame, sig_b: DataFrame, cfg: MinHashLSHConfig
-) -> DataFrame:
-    """Asymmetric (a-side vs b-side) candidate pairs with lowest-band
-    emission — the cross-corpus twin of :func:`banded_pairs`: each
-    (a, b) pair is emitted by its lowest agreeing band only, so no
-    global distinct over the band fan-out.  Returns (doc_id_a,
-    doc_id_b) with a-side ids always in doc_id_a.  Uncapped only, same
-    reasoning as banded_pairs."""
-    def _bands(sig: DataFrame, side: str) -> DataFrame:
-        return sig.select(
-            "doc_id", _key_array(sig, cfg).alias("keys")
-        ).select(
-            F.col("doc_id").alias(f"doc_id_{side}"),
-            F.col("keys").alias(f"keys_{side}"),
-            F.posexplode("keys").alias("band", "band_key"),
-        )
-
-    a, b = _bands(sig_a, "a"), _bands(sig_b, "b")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("doc_id_a") != F.col("doc_id_b"))
-        .where(_not_earlier(cfg, "keys_a[{j}]", "keys_b[{j}]"))
-        .select("doc_id_a", "doc_id_b")
-    )
 
 
 # Buckets above this many members go through the triangle split under
@@ -318,21 +192,42 @@ def banded_cross_pairs(
 AUTO_SPLIT_THRESHOLD = 2048
 
 
-def candidate_pairs(
-    bands: DataFrame,
+def banded_pairs(
+    signatures: DataFrame,
     cfg: MinHashLSHConfig,
+    sig_b: DataFrame | None = None,
     max_bucket_size: int | None = None,
     oversize: str = "drop",
     auto_split_threshold: int = AUTO_SPLIT_THRESHOLD,
 ) -> DataFrame:
-    """(doc_id, band, band_key) -> distinct (doc_id_a < doc_id_b) pairs.
+    """Signatures (array ``sig`` or wide ``mh_*`` form) -> distinct
+    candidate pairs (doc_id_a, doc_id_b) WITHOUT a global distinct: each
+    pair is emitted exactly once, by its LOWEST agreeing band (the one
+    LSH candidate generator; stored band rows take :func:`band_row_pairs`).
+
+    A distinct-based join emits a pair once per agreeing band and
+    deduplicates with a ``.distinct()`` — for near-identical docs all b
+    bands agree, so the distinct shuffles ~b rows per true pair (the
+    widest shuffle of the flagship at the 10x probe).  Here each band
+    row carries the doc's full band-key vector (b longs — +~64 B on the
+    band relation, negligible), and after the equi-join a codegen'd
+    CASE-over-band filter keeps the match only if NO earlier band also
+    matched.  Two docs can match a given band in exactly one bucket
+    (the bucket IS their shared key), so "lowest agreeing band" is
+    unique — each pair survives exactly once.
+
+    ``sig_b``: asymmetric cross-corpus join (a-side ids always in
+    doc_id_a), uncapped only.
 
     ``max_bucket_size`` bounds pathological buckets (near-identical
     boilerplate at web scale makes single buckets with 10^6 members ->
-    10^12 pairs).  Three policies:
+    10^12 pairs).  Three policies, each still emitting every pair once
+    by its lowest SURVIVING agreeing band:
 
     - ``oversize="drop"``: oversized buckets are discarded — trades
-      recall for survival.
+      recall for survival.  Pays one regroup of the docs x num_bands
+      relation for the per-doc survival vectors — bounded by corpus
+      size, never by pair volume.
     - ``oversize="split"``: full recall with the SAME per-task bound.
       Each oversized bucket's members are hashed into ``B = ceil(n /
       max_bucket_size)`` sub-blocks (xxhash64 — uniform regardless of id
@@ -355,69 +250,17 @@ def candidate_pairs(
       take the plain join, where AQE's skew handling is measured faster
       than paying the split's block replication.
 
-    Since round 5 every capped mode emits each pair EXACTLY ONCE — by
-    its lowest agreeing band whose bucket survived the cap — so the
-    global pair ``.distinct()`` (the widest shuffle of the capped
-    pipeline: ~num_bands rows per true pair) is gone from the
-    production path too, matching :func:`banded_pairs`.  The price is
-    one groupBy(doc_id) over the docs x num_bands band relation to
-    rebuild each doc's per-band (key, survival) vectors — bounded by
-    corpus size, never by pair volume.  Prefer
-    :func:`banded_pairs_capped` when signatures are at hand: it skips
-    that regroup entirely for the full-recall modes.
-
     AQE skew-join handles moderate skew below the cap in all modes.
     """
-    if max_bucket_size is None:
-        return _pairs_from(bands, ["band", "band_key"]).distinct()
-    _check_oversize(oversize)
-    docvec = bands.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("band", "band_key"))),
-            lambda s: s["band_key"],
-        ).alias("keys")
-    )
-    return _capped_pairs(docvec, cfg, max_bucket_size, oversize, auto_split_threshold)
-
-
-def banded_pairs_capped(
-    signatures: DataFrame,
-    cfg: MinHashLSHConfig,
-    max_bucket_size: int,
-    oversize: str = "drop",
-    auto_split_threshold: int = AUTO_SPLIT_THRESHOLD,
-) -> DataFrame:
-    """Capped candidate pairs straight from signatures — the production
-    entry: the per-doc band-key vector is computed MAP-SIDE from the
-    signature (no regroup), so the full-recall modes ('split'/'auto')
-    add zero shuffles over the uncapped :func:`banded_pairs` beyond the
-    bucket-size aggregate, and 'drop' pays only the docs x num_bands
-    survival regroup.  Policies and exactly-once emission as documented
-    on :func:`candidate_pairs`."""
-    _check_oversize(oversize)
-    docvec = signatures.select(
-        "doc_id", _key_array(signatures, cfg).alias("keys")
-    )
-    return _capped_pairs(docvec, cfg, max_bucket_size, oversize, auto_split_threshold)
-
-
-def _check_oversize(oversize: str) -> None:
     if oversize not in ("drop", "split", "auto"):
         raise ValueError("oversize must be 'drop', 'split' or 'auto'")
-
-
-def _capped_pairs(
-    docvec: DataFrame,
-    cfg: MinHashLSHConfig,
-    max_bucket_size: int,
-    oversize: str,
-    auto_split_threshold: int,
-) -> DataFrame:
-    """(doc_id, keys: array<long>) -> capped candidate pairs, each pair
-    emitted exactly once by its lowest surviving agreeing band."""
-    rows = docvec.select(
-        "doc_id", "keys", F.posexplode("keys").alias("band", "band_key")
-    )
+    rows = _band_rows(signatures, cfg)
+    if sig_b is not None:
+        if max_bucket_size is not None:
+            raise ValueError("capped cross-corpus pairs: use band_row_pairs")
+        return _lowest_band_join(cfg, rows, _band_rows(sig_b, cfg))
+    if max_bucket_size is None:
+        return _lowest_band_join(cfg, rows)
     sized = rows.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
     rows = rows.join(sized, ["band", "band_key"])
 
@@ -448,20 +291,7 @@ def _capped_pairs(
             )
             .where(F.element_at("survs", F.col("band") + 1))
         )
-        a, b = surv_rows.alias("a"), surv_rows.alias("b")
-        return (
-            a.join(b, ["band", "band_key"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .where(
-                _not_earlier(
-                    cfg, "a.keys[{j}]", "b.keys[{j}]", "a.survs[{j}]"
-                )
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_id_a"),
-                F.col("b.doc_id").alias("doc_id_b"),
-            )
-        )
+        return _lowest_band_join(cfg, surv_rows, survs=True)
 
     # Full-recall modes: every bucket emits (plain join below the split
     # threshold, triangle decomposition above), so survival is vacuous
@@ -471,18 +301,7 @@ def _capped_pairs(
         if oversize == "split"
         else max(max_bucket_size, auto_split_threshold)
     )
-    ne = _not_earlier(cfg, "a.keys[{j}]", "b.keys[{j}]")
-    small_rows = rows.where(F.col("_n") <= thr).drop("_n")
-    a, b = small_rows.alias("a"), small_rows.alias("b")
-    small = (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .where(ne)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-    )
+    small = _lowest_band_join(cfg, rows.where(F.col("_n") <= thr).drop("_n"))
     # The lowest-band filter only inspects keys at bands EARLIER than
     # the row's own band, so the ~nblk-fold triangle-split replication
     # carries the prefix slice keys[0..band-1] (avg num_bands/2 longs,
@@ -493,7 +312,6 @@ def _capped_pairs(
     # ~n^2/2 rows, vs n^2/cap replica rows here — twice, strictly more
     # bytes whenever cap >> num_bands/2.)
     nblk = F.ceil(F.col("_n") / F.lit(max_bucket_size)).cast("int")
-    ne_prefix = _not_earlier(cfg, "a.pkeys[{j}]", "b.pkeys[{j}]")
     big_rows = (
         rows.where(F.col("_n") > thr)
         .select(
@@ -513,38 +331,94 @@ def _capped_pairs(
             F.greatest("blk", "h").alias("gj"),
         )
     )
-    a, b = big_rows.alias("a"), big_rows.alias("b")
-    big_pairs = (
-        a.join(b, ["band", "band_key", "gi", "gj"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+    big = _lowest_band_join(
+        cfg, big_rows, on=("band", "band_key", "gi", "gj"), keys="pkeys",
         # exactly-once claim within the bucket: diagonal groups own
         # intra-block pairs, off-diagonal groups own cross-block pairs
-        .where(
-            F.when(F.col("gi") == F.col("gj"), F.col("a.blk") == F.col("b.blk"))
-            .otherwise(F.col("a.blk") != F.col("b.blk"))
-        )
-        .where(ne_prefix)
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
+        claim=F.when(
+            F.col("gi") == F.col("gj"), F.col("a.blk") == F.col("b.blk")
+        ).otherwise(F.col("a.blk") != F.col("b.blk")),
     )
-    return small.unionByName(big_pairs)
+    return small.unionByName(big)
 
 
-def lsh_candidates(
-    doc_shingles: DataFrame,
-    cfg: MinHashLSHConfig,
-    max_bucket_size: int | None = None,
-    oversize: str = "drop",
-    auto_split_threshold: int = AUTO_SPLIT_THRESHOLD,
+def band_row_pairs(
+    bands_a: DataFrame, bands_b: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
-    """(doc_id, shingle) -> candidate pairs, end to end.  Signatures are
-    at hand here, so the capped modes take the regroup-free
-    :func:`banded_pairs_capped` production path."""
-    sig = minhash_signatures(doc_shingles, cfg)
-    if max_bucket_size is None:
-        return candidate_pairs(bands_for(sig, cfg), cfg)
-    return banded_pairs_capped(
-        sig, cfg, max_bucket_size, oversize, auto_split_threshold
+    """Cross-corpus candidates from two (doc_id, band, band_key) band
+    relations — the form a band store persists, with no per-doc key
+    vector for lowest-band emission, so pairs end in a distinct.
+    ``max_bucket_size`` caps each side's bucket independently (a
+    boilerplate clique on either side makes the bucket join
+    quadratic); a bucket over the cap on either side emits nothing."""
+    def _cap(b: DataFrame) -> DataFrame:
+        if max_bucket_size is None:
+            return b
+        sized = b.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
+        return b.join(
+            sized.where(F.col("_n") <= max_bucket_size), ["band", "band_key"]
+        ).drop("_n")
+
+    return (
+        _cap(bands_a)
+        .withColumnRenamed("doc_id", "doc_id_a")
+        .join(
+            _cap(bands_b).withColumnRenamed("doc_id", "doc_id_b"),
+            ["band", "band_key"],
+        )
+        .where(F.col("doc_id_a") != F.col("doc_id_b"))
+        .select("doc_id_a", "doc_id_b")
+        .distinct()
     )
+
+
+def candidate_volume_bound(
+    rel: DataFrame,
+    cfg: MinHashLSHConfig,
+    rel_b: DataFrame | None = None,
+    bucket_cap: int | None = None,
+) -> int:
+    """Upper bound on the DISTINCT candidate pairs the band join over
+    ``rel`` (x ``rel_b`` cross-corpus) can emit — sum over (band,
+    bucket) of C(n, 2) (or n_a * n_b) — computed BEFORE any pair
+    exists: one partial-aggregated shuffle of (band_key, count) rows,
+    never the pairs themselves.  It is a bound, not an estimate:
+    lowest-band emission / the cross-corpus distinct only ever emit
+    FEWER distinct pairs than the per-band sum, so "bound <= budget"
+    proves the unbarriered verify join is safe.
+
+    This is the pair-volume valve's cheap trigger (VERDICT r9 #2): the
+    always-on persist+count of the full candidate list — a 12%
+    flagship premium at benign scale — is replaced by this scalar; the
+    exact count is paid only when the bound exceeds budget, i.e. when
+    chunking is already on the table.
+
+    ``bucket_cap`` mirrors ``oversize='drop'`` (a capped bucket emits
+    nothing).  Under 'split'/'auto' leave it None: splitting preserves
+    the bucket's pair set, so C(n, 2) still bounds it.
+    """
+    if rel_b is None:
+        sized = bands_for(rel, cfg).groupBy("band", "band_key").agg(
+            F.count(F.lit(1)).alias("na")
+        )
+        contrib = F.expr("na * (na - 1) div 2")
+        fits = F.col("na") <= bucket_cap if bucket_cap is not None else None
+    else:
+        sized = (
+            bands_for(rel, cfg).withColumn("side", F.lit(0))
+            .unionByName(bands_for(rel_b, cfg).withColumn("side", F.lit(1)))
+            .groupBy("band", "band_key")
+            .agg(
+                F.count(F.when(F.col("side") == 0, 1)).alias("na"),
+                F.count(F.when(F.col("side") == 1, 1)).alias("nb"),
+            )
+        )
+        contrib = F.col("na") * F.col("nb")
+        fits = (
+            (F.col("na") <= bucket_cap) & (F.col("nb") <= bucket_cap)
+            if bucket_cap is not None else None
+        )
+    if fits is not None:
+        contrib = F.when(fits, contrib).otherwise(F.lit(0))
+    row = sized.agg(F.sum(contrib).alias("est")).first()
+    return int(row.est or 0)

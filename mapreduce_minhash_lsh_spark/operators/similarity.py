@@ -21,8 +21,9 @@ from pyspark.sql import functions as F
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.lsh import (
+    AUTO_SPLIT_THRESHOLD,
+    band_row_pairs,
     banded_pairs,
-    banded_pairs_capped,
     bands_for,
     candidate_volume_bound,
 )
@@ -52,18 +53,6 @@ _CKPT_DIR_SET: dict[str, str] = {}
 # budget can be raised (or set to None to disable the valve and its
 # candidate-count materialization entirely).
 PAIR_VERIFY_BUDGET = 12_000_000
-
-# A/B toggle for the valve's payload pre-partition (experiments/
-# scale_probe.py --prepart-ab): production always leaves this True; at
-# runtime it composes with the n_chunks <= 4 depth gate in
-# budgeted_overlap_counts — shallow chunk runs reuse one cached
-# hash-partitioned payload relation, deep runs rely on per-chunk
-# exchange reuse (the cache measured 2.8x AGAINST at 160x/12 chunks,
-# results_r10.json prepart_ab_160).  The flag exists so that effect
-# stays a same-session interleaved measurement (VERDICT r9 #3), not a
-# cross-session extrapolation.  Values: True (production — depth gate
-# applies), "force" (A/B: always pre-partition), False (never).
-_VALVE_PREPARTITION = True
 
 
 def _reset_stats(df: DataFrame) -> DataFrame:
@@ -542,16 +531,13 @@ def budgeted_overlap_counts(
             # platforms may set the conf to a non-integer ("auto");
             # don't let the valve die exactly when it's needed
             n_part = spark.sparkContext.defaultParallelism
-        prepart = (_VALVE_PREPARTITION == "force") or (
-            _VALVE_PREPARTITION is True and n_chunks <= 4
-        )
-        if prepart:
+        if n_chunks <= 4:
             rel_p = rel.repartition(n_part, "doc_id").persist()
             rel_b_p = (
                 rel_b.repartition(n_part, "doc_id").persist()
                 if rel_b is not None else None
             )
-        else:  # A/B baseline only (see _VALVE_PREPARTITION)
+        else:
             rel_p, rel_b_p = rel, rel_b
         try:
             outs = []
@@ -585,6 +571,50 @@ def budgeted_overlap_counts(
         # result (fused_overlap_counts ends in _materialize), so the
         # candidate cache is dead weight by now.
         pairs.unpersist()
+
+
+def _banded_overlap_counts(
+    rel: DataFrame,
+    cfg: MinHashLSHConfig,
+    threshold: float,
+    checkpoint_dir: str | None,
+    pair_budget: int | None,
+    max_bucket_size: int | None,
+    oversize: str,
+    auto_split_threshold: int | None,
+    rel_b: DataFrame | None = None,
+) -> DataFrame:
+    """LSH candidates over ``rel`` (x ``rel_b`` cross-corpus) ->
+    (doc_id_a, doc_id_b, nc, na, nb) through the pair-volume valve with
+    its tiered trigger: C(n_docs, 2) (n_a * n_b cross-corpus) from
+    counts that, on a lazily checkpointed ``rel``, ARE its materializing
+    action and run before anything else reads it; then the per-bucket
+    volume bound (one small agg, only past tier 1); then, inside
+    budgeted_overlap_counts, the exact candidate count."""
+    if auto_split_threshold is None:
+        auto_split_threshold = AUTO_SPLIT_THRESHOLD
+    if rel_b is not None and max_bucket_size is not None:
+        cands = band_row_pairs(
+            bands_for(rel, cfg), bands_for(rel_b, cfg), max_bucket_size
+        )
+    else:
+        cands = banded_pairs(
+            rel, cfg, rel_b, max_bucket_size, oversize, auto_split_threshold
+        )
+    est = None
+    if pair_budget is not None:
+        if rel_b is None:
+            n_docs = rel.count()
+            est = n_docs * (n_docs - 1) // 2
+        else:
+            est = rel.count() * rel_b.count()
+        if est > 2 * pair_budget:
+            cap = max_bucket_size if oversize == "drop" else None
+            est = candidate_volume_bound(rel, cfg, rel_b=rel_b, bucket_cap=cap)
+    return budgeted_overlap_counts(
+        cands, rel, cfg, threshold, checkpoint_dir, rel_b=rel_b,
+        pair_budget=pair_budget, est_volume=est,
+    )
 
 
 def similar_pairs(
@@ -665,27 +695,9 @@ def similar_pairs_from_shingles(
     rel = signature_set_relation(
         doc_shingles, cfg, checkpoint_dir, eager=pair_budget is None
     )
-    if max_bucket_size is None:
-        cands = banded_pairs(rel, cfg)
-    else:
-        kw = {}
-        if auto_split_threshold is not None:
-            kw["auto_split_threshold"] = auto_split_threshold
-        cands = banded_pairs_capped(rel, cfg, max_bucket_size, oversize, **kw)
-    est = None
-    if pair_budget is not None:
-        # Tier 1 (free): the count IS the lazy checkpoint's
-        # materializing action — the same job an eager checkpoint runs
-        # internally — and C(n_docs, 2) already bounds distinct pairs.
-        # Tier 2 (one small agg, only past tier 1): per-bucket bound.
-        n_docs = rel.count()
-        est = n_docs * (n_docs - 1) // 2
-        if est > 2 * pair_budget:
-            cap = max_bucket_size if oversize == "drop" else None
-            est = candidate_volume_bound(rel, cfg, bucket_cap=cap)
-    counts = budgeted_overlap_counts(
-        cands, rel, cfg, threshold, checkpoint_dir, pair_budget=pair_budget,
-        est_volume=est,
+    counts = _banded_overlap_counts(
+        rel, cfg, threshold, checkpoint_dir, pair_budget, max_bucket_size,
+        oversize, auto_split_threshold,
     )
     return (
         counts.where(F.col("nc") > 0)
@@ -789,8 +801,6 @@ def cross_corpus_pairs(
     boilerplate clique on either side makes the bucket join quadratic).
     """
     threshold = cfg.threshold if threshold is None else threshold
-    from mapreduce_minhash_lsh_spark.operators.lsh import banded_cross_pairs
-
     if check_disjoint:
         overlap = new_docs.select("doc_id").join(
             seen_docs.select("doc_id"), "doc_id", "left_semi"
@@ -815,41 +825,11 @@ def cross_corpus_pairs(
     new_ids = new_docs.select("doc_id")
     rel_new = rel_all.join(new_ids, "doc_id", "left_semi")
     rel_seen = rel_all.join(new_ids, "doc_id", "left_anti")
-
-    if max_bucket_size is None:
-        cands = banded_cross_pairs(rel_new, rel_seen, cfg)
-    else:
-        def _bands(rel: DataFrame) -> DataFrame:
-            b = bands_for(rel, cfg)
-            sized = b.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
-            return b.join(
-                sized.where(F.col("_n") <= max_bucket_size), ["band", "band_key"]
-            ).drop("_n")
-        cands = (
-            _bands(rel_new)
-            .withColumnRenamed("doc_id", "doc_id_a")
-            .join(
-                _bands(rel_seen).withColumnRenamed("doc_id", "doc_id_b"),
-                ["band", "band_key"],
-            )
-            .where(F.col("doc_id_a") != F.col("doc_id_b"))
-            .select("doc_id_a", "doc_id_b")
-            .distinct()
-        )
-    est = None
-    if pair_budget is not None:
-        # tiered trigger, cross-corpus form: n_new x n_seen bounds the
-        # distinct cross pairs; the two counts are cheap scans of the
-        # (eagerly materialized, multi-consumer) rel_all cache
-        n_new, n_seen = rel_new.count(), rel_seen.count()
-        est = n_new * n_seen
-        if est > 2 * pair_budget:
-            est = candidate_volume_bound(
-                rel_new, cfg, rel_b=rel_seen, bucket_cap=max_bucket_size
-            )
-    counts = budgeted_overlap_counts(
-        cands, rel_new, cfg, threshold, checkpoint_dir, rel_b=rel_seen,
-        pair_budget=pair_budget, est_volume=est,
+    # the tier-1 counts are cheap scans of the (eagerly materialized,
+    # multi-consumer) rel_all cache
+    counts = _banded_overlap_counts(
+        rel_new, cfg, threshold, checkpoint_dir, pair_budget, max_bucket_size,
+        "drop", None, rel_b=rel_seen,
     )
     return (
         counts.where(F.col("nc") > 0)
@@ -904,21 +884,9 @@ def containment_pairs(
         explode_shingles(docs, cfg.k), cfg, checkpoint_dir,
         eager=pair_budget is None,
     )
-    if max_bucket_size is None:
-        cands = banded_pairs(rel, cfg)
-    else:
-        cands = banded_pairs_capped(rel, cfg, max_bucket_size, oversize)
-    est = None
-    if pair_budget is not None:
-        # same tiered trigger as similar_pairs_from_shingles
-        n_docs = rel.count()
-        est = n_docs * (n_docs - 1) // 2
-        if est > 2 * pair_budget:
-            cap = max_bucket_size if oversize == "drop" else None
-            est = candidate_volume_bound(rel, cfg, bucket_cap=cap)
-    counts = budgeted_overlap_counts(
-        cands, rel, cfg, cfg.threshold, checkpoint_dir, pair_budget=pair_budget,
-        est_volume=est,
+    counts = _banded_overlap_counts(
+        rel, cfg, cfg.threshold, checkpoint_dir, pair_budget, max_bucket_size,
+        oversize, None,
     )
     return (
         counts.where(F.col("nc") >= 0)

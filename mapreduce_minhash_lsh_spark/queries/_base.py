@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.operators.lsh import (
     band_keys,
-    candidate_pairs,
-    compact_band_keys,
+    banded_pairs,
 )
 from mapreduce_minhash_lsh_spark.operators.minhash import (
     minhash_signatures,

@@ -10,8 +10,7 @@ from mapreduce_minhash_lsh_spark.queries._base import (  # noqa: F401
     _CFG,
     _K,
     _PIPELINE_CTES,
-    candidate_pairs,
-    compact_band_keys,
+    banded_pairs,
     explode_shingles,
     load_table,
     register,
@@ -1305,11 +1304,16 @@ def q_edit_distance_pairs(spark, sf):
         signature_prefilter,
     )
 
-    sig = _materialize(minhash_signatures_array(sh, _CFG), None)
-    cands = candidate_pairs(compact_band_keys(sig, _CFG), _CFG)
-    cands = _materialize(
-        signature_prefilter(cands, sig, _CFG, _CFG.threshold), None
-    )
+    try:
+        sig = _materialize(minhash_signatures_array(sh, _CFG), None)
+        cands = _materialize(
+            signature_prefilter(banded_pairs(sig, _CFG), sig, _CFG, _CFG.threshold),
+            None,
+        )
+    finally:
+        # sig and cands are eagerly materialized above, so nothing reads
+        # the shingle cache after this point
+        sh.unpersist()
     ta = docs.select(F.col("doc_id").alias("doc_id_a"), F.col("text").alias("_ta"))
     tb = docs.select(F.col("doc_id").alias("doc_id_b"), F.col("text").alias("_tb"))
     return (

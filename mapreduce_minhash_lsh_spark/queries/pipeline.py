@@ -26,8 +26,7 @@ from mapreduce_minhash_lsh_spark.queries._base import (  # noqa: F401
     _md5_parse_sql,
     _min_agree,
     band_keys,
-    candidate_pairs,
-    compact_band_keys,
+    banded_pairs,
     cross_corpus_pairs,
     explode_shingles,
     load_table,
@@ -116,7 +115,7 @@ def q_candidate_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """J1/F2: band-bucket equi-self-join candidates (MinHashLSH.java:168-193
     rebuilt as a join, not a single quadratic reducer)."""
     sh = explode_shingles(load_table(spark, sf, "documents"), _CFG.k)
-    return candidate_pairs(compact_band_keys(minhash_signatures(sh, _CFG), _CFG), _CFG)
+    return banded_pairs(minhash_signatures(sh, _CFG), _CFG)
 
 
 @register(
@@ -125,16 +124,13 @@ def q_candidate_pairs(spark: SparkSession, sf: str) -> DataFrame:
     "SELECT doc_id_a, doc_id_b FROM cand",
 )
 def q_candidate_pairs_split(spark: SparkSession, sf: str) -> DataFrame:
-    """Hot-bucket triangle-split candidates (lsh.py:candidate_pairs
+    """Hot-bucket triangle-split candidates (lsh.py:banded_pairs
     oversize='split'): a tiny cap forces most buckets through the split
     path, and the oracle is the UNCAPPED candidate SQL — split mode is
     full-recall by construction, and this proves it on the real corpus."""
     sh = explode_shingles(load_table(spark, sf, "documents"), _CFG.k)
-    return candidate_pairs(
-        compact_band_keys(minhash_signatures(sh, _CFG), _CFG),
-        _CFG,
-        max_bucket_size=3,
-        oversize="split",
+    return banded_pairs(
+        minhash_signatures(sh, _CFG), _CFG, max_bucket_size=3, oversize="split"
     )
 
 

@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import GOLDEN, MinHashLSHConfig
-from mapreduce_minhash_lsh_spark.operators.lsh import band_keys, lsh_candidates
+from mapreduce_minhash_lsh_spark.operators.lsh import (
+    band_keys,
+    banded_pairs,
+    bands_for,
+)
 from mapreduce_minhash_lsh_spark.operators.minhash import minhash_signatures
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
@@ -133,11 +137,22 @@ def test_signature_and_band_shapes(spark, golden_docs):
     assert bands.select("band").distinct().count() == 4
 
 
+def _distinct_band_pairs(bands):
+    """Reference candidate set: the distinct band-bucket self-join."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return sorted(map(tuple, (
+        a.join(b, ["band", "band_key"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id"), F.col("b.doc_id"))
+        .distinct().collect()
+    )))
+
+
 def test_determinism_same_seed(spark, golden_docs):
     cfg = MinHashLSHConfig(num_hashes=16, num_bands=8, seed=7)
-    sh = explode_shingles(golden_docs, cfg.k)
-    a = sorted(map(tuple, lsh_candidates(sh, cfg).collect()))
-    b = sorted(map(tuple, lsh_candidates(sh, cfg).collect()))
+    sig = minhash_signatures(explode_shingles(golden_docs, cfg.k), cfg)
+    a = sorted(map(tuple, banded_pairs(sig, cfg).collect()))
+    b = sorted(map(tuple, banded_pairs(sig, cfg).collect()))
     assert a == b
 
 
@@ -158,10 +173,10 @@ def test_max_bucket_size_caps_hot_buckets(spark):
         [(i, "identical boilerplate text") for i in range(100)], ["doc_id", "text"]
     )
     cfg = MinHashLSHConfig(num_hashes=4, num_bands=2)
-    sh = explode_shingles(docs, cfg.k)
-    uncapped = lsh_candidates(sh, cfg)
+    sig = minhash_signatures(explode_shingles(docs, cfg.k), cfg)
+    uncapped = banded_pairs(sig, cfg)
     assert uncapped.count() == 100 * 99 // 2
-    capped = lsh_candidates(sh, cfg, max_bucket_size=10)
+    capped = banded_pairs(sig, cfg, max_bucket_size=10)
     assert capped.count() == 0
 
 
@@ -181,16 +196,16 @@ def test_oversize_split_keeps_full_recall(spark):
         rows.append((1000 + i, " ".join(rng.choice(words) for _ in range(12))))
     cfg = MinHashLSHConfig(num_hashes=8, num_bands=4)
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sh = explode_shingles(docs, cfg.k)
-    uncapped = sorted(map(tuple, lsh_candidates(sh, cfg).collect()))
+    sig = minhash_signatures(explode_shingles(docs, cfg.k), cfg)
+    uncapped = sorted(map(tuple, banded_pairs(sig, cfg).collect()))
     assert len(uncapped) >= 120 * 119 // 2
     for cap in (7, 10, 50):
         split = sorted(
-            map(tuple, lsh_candidates(sh, cfg, max_bucket_size=cap,
-                                      oversize="split").collect())
+            map(tuple, banded_pairs(sig, cfg, max_bucket_size=cap,
+                                    oversize="split").collect())
         )
         assert split == uncapped, f"cap={cap}"
-    dropped = lsh_candidates(sh, cfg, max_bucket_size=10, oversize="drop")
+    dropped = banded_pairs(sig, cfg, max_bucket_size=10, oversize="drop")
     assert dropped.count() < len(uncapped)
 
 
@@ -204,18 +219,10 @@ def test_capped_modes_exactly_once_and_equivalent(spark):
       (distinct pairs from surviving buckets) — including pairs whose
       lowest AGREEING band was dropped but a later band survives;
     * 'split' and 'auto' (both triangle-forced and plain-forced)
-      set-equal to the uncapped candidate set (full recall);
-    * the bands-relation API (candidate_pairs) matches the
-      signature-relation API (banded_pairs_capped).
+      set-equal to the uncapped candidate set (full recall).
     """
     import random
 
-    from mapreduce_minhash_lsh_spark.operators.lsh import (
-        _pairs_from,
-        banded_pairs_capped,
-        bands_for,
-        candidate_pairs,
-    )
     from mapreduce_minhash_lsh_spark.operators.minhash import (
         minhash_signatures_array,
     )
@@ -240,29 +247,28 @@ def test_capped_modes_exactly_once_and_equivalent(spark):
     sh = explode_shingles(docs, cfg.k)
     sig = minhash_signatures_array(sh, cfg)
     bands = bands_for(sig, cfg).localCheckpoint()
-    uncapped = sorted(
-        map(tuple, _pairs_from(bands, ["band", "band_key"]).distinct().collect())
-    )
+    uncapped = _distinct_band_pairs(bands)
     sized = bands.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
     for cap in (5, 9, 26):
-        ref_drop = sorted(map(tuple, _pairs_from(
+        ref_drop = _distinct_band_pairs(
             bands.join(
                 sized.where(F.col("_n") <= cap), ["band", "band_key"]
-            ).drop("_n"),
-            ["band", "band_key"],
-        ).distinct().collect()))
-        for got_df in (
-            candidate_pairs(bands, cfg, cap, "drop"),
-            banded_pairs_capped(sig, cfg, cap, "drop"),
-        ):
-            got = [tuple(r) for r in got_df.collect()]
-            assert len(got) == len(set(got)), f"duplicates: drop cap={cap}"
-            assert sorted(got) == ref_drop, f"drop cap={cap}"
+            ).drop("_n")
+        )
+        got = [
+            tuple(r)
+            for r in banded_pairs(
+                sig, cfg, max_bucket_size=cap, oversize="drop"
+            ).collect()
+        ]
+        assert len(got) == len(set(got)), f"duplicates: drop cap={cap}"
+        assert sorted(got) == ref_drop, f"drop cap={cap}"
         for mode, thr in (("split", 2048), ("auto", 6), ("auto", 10**6)):
             got = [
                 tuple(r)
-                for r in banded_pairs_capped(
-                    sig, cfg, cap, mode, auto_split_threshold=thr
+                for r in banded_pairs(
+                    sig, cfg, max_bucket_size=cap, oversize=mode,
+                    auto_split_threshold=thr,
                 ).collect()
             ]
             assert len(got) == len(set(got)), f"duplicates: {mode} cap={cap} thr={thr}"
@@ -294,7 +300,6 @@ def test_xxhash_band_strategy_identical_output(spark, golden_docs):
     that exact verification then scores."""
     import dataclasses
 
-    from mapreduce_minhash_lsh_spark.operators.lsh import bands_for, candidate_pairs
     from mapreduce_minhash_lsh_spark.operators.minhash import (
         minhash_signatures_array,
     )
@@ -302,13 +307,10 @@ def test_xxhash_band_strategy_identical_output(spark, golden_docs):
     xx = dataclasses.replace(GOLDEN, band_key_strategy="xxhash")
     sh = explode_shingles(golden_docs, GOLDEN.k)
     sig = minhash_signatures_array(sh, GOLDEN)
-    cands_md5 = sorted(
-        map(tuple, candidate_pairs(bands_for(sig, GOLDEN), GOLDEN).collect())
-    )
-    cands_xx = sorted(
-        map(tuple, candidate_pairs(bands_for(sig, xx), xx).collect())
-    )
+    cands_md5 = _distinct_band_pairs(bands_for(sig, GOLDEN))
+    cands_xx = _distinct_band_pairs(bands_for(sig, xx))
     assert cands_xx == cands_md5
+    assert sorted(map(tuple, banded_pairs(sig, xx).collect())) == cands_md5
 
     key = lambda r: (r.doc_id_a, r.doc_id_b)
     want = sorted(similar_pairs(golden_docs, GOLDEN).collect(), key=key)
@@ -318,17 +320,17 @@ def test_xxhash_band_strategy_identical_output(spark, golden_docs):
 
 
 def test_xxhash_band_strategy_wide_and_array_forms_agree(spark, golden_docs):
-    """xxhash_band_keys must hash identical values whether the signature
-    arrives in array form (sig) or wide form (mh_0..mh_{n-1})."""
-    from mapreduce_minhash_lsh_spark.operators.lsh import xxhash_band_keys
+    """xxhash band keys (bands_for under band_key_strategy='xxhash')
+    must hash identical values whether the signature arrives in array
+    form (sig) or wide form (mh_0..mh_{n-1})."""
     from mapreduce_minhash_lsh_spark.operators.minhash import (
         minhash_signatures_array,
     )
 
-    cfg = MinHashLSHConfig(num_hashes=8, num_bands=4)
+    cfg = MinHashLSHConfig(num_hashes=8, num_bands=4, band_key_strategy="xxhash")
     sh = explode_shingles(golden_docs, cfg.k)
-    wide = xxhash_band_keys(minhash_signatures(sh, cfg), cfg)
-    arr = xxhash_band_keys(minhash_signatures_array(sh, cfg), cfg)
+    wide = bands_for(minhash_signatures(sh, cfg), cfg)
+    arr = bands_for(minhash_signatures_array(sh, cfg), cfg)
     assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, arr.collect()))
 
 
@@ -444,11 +446,6 @@ def test_banded_pairs_equals_distinct_candidates_random(spark):
     import dataclasses
     import random
 
-    from mapreduce_minhash_lsh_spark.operators.lsh import (
-        banded_pairs,
-        bands_for,
-        candidate_pairs,
-    )
     from mapreduce_minhash_lsh_spark.operators.similarity import (
         signature_set_relation,
     )
@@ -472,9 +469,7 @@ def test_banded_pairs_equals_distinct_candidates_random(spark):
                 sig_strategy=sig_strategy,
             )
             rel = signature_set_relation(explode_shingles(docs, cfg.k), cfg)
-            via_distinct = sorted(
-                map(tuple, candidate_pairs(bands_for(rel, cfg), cfg).collect())
-            )
+            via_distinct = _distinct_band_pairs(bands_for(rel, cfg))
             via_lowest = sorted(map(tuple, banded_pairs(rel, cfg).collect()))
             assert via_lowest == via_distinct, (band_strategy, sig_strategy)
             # exactly-once: no duplicates even BEFORE any dedup
@@ -486,10 +481,6 @@ def test_banded_cross_pairs_equals_distinct_cross_random(spark):
     band join on a random split of the same corpus."""
     import random
 
-    from mapreduce_minhash_lsh_spark.operators.lsh import (
-        banded_cross_pairs,
-        bands_for,
-    )
     from mapreduce_minhash_lsh_spark.operators.similarity import (
         signature_set_relation,
     )
@@ -507,7 +498,7 @@ def test_banded_cross_pairs_equals_distinct_cross_random(spark):
     seen = docs.where(F.col("doc_id") % 2 == 1)
     rel_new = signature_set_relation(explode_shingles(new, cfg.k), cfg)
     rel_seen = signature_set_relation(explode_shingles(seen, cfg.k), cfg)
-    got = sorted(map(tuple, banded_cross_pairs(rel_new, rel_seen, cfg).collect()))
+    got = sorted(map(tuple, banded_pairs(rel_new, cfg, sig_b=rel_seen).collect()))
     want = sorted(map(tuple, (
         bands_for(rel_new, cfg).withColumnRenamed("doc_id", "doc_id_a")
         .join(
@@ -561,13 +552,18 @@ def test_flagship_partition_invariance(spark):
 
 
 def test_candidate_pairs_rejects_unknown_oversize(spark):
+    """banded_pairs rejects an unknown oversize policy (capped or not)
+    and a cap on the cross-corpus join (capped cross pairs take
+    band_row_pairs, which caps each side separately)."""
     docs = spark.createDataFrame([(0, "a b c")], ["doc_id", "text"])
     cfg = MinHashLSHConfig(num_hashes=4, num_bands=2)
+    sig = minhash_signatures(explode_shingles(docs, cfg.k), cfg)
     with pytest.raises(ValueError):
-        lsh_candidates(
-            explode_shingles(docs, cfg.k), cfg, max_bucket_size=5,
-            oversize="truncate",
-        ).count()
+        banded_pairs(sig, cfg, max_bucket_size=5, oversize="truncate")
+    with pytest.raises(ValueError):
+        banded_pairs(sig, cfg, oversize="truncate")
+    with pytest.raises(ValueError):
+        banded_pairs(sig, cfg, sig_b=sig, max_bucket_size=5)
 
 
 def test_golden_csv_artifact_matches_reference(spark, tmp_path):
@@ -630,6 +626,93 @@ def test_band_store_matches_recomputing_cross_corpus(spark, golden_docs, tmp_pat
     assert {(r.new_id, r.seen_id) for r in self_hits} >= {
         (r.new_id, r.seen_id) for r in want
     }
+
+
+def test_capped_cross_corpus_equals_store_and_reference(spark, tmp_path):
+    """With ``max_bucket_size`` the recomputing cross-corpus join and the
+    store-backed one must give the same verified pairs, and both must
+    equal a reference built from per-side-capped distinct band joins: a
+    bucket over the cap on EITHER side emits nothing."""
+    import random
+
+    from mapreduce_minhash_lsh_spark.operators.bandstore import (
+        build_band_store,
+        cross_pairs_against_store,
+    )
+    from mapreduce_minhash_lsh_spark.operators.minhash import (
+        minhash_signatures_array,
+    )
+    from mapreduce_minhash_lsh_spark.operators.similarity import (
+        signature_prefilter,
+    )
+
+    rng = random.Random(17)
+    words = ["red", "green", "blue", "lime", "teal", "cyan", "plum", "gold"]
+    seen_rows = [
+        (i, " ".join(rng.choice(words) for _ in range(rng.randint(8, 14))))
+        for i in range(60)
+    ]
+    new_rows = [(1000 + i, seen_rows[i][1] + " tail") for i in range(0, 40, 2)]
+    # a clique over the cap on the seen side, and one on the new side
+    seen_rows += [(200 + i, "boilerplate footer seen side") for i in range(6)]
+    new_rows += [(2000, "boilerplate footer seen side")]
+    new_rows += [(3000 + i, "boilerplate header new side") for i in range(6)]
+    seen_rows += [(300, "boilerplate header new side")]
+    seen = spark.createDataFrame(seen_rows, ["doc_id", "text"])
+    new = spark.createDataFrame(new_rows, ["doc_id", "text"])
+    cfg = MinHashLSHConfig(
+        num_hashes=32, num_bands=8, threshold=0.5, seed=3, id_strategy="md5"
+    )
+    cap = 4
+
+    sh_new = explode_shingles(new, cfg.k)
+    sh_seen = explode_shingles(seen, cfg.k)
+    sig_new = minhash_signatures_array(sh_new, cfg)
+    sig_seen = minhash_signatures_array(sh_seen, cfg)
+
+    def capped(sig):
+        b = bands_for(sig, cfg)
+        sized = b.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
+        return b.join(sized.where(F.col("_n") <= cap), ["band", "band_key"])
+
+    ref_cands = (
+        capped(sig_new).select(F.col("doc_id").alias("doc_id_a"), "band", "band_key")
+        .join(
+            capped(sig_seen).select(
+                F.col("doc_id").alias("doc_id_b"), "band", "band_key"
+            ),
+            ["band", "band_key"],
+        )
+        .select("doc_id_a", "doc_id_b")
+        .distinct()
+    )
+    ref = exact_jaccard(
+        signature_prefilter(
+            ref_cands, sig_new.unionByName(sig_seen), cfg, cfg.threshold
+        ),
+        sh_new.unionByName(sh_seen),
+    ).where(F.col("jaccard") >= cfg.threshold)
+    want = sorted((r.doc_id_a, r.doc_id_b, r.jaccard) for r in ref.collect())
+
+    store = str(tmp_path / "store")
+    build_band_store(seen, cfg, store)
+    recomputed = sorted(
+        (r.new_id, r.seen_id, r.jaccard)
+        for r in cross_corpus_pairs(new, seen, cfg, max_bucket_size=cap).collect()
+    )
+    stored = sorted(
+        (r.new_id, r.seen_id, r.jaccard)
+        for r in cross_pairs_against_store(
+            new, cfg, store, max_bucket_size=cap
+        ).collect()
+    )
+    assert recomputed == stored == want
+    # the cap bites on both sides: both cliques' cross pairs are gone,
+    # while the planted near-dups survive
+    uncapped = {(r.new_id, r.seen_id) for r in cross_corpus_pairs(new, seen, cfg).collect()}
+    got = {(a, b) for a, b, _ in want}
+    assert {(2000, 200), (3000, 300)} <= uncapped - got
+    assert len(got) >= 10
 
 
 def test_band_store_prune_removes_docs(spark, golden_docs, tmp_path):
