@@ -96,101 +96,103 @@ def near_dup_groups(
     100 TB run will eventually meet.  localCheckpoint per step truncates
     the growing lineage so Catalyst doesn't replan an ever-deeper DAG.
 
+    The edge list crosses the network ONCE: both directions are
+    hash-partitioned on ``doc_id_b`` and deduplicated inside that
+    partitioning (the distinct needs no exchange of its own), then
+    cached, so every round's ``edges ⋈ labels`` join reuses the cached
+    partitioning and shuffles only the label side.  Any edge list is
+    accepted as is — duplicate edges, both orientations of one edge and
+    self-loops cannot change the components (a self-loop node is its
+    own singleton group).  The cache is released before returning, on
+    the ``max_iter`` raise too.
+
     Runs to CONVERGENCE by default — a silent iteration cap would return
     wrong labels on a long-chain component (and diverge from the
     transitive-closure oracle).  Pass ``max_iter`` to bound rounds
-    explicitly; exhaustion then raises rather than mislabeling.
-
-    ``prepared=True`` (r15, guide §2.4 — remove shuffles outright) is a
-    PERFORMANCE hint for composition callers whose ``pairs`` is already
-    a unique (a < b) edge list projected off an eagerly materialized
-    relation — exactly what the flagship's verified output is: a
-    filter + select over the checkpointed overlap-counts relation.  For
-    such input the symmetrizing ``distinct`` is a no-op shuffle (the
-    union of the two directions of unique a < b rows cannot collide)
-    and the eager localCheckpoint is a redundant barrier (the lineage
-    each iteration replays is one map-side filter over checkpointed
-    blocks).  The labels themselves are provably unchanged either way:
-    duplicate or self-loop edges cannot alter connected components
-    (min over a multiset ignores multiplicity), so the hint can only
-    ever cost performance, never correctness — tests pin both paths
-    output-equal on the flagship composition.
+    explicitly (the first round counts); exhaustion then raises rather
+    than mislabeling.  ``prepared`` is accepted for compatibility and
+    ignored.
     """
-    # Materialize the edge list eagerly: the incoming pairs may carry an
-    # arbitrarily deep lineage (e.g. the whole LSH pipeline) that must not
-    # be replayed once per iteration.  (Skipped under ``prepared`` — see
-    # docstring; the per-iteration replay is then a map-side projection.)
-    edges = pairs.select("doc_id_a", "doc_id_b").unionByName(
-        pairs.select(
-            F.col("doc_id_b").alias("doc_id_a"),
-            F.col("doc_id_a").alias("doc_id_b"),
+    edges = (
+        pairs.select("doc_id_a", "doc_id_b")
+        .unionByName(
+            pairs.select(
+                F.col("doc_id_b").alias("doc_id_a"),
+                F.col("doc_id_a").alias("doc_id_b"),
+            )
         )
-    )
-    if not prepared:
-        edges = _reset_stats(edges.distinct().localCheckpoint(eager=True))
-    labels = (
-        edges.select(F.col("doc_id_a").alias("doc_id"))
+        .repartition(pairs.sparkSession.sparkContext.defaultParallelism, "doc_id_b")
         .distinct()
-        .select("doc_id", F.col("doc_id").alias("group_id"))
+        .persist()
     )
-    iteration = 0
-    while True:
-        iteration += 1
-        neighbor_min = (
-            edges.join(labels, edges.doc_id_b == labels.doc_id)
-            .groupBy("doc_id_a")
-            .agg(F.min("group_id").alias("nbr_min"))
-            .withColumnRenamed("doc_id_a", "doc_id")
+    try:
+        # Round 1 needs no label relation: labels start as the identity,
+        # so a node's neighbour-min label is its min neighbour id.  This
+        # action also fills the edge cache.
+        step = edges.groupBy(F.col("doc_id_a").alias("doc_id")).agg(
+            F.min("doc_id_b").alias("nbr_min")
+        ).select(
+            "doc_id",
+            F.least("doc_id", "nbr_min").alias("group_id"),
+            (F.col("nbr_min") < F.col("doc_id")).alias("_changed"),
         )
-        # The pre-least label IS the old label, so the convergence flag
-        # rides the same plan — no second join over the label table — and
-        # the observe() metric rides the eager-checkpoint job itself:
-        # exactly ONE action (and one scan) per propagation round.
-        obs = Observation()
-        flagged = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
+        iteration = 0
+        while True:
+            iteration += 1
+            # The observe() metric rides the eager-checkpoint job itself:
+            # exactly ONE action (and one scan) per propagation round.
+            obs = Observation()
+            labels = _reset_stats(
+                step.observe(
+                    obs, F.sum(F.col("_changed").cast("long")).alias("n_changed")
+                ).localCheckpoint(eager=True)
+            ).drop("_changed")
+            if int(obs.get["n_changed"] or 0) == 0:
+                return labels
+            if max_iter is not None and iteration >= max_iter:
+                raise RuntimeError(
+                    f"near_dup_groups did not converge within max_iter={max_iter} "
+                    "rounds; raise the bound (component diameter exceeds it)"
+                )
+            # Pointer jump: label <- min(label, label(label)).  Labels are
+            # node ids, so the lookup is a self-join on the label table —
+            # candidate-list-sized, far smaller than the edge join below.
+            # Chains contract geometrically.  Skipped after round 1:
+            # cliques (the common near-dup shape) converge at round 2's
+            # zero-change probe and would pay for a jump that cannot help
+            # them.
+            if iteration > 1:
+                lookup = labels.select(
+                    F.col("doc_id").alias("_g"), F.col("group_id").alias("_gg")
+                )
+                labels = _reset_stats(
+                    labels.join(lookup, labels.group_id == lookup._g, "left")
+                    .select(
+                        "doc_id",
+                        F.least(
+                            F.col("group_id"),
+                            F.coalesce(F.col("_gg"), F.col("group_id")),
+                        ).alias("group_id"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+            neighbor_min = (
+                edges.join(labels, edges.doc_id_b == labels.doc_id)
+                .groupBy("doc_id_a")
+                .agg(F.min("group_id").alias("nbr_min"))
+                .withColumnRenamed("doc_id_a", "doc_id")
+            )
+            # The pre-least label IS the old label, so the convergence
+            # flag rides the same plan — no second join over the labels.
+            step = labels.join(neighbor_min, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     F.col("group_id"), F.coalesce(F.col("nbr_min"), F.col("group_id"))
                 ).alias("group_id"),
                 (F.col("nbr_min") < F.col("group_id")).alias("_changed"),
             )
-            .observe(obs, F.sum(F.col("_changed").cast("long")).alias("n_changed"))
-            .localCheckpoint(eager=True)
-        )
-        flagged = _reset_stats(flagged)
-        changed = int(obs.get["n_changed"] or 0)
-        labels = flagged.drop("_changed")
-        if changed == 0:
-            return labels
-        if max_iter is not None and iteration >= max_iter:
-            raise RuntimeError(
-                f"near_dup_groups did not converge within max_iter={max_iter} "
-                "rounds; raise the bound (component diameter exceeds it)"
-            )
-        # Pointer jump: label <- min(label, label(label)).  Labels are
-        # node ids, so the lookup is a self-join on the label table —
-        # candidate-list-sized, far smaller than the edge join above.
-        # Chains contract geometrically.  Skipped in round 1: cliques
-        # (the common near-dup shape) converge at round 2's zero-change
-        # probe and would pay for a jump that cannot help them.
-        if iteration == 1:
-            continue
-        lookup = labels.select(
-            F.col("doc_id").alias("_g"), F.col("group_id").alias("_gg")
-        )
-        labels = (
-            labels.join(lookup, labels.group_id == lookup._g, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("group_id"), F.coalesce(F.col("_gg"), F.col("group_id"))
-                ).alias("group_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        labels = _reset_stats(labels)
+    finally:
+        edges.unpersist()
 
 
 def similar_groups(
@@ -325,10 +327,7 @@ def similar_groups(
         ).select("doc_id_a", "doc_id_b")
         # every endpoint of a verified edge is in a >= 2-doc component,
         # so near_dup_groups' labels are exactly this operator's output.
-        # prepared: verified is a unique (a < b) filter over the
-        # checkpointed counts relation — CC needs no dedup shuffle and
-        # no second materialization barrier (r15).
-        return near_dup_groups(verified, max_iter=max_iter, prepared=True)
+        return near_dup_groups(verified, max_iter=max_iter)
     labels = _materialize(
         edges.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(edges.select(F.col("doc_id_b").alias("doc_id")))
@@ -430,8 +429,8 @@ def similar_groups(
         ).select("doc_id_a", "doc_id_b")
         # Contract: components over the (tiny) component graph of the
         # verified representative edges, then relabel every doc.
-        # Materialized (it feeds near_dup_groups' own edge checkpoint)
-        # with its emptiness probe riding the same action.
+        # Materialized (near_dup_groups reads it once per edge
+        # direction) with its emptiness probe riding the same action.
         obs_comp = Observation()
         comp_edges = _materialize(
             verified.join(la, "doc_id_a").join(lb, "doc_id_b")
@@ -466,11 +465,7 @@ def similar_groups(
                 # borderline merges, each paying a full residual
                 # relabel join): take this round's merges, then sweep.
                 exhaustive = True
-        # prepared: comp_edges is eagerly materialized just above (its
-        # possible duplicate component pairs cannot change CC labels —
-        # see near_dup_groups' hint contract), so the per-round dedup
-        # shuffle + checkpoint barrier inside CC are both redundant.
-        cc = near_dup_groups(comp_edges, prepared=True).select(
+        cc = near_dup_groups(comp_edges).select(
             F.col("doc_id").alias("_c"), F.col("group_id").alias("_g")
         )
         labels = _materialize(
@@ -698,9 +693,7 @@ def hybrid_dedup_drop_ids(
     if n_lists is None:
         n_lists = max(1, math.isqrt(emb.count()))
 
-    # prepared: the flagship's verified pairs are unique (a < b) rows
-    # projected off the checkpointed counts relation (r15).
-    groups = near_dup_groups(similar_pairs(docs, cfg), prepared=True)
+    groups = near_dup_groups(similar_pairs(docs, cfg))
     t = groups.where(F.col("doc_id") != F.col("group_id")).select(
         "doc_id", F.lit(True).alias("by_text")
     )

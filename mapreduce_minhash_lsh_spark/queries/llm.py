@@ -164,7 +164,7 @@ def q_near_dup_groups(spark, sf):
     """Connected components over the flagship similar-pairs edges; oracle
     is a recursive-CTE transitive closure (components are tiny cliques)."""
     pairs = similar_pairs(load_table(spark, sf, "documents"), _CFG)
-    return _dedup.near_dup_groups(pairs, prepared=True)
+    return _dedup.near_dup_groups(pairs)
 
 
 @register(
@@ -861,7 +861,7 @@ def q_near_dup_drop_best_quality(spark, sf):
     engine-portable score, so keep/drop decisions hash-match."""
     docs = load_table(spark, sf, "documents")
     pairs = similar_pairs(docs, _CFG)
-    groups = _dedup.near_dup_groups(pairs, prepared=True)
+    groups = _dedup.near_dup_groups(pairs)
     scored = docs.where(F.length("text") > 0).select(
         "doc_id", _text.quality_score(F.col("text")).alias("quality")
     )
@@ -1039,7 +1039,7 @@ def q_near_dup_drop_ids(spark, sf):
     pair list is quadratic in clique size (see SCALE.md §7's 80x note).
     Exact-dedup analog: `dedup_drop_ids`."""
     pairs = similar_pairs(load_table(spark, sf, "documents"), _CFG)
-    groups = _dedup.near_dup_groups(pairs, prepared=True)
+    groups = _dedup.near_dup_groups(pairs)
     return (
         groups.where(F.col("doc_id") != F.col("group_id"))
         .select(F.col("doc_id").alias("drop_id"), F.col("group_id").alias("keep_id"))
@@ -1389,7 +1389,7 @@ def q_near_dup_group_sizes(spark, sf):
     dedup-by-group answer SCALE.md §7 gives for quadratic pair
     volume."""
     pairs = similar_pairs(load_table(spark, sf, "documents"), _CFG)
-    groups = _dedup.near_dup_groups(pairs, prepared=True)
+    groups = _dedup.near_dup_groups(pairs)
     sizes = groups.groupBy("group_id").agg(F.count("*").alias("group_size"))
     return sizes.groupBy("group_size").agg(
         F.count("*").cast("long").alias("n_groups")

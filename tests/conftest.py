@@ -10,6 +10,47 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def job_counters(spark, fn) -> tuple[int, int]:
+    """Run ``fn()`` under a fresh job group; return ``(jobs,
+    shuffle_write_bytes)`` summed over the jobs it launched, read from the
+    application status store (kept with the UI disabled).  Jobs that
+    adaptive execution submits from its own threads inherit the group.
+    Skipped stages (shuffle output reused from an earlier job) write
+    nothing and are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    no_status = sc._jvm.java.util.ArrayList()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    jobs = shuffle = 0
+    all_jobs = store.jobsList(None)
+    for i in range(all_jobs.size()):
+        job = all_jobs.apply(i)
+        grp = job.jobGroup()
+        if not (grp.isDefined() and grp.get() == group):
+            continue
+        jobs += 1
+        ids = job.stageIds()
+        for k in range(ids.size()):
+            attempts = store.stageData(
+                ids.apply(k), False, no_status, False, no_quantiles
+            )
+            for a in range(attempts.size()):
+                st = attempts.apply(a)
+                if st.status().toString() != "SKIPPED":
+                    shuffle += st.shuffleWriteBytes()
+    return jobs, shuffle
+
+
 @pytest.fixture(scope="session")
 def spark():
     from mapreduce_minhash_lsh_spark.session import get_spark

@@ -1,6 +1,6 @@
 """Connected-component semantics of near_dup_groups: equivalence with a
-plain union-find, and the pointer-jumping convergence bound (O(log D)
-rounds on chains instead of O(D))."""
+plain union-find, the pointer-jumping convergence bound (O(log D)
+rounds on chains instead of O(D)), and its one-time edge shuffle."""
 
 from __future__ import annotations
 
@@ -71,6 +71,127 @@ def test_empty_inputs_flow_through(spark):
     assert cross_corpus_pairs(empty_docs, empty_docs, PIPELINE_CFG).count() == 0
     empty_edges = spark.createDataFrame([], "doc_id_a long, doc_id_b long")
     assert near_dup_groups(empty_edges).count() == 0
+
+
+def test_max_iter_counts_the_first_round(spark):
+    """Round 1 (computed from the edges alone) is a round: a path of
+    diameter 3 is still relabeling after it, so max_iter=1 raises."""
+    import pytest
+
+    path = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3)], "doc_id_a long, doc_id_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        near_dup_groups(path, max_iter=1)
+
+
+def test_messy_edge_list_matches_union_find(spark):
+    """Any edge list is accepted as is: duplicate edges, both orientations
+    of one edge, self-loops on grouped nodes and a node whose only edge
+    is a self-loop (its own singleton group)."""
+    edges = [
+        (5, 3), (3, 5), (3, 5), (5, 3),  # one edge, both ways, repeated
+        (3, 3), (5, 5),                  # self-loops inside a group
+        (9, 7), (7, 8), (8, 9), (8, 7),  # triangle, one edge reversed
+        (11, 11), (11, 11),              # isolated self-loop node
+        (20, 21), (21, 22), (22, 20), (20, 21),
+    ]
+    want = _union_find_groups(edges)
+    assert want[11] == 11
+    got = {
+        r.doc_id: r.group_id
+        for r in near_dup_groups(
+            spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
+        ).collect()
+    }
+    assert got == want
+
+
+def test_near_dup_drop_ids_matches_union_find_drop_list(spark):
+    """The registered drop list equals a union-find drop list over the
+    flagship's verified pairs: every non-min member of a component,
+    keeping the component min."""
+    from mapreduce_minhash_lsh_spark import registry
+    from mapreduce_minhash_lsh_spark.operators.similarity import similar_pairs
+    from mapreduce_minhash_lsh_spark.queries._base import PIPELINE_CFG
+    from mapreduce_minhash_lsh_spark.sources.tables import load_table
+    from tests.conftest import SF_SMALL
+
+    pairs = similar_pairs(load_table(spark, SF_SMALL, "documents"), PIPELINE_CFG)
+    groups = _union_find_groups([(r.doc_id_a, r.doc_id_b) for r in pairs.collect()])
+    want = {(n, g) for n, g in groups.items() if n != g}
+    got = {
+        (r.drop_id, r.keep_id)
+        for r in registry.queries()["near_dup_drop_ids"](spark, SF_SMALL).collect()
+    }
+    assert want and got == want
+
+
+def test_near_dup_groups_releases_edge_cache(spark):
+    """The cached edge list lives for the call only: no persisted RDD and
+    no CacheManager entry outlives near_dup_groups, on return and on the
+    max_iter raise.  Local-checkpoint RDDs (the eager labels) are
+    excluded — they are freed by driver GC with the result's lifetime."""
+    import pytest
+
+    def persisted() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return {r.id() for r in rdds if not r.isCheckpointed()}
+
+    def cache_empty() -> bool:
+        return bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "doc_id_a long, doc_id_b long"
+    )
+    spark.catalog.clearCache()
+    before = persisted()
+    assert near_dup_groups(chain).count() == 21
+    assert persisted() - before == set()
+    assert cache_empty()
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        near_dup_groups(chain, max_iter=2)
+    assert persisted() - before == set()
+    assert cache_empty()
+
+
+def test_near_dup_groups_shuffles_edge_list_once(spark, monkeypatch):
+    """Guard for the one-time edge shuffle: on 4 disjoint 30-cliques the
+    whole call writes less than 1.5x the shuffle of repartitioning the
+    symmetrized edge list once (the label side and the per-round
+    aggregates are the rest), and launches no more jobs than measured.
+    Re-shuffling the edges every round (the former plan) writes ~3x.
+    The edge partition count (defaultParallelism) and the input
+    partitioning are pinned so the counters do not depend on the
+    machine's core count."""
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+
+    from tests.conftest import job_counters
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 4))
+    ids = spark.range(0, 4 * 30 * 30, numPartitions=4)
+    clique, i, j = F.floor(ids.id / 900), F.floor(ids.id % 900 / 30), ids.id % 30
+    pairs = ids.select(
+        (clique * 30 + i).alias("doc_id_a"), (clique * 30 + j).alias("doc_id_b")
+    ).where(F.col("doc_id_a") < F.col("doc_id_b"))
+    symmetrized = pairs.unionByName(
+        pairs.select(
+            F.col("doc_id_b").alias("doc_id_a"), F.col("doc_id_a").alias("doc_id_b")
+        )
+    )
+    _, edge_bytes = job_counters(
+        spark,
+        lambda: symmetrized.repartition(4, "doc_id_b")
+        .write.format("noop").mode("overwrite").save(),
+    )
+    out = []
+    jobs, total_bytes = job_counters(
+        spark, lambda: out.extend(near_dup_groups(pairs).collect())
+    )
+    assert {r.group_id for r in out} == {0, 30, 60, 90} and len(out) == 120
+    assert total_bytes < 1.5 * edge_bytes, (total_bytes, edge_bytes)
+    assert jobs <= 10, jobs
 
 
 def _mutate(base: list[str], rng, words, n: int) -> str:
