@@ -10,7 +10,8 @@ read them:
       shingle_ids/   (doc_id, sid)        8-byte md5-derived shingle ids
                                           (not the strings — the verify
                                           join only ever needs the ids)
-      signatures/    (doc_id, sig)        array<long> MinHash signatures
+      signatures/    (doc_id, sig)        array<long> signatures under
+                                          cfg.sig_strategy
       bands/         (doc_id, band, band_key)   60-bit band keys
 
 All three are maintained with ``upsert_parquet`` keyed on doc_id, so
@@ -19,6 +20,13 @@ it again with new (or changed) documents replaces exactly those
 documents' rows and leaves the rest untouched.  This is the batch twin
 of the state store ``streaming/jobs.incremental_similar_pairs`` keeps.
 
+Per-ingest cost of :func:`cross_pairs_against_store`: the new batch's
+shingling and signatures, the band equi-join over one scan of the
+store's band table, and the store's ``shingle_ids``/``signatures`` rows
+of CANDIDATE documents only — those two tables are pruned to the
+candidate ids before any exchange.  The band table is the only store
+table an ingest reads whole.
+
 At 100 TB the store is the expensive-to-recompute asset: signatures are
 N x n_hashes longs and bands N x n_bands rows — both tiny next to the
 corpus text they summarize.
@@ -26,21 +34,29 @@ corpus text they summarize.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.lsh import band_row_pairs, compact_band_keys
-from mapreduce_minhash_lsh_spark.operators.minhash import minhash_signatures_array
+from mapreduce_minhash_lsh_spark.operators.minhash import signatures_array
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     _materialize,
-    exact_jaccard,
-    signature_prefilter,
+    fused_overlap_counts,
 )
 from mapreduce_minhash_lsh_spark.sources.fs import fs_exists
 from mapreduce_minhash_lsh_spark.sources.tables import upsert_parquet
+
+# Recorded in the ``_spec`` of OPH stores.  Stores written before it
+# carry an 'oph' spec over affine signature bytes (the signature pass
+# ignored sig_strategy), which band and agree with nothing a correct
+# OPH pipeline computes; the marker tells the two apart.  Affine stores
+# never had the fault and are written and read without it.
+STORE_FORMAT = 2
 
 
 def _spec_exists(spark: SparkSession, spec_path: str) -> bool:
@@ -57,26 +73,39 @@ def _spec_exists(spark: SparkSession, spec_path: str) -> bool:
 def _check_or_write_spec(
     spark: SparkSession, store_dir: str, cfg: MinHashLSHConfig, write: bool
 ) -> None:
-    """Record cfg.signature_spec() in the store on first build; on every
-    later build/extend/query, refuse a cfg whose spec differs.  A store
-    holds BYTES derived from the spec (signatures, band keys), so a
-    mismatched cfg — different seed, id strategy, or the round-5
+    """Record the cfg's signature spec in the store on first build; on
+    every later build/extend/query, refuse a cfg whose spec differs.  A
+    store holds BYTES derived from the spec (signatures, band keys), so
+    a mismatched cfg — different seed, id strategy, or the round-5
     rotation->optimal densify default change — would silently
-    under-match instead of erroring.  Fail fast instead."""
-    import json
-
-    spec = json.dumps(cfg.signature_spec(), sort_keys=True)
+    under-match instead of erroring.  Fail fast instead.  An OPH store
+    without the :data:`STORE_FORMAT` marker is refused with a rebuild
+    message: its signatures are affine."""
+    fields = cfg.signature_spec()
+    legacy = json.dumps(fields, sort_keys=True)
+    if cfg.sig_strategy == "oph":
+        fields["store_format"] = STORE_FORMAT
+    spec = json.dumps(fields, sort_keys=True)
     spec_path = f"{store_dir}/_spec"
     if _spec_exists(spark, spec_path):
         stored = spark.read.parquet(spec_path).first().spec
-        if stored != spec:
+        if stored == spec:
+            return
+        if stored == legacy:
             raise ValueError(
-                f"band store {store_dir!r} was built with signature spec "
-                f"{stored}; refusing to operate on it with {spec} — "
-                "signatures/band keys would not match.  Rebuild the store "
-                "or use the original config."
+                f"band store {store_dir!r} records sig_strategy 'oph' but "
+                "was written before store format "
+                f"{STORE_FORMAT}, which stored affine signatures under that "
+                "spec; its signatures and band keys match no OPH signature.  "
+                "Rebuild the store from its documents."
             )
-    elif write:
+        raise ValueError(
+            f"band store {store_dir!r} was built with signature spec "
+            f"{stored}; refusing to operate on it with {spec} — "
+            "signatures/band keys would not match.  Rebuild the store "
+            "or use the original config."
+        )
+    if write:
         spark.createDataFrame([(spec,)], ["spec"]).coalesce(1).write.mode(
             "overwrite"
         ).parquet(spec_path)
@@ -90,20 +119,23 @@ def build_band_store(
     Upserts by doc_id: a re-ingested document replaces all of its old
     rows (ids, signature, bands) atomically per table; other documents'
     rows are never rewritten.  Calling twice with the same docs is a
-    no-op on the result.  The store records ``cfg.signature_spec()`` on
+    no-op on the result.  The store records the cfg's signature spec on
     first build and every later call validates against it (mixed-spec
-    state fails fast — see :func:`_check_or_write_spec`).
+    state fails fast — see :func:`_check_or_write_spec`).  Cost: one
+    shingling and signature pass over ``docs`` plus the three upserts.
     """
     spark = docs.sparkSession
     _check_or_write_spec(spark, store_dir, cfg, write=True)
     sh = explode_shingles(docs, cfg.k).persist()
-    sids = sh.select("doc_id", md5_long(F.col("shingle")).alias("sid"))
-    sig = _materialize(minhash_signatures_array(sh, cfg), None)
-    bands = compact_band_keys(sig, cfg)
-    upsert_parquet(spark, sids, f"{store_dir}/shingle_ids", ["doc_id"])
-    upsert_parquet(spark, sig, f"{store_dir}/signatures", ["doc_id"])
-    upsert_parquet(spark, bands, f"{store_dir}/bands", ["doc_id"])
-    sh.unpersist()
+    try:
+        sids = sh.select("doc_id", md5_long(F.col("shingle")).alias("sid"))
+        sig = _materialize(signatures_array(sh, cfg), None)
+        bands = compact_band_keys(sig, cfg)
+        upsert_parquet(spark, sids, f"{store_dir}/shingle_ids", ["doc_id"])
+        upsert_parquet(spark, sig, f"{store_dir}/signatures", ["doc_id"])
+        upsert_parquet(spark, bands, f"{store_dir}/bands", ["doc_id"])
+    finally:
+        sh.unpersist()
 
 
 def load_band_store(
@@ -117,6 +149,26 @@ def load_band_store(
     )
 
 
+def _candidate_payload(
+    cands: DataFrame, side: str, sig: DataFrame, sids: DataFrame
+) -> DataFrame:
+    """(doc_id, sig, sh_set) for the documents in column ``side`` of the
+    candidate list only.  The distinct ids are broadcast and semi-joined
+    into ``sig`` and ``sids`` map-side, so only candidate documents' rows
+    reach an exchange.  The broadcast holds one 8-byte id per distinct
+    candidate document of this side: never more rows than the candidate
+    list.  The hint is explicit because a materialized candidate list
+    carries no size statistics (``_reset_stats``), so the planner would
+    otherwise shuffle both sides whole."""
+    ids = F.broadcast(cands.select(F.col(side).alias("doc_id")).distinct())
+    sets = (
+        sids.join(ids, "doc_id", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.collect_set("sid").alias("sh_set"))
+    )
+    return sig.join(ids, "doc_id", "left_semi").join(sets, "doc_id")
+
+
 def cross_pairs_against_store(
     new_docs: DataFrame,
     cfg: MinHashLSHConfig,
@@ -126,10 +178,17 @@ def cross_pairs_against_store(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """``similarity.cross_corpus_pairs`` with the seen side read from the
-    band store instead of recomputed: per-ingest work is the NEW batch's
-    shingling/minhashing plus the band equi-join — the corpus side costs
-    one parquet scan of its (small) store tables.  Result is identical
-    to the recomputing form (tested).
+    band store instead of recomputed.  Result is identical to the
+    recomputing form (tested).
+
+    Per-ingest cost: the NEW batch's shingling and signatures, one scan
+    of the store's band table for the band equi-join, and the store's
+    ``shingle_ids``/``signatures`` rows of candidate documents only.  The
+    candidate list is materialized once; each side's distinct candidate
+    ids are broadcast into that side's signatures and shingle ids before
+    any exchange — a broadcast of at most one 8-byte id per candidate
+    pair, whatever the store's size.  The payloads then go through the
+    fused prefilter + exact verify (``similarity.fused_overlap_counts``).
 
     Doc ids must be unique across the store and the new batch.
     """
@@ -138,26 +197,38 @@ def cross_pairs_against_store(
     _check_or_write_spec(spark, store_dir, cfg, write=False)
     sids_seen, sig_seen, bands_seen = load_band_store(spark, store_dir)
     sh_new = explode_shingles(new_docs, cfg.k).persist()
-    sig_new = _materialize(minhash_signatures_array(sh_new, cfg), checkpoint_dir)
-    cands = band_row_pairs(
-        compact_band_keys(sig_new, cfg), bands_seen, max_bucket_size
-    )
-    cands = _materialize(
-        signature_prefilter(
-            cands, sig_new.unionByName(sig_seen), cfg, threshold
-        ),
-        checkpoint_dir,
-    )
-    ids_union = sh_new.select(
-        "doc_id", md5_long(F.col("shingle")).alias("sid")
-    ).unionByName(sids_seen)
-    verified = exact_jaccard(cands, ids_union, checkpoint_dir).where(
-        F.col("jaccard") >= threshold
-    )
-    return verified.select(
-        F.col("doc_id_a").alias("new_id"),
-        F.col("doc_id_b").alias("seen_id"),
-        "jaccard",
+    try:
+        sig_new = _materialize(signatures_array(sh_new, cfg), checkpoint_dir)
+        cands = _materialize(
+            band_row_pairs(
+                compact_band_keys(sig_new, cfg), bands_seen, max_bucket_size
+            ),
+            checkpoint_dir,
+        )
+        sids_new = sh_new.select(
+            "doc_id", md5_long(F.col("shingle")).alias("sid")
+        )
+        counts = fused_overlap_counts(
+            cands,
+            _candidate_payload(cands, "doc_id_a", sig_new, sids_new),
+            cfg,
+            threshold,
+            checkpoint_dir,
+            rel_b=_candidate_payload(cands, "doc_id_b", sig_seen, sids_seen),
+        )
+    finally:
+        sh_new.unpersist()
+    return (
+        counts.where(F.col("nc") > 0)
+        .select(
+            F.col("doc_id_a").alias("new_id"),
+            F.col("doc_id_b").alias("seen_id"),
+            (
+                F.col("nc").cast("double")
+                / (F.col("na") + F.col("nb") - F.col("nc"))
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
     )
 
 

@@ -76,6 +76,19 @@ def minhash_signatures_array(
     )
 
 
+def signatures_array(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
+    """(doc_id, shingle) -> (doc_id, sig: array<long>) under
+    ``cfg.sig_strategy``: :func:`oph_signatures_array` for 'oph',
+    :func:`minhash_signatures_array` for 'affine'.  Over the same shingle
+    relation the bytes equal the ``sig`` column of
+    ``similarity.signature_set_relation`` under the same cfg, so
+    signatures persisted through this helper band and agree with
+    recomputed ones."""
+    if cfg.sig_strategy == "oph":
+        return oph_signatures_array(doc_shingles, cfg)
+    return minhash_signatures_array(doc_shingles, cfg)
+
+
 def minhash_signatures(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
     """(doc_id, shingle) -> (doc_id, mh_0 .. mh_{n-1}) wide signature.
 
