@@ -12,9 +12,11 @@ Scenario: a corpus of REPLICAS x sf0.1 documents is the SEEN side; a
   * recompute    — cross_corpus_pairs(new, seen): re-shingles and
                    re-minhashes the full seen corpus every ingest.
 
-Records build wall (one-time), per-ingest wall for both paths, store
-bytes on disk, and asserts both paths emit the SAME pair count at this
-scale (the golden test pins byte-equality at base scale).
+Records build wall (one-time), per-ingest wall for both paths, the
+wall of extending the store with the new slice afterwards
+(``extend_sec``), store bytes on disk, and asserts both paths emit the
+SAME pair count at this scale (the golden test pins byte-equality at
+base scale).
 
     python3 experiments/ingest_probe.py [REPLICAS=40]
 
@@ -117,6 +119,13 @@ def main() -> None:
     t_recompute = round(time.perf_counter() - t0, 1)
     _drop_all_persisted(spark)
 
+    # Extend the store with the new slice, as an ingest does after its
+    # query.
+    t0 = time.perf_counter()
+    build_band_store(new, cfg, store)
+    t_extend = round(time.perf_counter() - t0, 1)
+    _drop_all_persisted(spark)
+
     out = {
         "mode": "ingest_store_vs_recompute",
         "replicas": replicas,
@@ -126,6 +135,7 @@ def main() -> None:
         "store_bytes": store_bytes,
         "ingest_sec_store_path": t_ingest,
         "ingest_sec_recompute_path": t_recompute,
+        "extend_sec": t_extend,
         "pairs_store_path": n_pairs_store,
         "pairs_recompute_path": n_pairs_recompute,
         "paths_agree": n_pairs_store == n_pairs_recompute,

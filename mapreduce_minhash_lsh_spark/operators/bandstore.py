@@ -14,11 +14,16 @@ read them:
                                           cfg.sig_strategy
       bands/         (doc_id, band, band_key)   60-bit band keys
 
-All three are maintained with ``upsert_parquet`` keyed on doc_id, so
-``build_band_store`` is also the EXTEND and RE-INGEST operation: calling
-it again with new (or changed) documents replaces exactly those
-documents' rows and leaves the rest untouched.  This is the batch twin
-of the state store ``streaming/jobs.incremental_similar_pairs`` keeps.
+``build_band_store`` is also the EXTEND and RE-INGEST operation, keyed
+on doc_id: one probe finds the batch ids already stored, only those are
+pruned from the three tables, and the batch's rows are appended.  A
+fresh batch therefore costs O(batch): other documents' rows are never
+rewritten, and each extend adds one file set per table (compact with
+``sources.tables.compact_parquet`` into a sibling directory, then
+swap).  Appends write ``signatures`` first and prunes delete it last,
+so a build re-run after a crash ends as a clean build would.  This is
+the batch twin of the state store
+``streaming/jobs.incremental_similar_pairs`` keeps.
 
 Per-ingest cost of :func:`cross_pairs_against_store`: the new batch's
 shingling and signatures, the band equi-join over one scan of the
@@ -34,29 +39,24 @@ corpus text they summarize.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.lsh import band_row_pairs, compact_band_keys
-from mapreduce_minhash_lsh_spark.operators.minhash import signatures_array
+from mapreduce_minhash_lsh_spark.operators.minhash import (
+    OPH_FORMAT,
+    recorded_spec,
+    signatures_array,
+)
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     _materialize,
     fused_overlap_counts,
 )
 from mapreduce_minhash_lsh_spark.sources.fs import fs_exists
-from mapreduce_minhash_lsh_spark.sources.tables import upsert_parquet
-
-# Recorded in the ``_spec`` of OPH stores.  Stores written before it
-# carry an 'oph' spec over affine signature bytes (the signature pass
-# ignored sig_strategy), which band and agree with nothing a correct
-# OPH pipeline computes; the marker tells the two apart.  Affine stores
-# never had the fault and are written and read without it.
-STORE_FORMAT = 2
+from mapreduce_minhash_lsh_spark.sources.tables import delete_from_parquet
 
 
 def _spec_exists(spark: SparkSession, spec_path: str) -> bool:
@@ -79,13 +79,9 @@ def _check_or_write_spec(
     a mismatched cfg — different seed, id strategy, or the round-5
     rotation->optimal densify default change — would silently
     under-match instead of erroring.  Fail fast instead.  An OPH store
-    without the :data:`STORE_FORMAT` marker is refused with a rebuild
+    without the ``minhash.OPH_FORMAT`` marker is refused with a rebuild
     message: its signatures are affine."""
-    fields = cfg.signature_spec()
-    legacy = json.dumps(fields, sort_keys=True)
-    if cfg.sig_strategy == "oph":
-        fields["store_format"] = STORE_FORMAT
-    spec = json.dumps(fields, sort_keys=True)
+    spec, legacy = recorded_spec(cfg, "store_format")
     spec_path = f"{store_dir}/_spec"
     if _spec_exists(spark, spec_path):
         stored = spark.read.parquet(spec_path).first().spec
@@ -95,7 +91,7 @@ def _check_or_write_spec(
             raise ValueError(
                 f"band store {store_dir!r} records sig_strategy 'oph' but "
                 "was written before store format "
-                f"{STORE_FORMAT}, which stored affine signatures under that "
+                f"{OPH_FORMAT}, which stored affine signatures under that "
                 "spec; its signatures and band keys match no OPH signature.  "
                 "Rebuild the store from its documents."
             )
@@ -116,13 +112,29 @@ def build_band_store(
 ) -> None:
     """Create or EXTEND the band store with ``docs``.
 
-    Upserts by doc_id: a re-ingested document replaces all of its old
-    rows (ids, signature, bands) atomically per table; other documents'
-    rows are never rewritten.  Calling twice with the same docs is a
-    no-op on the result.  The store records the cfg's signature spec on
-    first build and every later call validates against it (mixed-spec
-    state fails fast — see :func:`_check_or_write_spec`).  Cost: one
-    shingling and signature pass over ``docs`` plus the three upserts.
+    Upserts by doc_id, as probe -> prune -> append.  One probe finds the
+    batch ids already in ``signatures`` (the three tables share one
+    doc-id set): a left-semi join of the stored doc-id column against
+    the broadcast batch ids, one 8-byte id per batch document.  Only if
+    some are stored does :func:`prune_band_store` drop them — re-ingest
+    rewrites the three tables, as it always did.  Then the batch's
+    signatures, shingle ids and bands are APPENDED, in that order, so a
+    fresh batch costs O(batch): of the store it reads only the doc-id
+    column of ``signatures``, and other documents' rows and files are
+    never rewritten.  Calling twice with the same docs is a no-op on
+    the result.
+
+    Crash invariant: the appends write ``signatures`` first and the
+    prune deletes it last, so an id present in any table is also
+    present in ``signatures``.  A build re-run after a crash mid-append
+    or mid-prune therefore finds every partial id in the probe,
+    re-prunes it, and ends with the same rows as a clean build.
+
+    Each extend adds one file set per table.  To merge them, compact a
+    table with ``sources.tables.compact_parquet`` into a sibling
+    directory and swap it in.  The store records the cfg's signature
+    spec on first build and every later call validates against it
+    (mixed-spec state fails fast — see :func:`_check_or_write_spec`).
     """
     spark = docs.sparkSession
     _check_or_write_spec(spark, store_dir, cfg, write=True)
@@ -131,9 +143,30 @@ def build_band_store(
         sids = sh.select("doc_id", md5_long(F.col("shingle")).alias("sid"))
         sig = _materialize(signatures_array(sh, cfg), None)
         bands = compact_band_keys(sig, cfg)
-        upsert_parquet(spark, sids, f"{store_dir}/shingle_ids", ["doc_id"])
-        upsert_parquet(spark, sig, f"{store_dir}/signatures", ["doc_id"])
-        upsert_parquet(spark, bands, f"{store_dir}/bands", ["doc_id"])
+        sig_path = f"{store_dir}/signatures"
+        if fs_exists(spark, sig_path):
+            # Cached and counted before the prune rewrites
+            # ``signatures``, after which a re-read would find nothing.
+            # The cache's measured size (at most one id per batch doc)
+            # also lets the prune's anti-joins broadcast the ids instead
+            # of shuffling the tables.
+            stored = (
+                spark.read.parquet(sig_path)
+                .select("doc_id")
+                .join(F.broadcast(sig.select("doc_id")), "doc_id", "left_semi")
+                .persist()
+            )
+            try:
+                if stored.count():
+                    prune_band_store(spark, store_dir, stored)
+            finally:
+                stored.unpersist()
+        for table, rows in (
+            ("signatures", sig),
+            ("shingle_ids", sids),
+            ("bands", bands),
+        ):
+            rows.write.mode("append").parquet(f"{store_dir}/{table}")
     finally:
         sh.unpersist()
 
@@ -150,17 +183,11 @@ def load_band_store(
 
 
 def _candidate_payload(
-    cands: DataFrame, side: str, sig: DataFrame, sids: DataFrame
+    ids: DataFrame, sig: DataFrame, sids: DataFrame
 ) -> DataFrame:
-    """(doc_id, sig, sh_set) for the documents in column ``side`` of the
-    candidate list only.  The distinct ids are broadcast and semi-joined
-    into ``sig`` and ``sids`` map-side, so only candidate documents' rows
-    reach an exchange.  The broadcast holds one 8-byte id per distinct
-    candidate document of this side: never more rows than the candidate
-    list.  The hint is explicit because a materialized candidate list
-    carries no size statistics (``_reset_stats``), so the planner would
-    otherwise shuffle both sides whole."""
-    ids = F.broadcast(cands.select(F.col(side).alias("doc_id")).distinct())
+    """(doc_id, sig, sh_set) for the candidate documents in ``ids`` only:
+    the broadcast ids are semi-joined into ``sig`` and ``sids``
+    map-side, so only candidate documents' rows reach an exchange."""
     sets = (
         sids.join(ids, "doc_id", "left_semi")
         .groupBy("doc_id")
@@ -184,13 +211,17 @@ def cross_pairs_against_store(
     Per-ingest cost: the NEW batch's shingling and signatures, one scan
     of the store's band table for the band equi-join, and the store's
     ``shingle_ids``/``signatures`` rows of candidate documents only.  The
-    candidate list is materialized once; each side's distinct candidate
-    ids are broadcast into that side's signatures and shingle ids before
-    any exchange — a broadcast of at most one 8-byte id per candidate
-    pair, whatever the store's size.  The payloads then go through the
-    fused prefilter + exact verify (``similarity.fused_overlap_counts``).
+    candidate list is materialized once; the distinct candidate ids of
+    both sides are broadcast once into the batch's and the store's
+    signatures and shingle ids before any exchange — a broadcast of one
+    8-byte id per distinct candidate document on either side, never more
+    than two per candidate pair, whatever the store's size.  The payloads
+    then go through the fused prefilter + exact verify
+    (``similarity.fused_overlap_counts``).
 
-    Doc ids must be unique across the store and the new batch.
+    Doc ids must be unique across the store and the new batch.  Sharing
+    one id set between the two sides adds no match: a payload row only
+    joins the candidate pairs that name it on its own side.
     """
     threshold = cfg.threshold if threshold is None else threshold
     spark = new_docs.sparkSession
@@ -208,13 +239,23 @@ def cross_pairs_against_store(
         sids_new = sh_new.select(
             "doc_id", md5_long(F.col("shingle")).alias("sid")
         )
+        # Both sides' distinct candidate ids in one broadcast, reused by
+        # all four semi-joins.  The hint is explicit because a
+        # materialized candidate list carries no size statistics
+        # (``_reset_stats``), so the planner would otherwise shuffle
+        # both sides whole.
+        ids = F.broadcast(
+            cands.select(F.col("doc_id_a").alias("doc_id"))
+            .union(cands.select(F.col("doc_id_b").alias("doc_id")))
+            .distinct()
+        )
         counts = fused_overlap_counts(
             cands,
-            _candidate_payload(cands, "doc_id_a", sig_new, sids_new),
+            _candidate_payload(ids, sig_new, sids_new),
             cfg,
             threshold,
             checkpoint_dir,
-            rel_b=_candidate_payload(cands, "doc_id_b", sig_seen, sids_seen),
+            rel_b=_candidate_payload(ids, sig_seen, sids_seen),
         )
     finally:
         sh_new.unpersist()
@@ -242,9 +283,9 @@ def prune_band_store(
     never been ingested (tested).  ``drop_ids`` needs a ``doc_id``
     column; absent ids are a no-op.
     """
-    from mapreduce_minhash_lsh_spark.sources.tables import delete_from_parquet
-
-    for table in ("shingle_ids", "signatures", "bands"):
+    # ``signatures`` last: an id stays there until its other rows are
+    # gone, so a rerun's probe still sees a half-pruned id.
+    for table in ("bands", "shingle_ids", "signatures"):
         delete_from_parquet(
             spark, f"{store_dir}/{table}", drop_ids, ["doc_id"]
         )

@@ -14,6 +14,8 @@ materialized, no Python in the hot path.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -87,6 +89,27 @@ def signatures_array(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFram
     if cfg.sig_strategy == "oph":
         return oph_signatures_array(doc_shingles, cfg)
     return minhash_signatures_array(doc_shingles, cfg)
+
+
+# Signature format that durable OPH state records (band stores, streaming
+# state).  State written before :func:`signatures_array` honoured
+# sig_strategy holds affine signatures under an 'oph' spec, which band
+# and agree with nothing a correct OPH pipeline computes; the marker
+# tells the two apart.  Affine state never had the fault and records no
+# marker.
+OPH_FORMAT = 2
+
+
+def recorded_spec(cfg: MinHashLSHConfig, marker: str) -> tuple[str, str]:
+    """``(spec, legacy)``: the JSON signature spec durable state records
+    (``cfg.signature_spec()``, plus ``{marker: OPH_FORMAT}`` under OPH)
+    and the spec that OPH state written before the marker carries.  The
+    two are equal for an affine cfg."""
+    fields = cfg.signature_spec()
+    legacy = json.dumps(fields, sort_keys=True)
+    if cfg.sig_strategy == "oph":
+        fields[marker] = OPH_FORMAT
+    return json.dumps(fields, sort_keys=True), legacy
 
 
 def minhash_signatures(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:

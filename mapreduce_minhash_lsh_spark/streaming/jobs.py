@@ -401,7 +401,9 @@ def incremental_similar_pairs(
     """
     from mapreduce_minhash_lsh_spark.operators.lsh import compact_band_keys
     from mapreduce_minhash_lsh_spark.operators.minhash import (
-        minhash_signatures_array,
+        OPH_FORMAT,
+        recorded_spec,
+        signatures_array,
     )
     from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
     from mapreduce_minhash_lsh_spark.operators.similarity import exact_jaccard
@@ -432,7 +434,7 @@ def incremental_similar_pairs(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sh = explode_shingles(batch_df, cfg.k)
-        bands = compact_band_keys(minhash_signatures_array(sh, cfg), cfg)
+        bands = compact_band_keys(signatures_array(sh, cfg), cfg)
         # Write this batch to the durable store FIRST, then read the
         # store back: one materialization per lineage, and every
         # downstream reference is a plain parquet scan (no growing
@@ -477,9 +479,7 @@ def incremental_similar_pairs(
     else:
         split_dir = fs_join(state_dir, "docs_split")
     meta_path = fs_join(state_dir, "source_meta") if not own_state else None
-    import json
-
-    spec = json.dumps(cfg.signature_spec(), sort_keys=True)
+    spec, legacy = recorded_spec(cfg, "state_format")
     try:
         # fs_exists/fs_join, not os.path: a remote (s3a/hdfs) state_dir
         # would probe False locally and silently re-split the source out
@@ -523,6 +523,14 @@ def incremental_similar_pairs(
             # store guards against (operators/bandstore.py).  Fail fast.
             stored_spec = getattr(row, "signature_spec", None)
             if stored_spec is not None and stored_spec != spec:
+                if stored_spec == legacy:
+                    raise ValueError(
+                        f"state_dir {state_dir!r} records sig_strategy "
+                        "'oph' but was written before state format "
+                        f"{OPH_FORMAT}, which banded affine signatures "
+                        "under that spec; its band keys match no OPH "
+                        "signature.  Rebuild it with a fresh state_dir."
+                    )
                 raise ValueError(
                     f"state_dir {state_dir!r} was built with signature spec "
                     f"{stored_spec}; refusing to resume it with {spec} — "

@@ -1,5 +1,6 @@
 """Band-store ingest: cache release, store-size independence of the
-query's shuffle, and OPH signatures in the store."""
+query's shuffle and of the extend's, crash reruns of the extend, and OPH
+signatures in the store."""
 
 from __future__ import annotations
 
@@ -7,11 +8,14 @@ import dataclasses
 import json
 import random
 import string
+from collections import Counter
+from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrameWriter
+from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
-from mapreduce_minhash_lsh_spark.operators import bandstore
 from mapreduce_minhash_lsh_spark.operators.bandstore import (
     build_band_store,
     cross_pairs_against_store,
@@ -71,6 +75,37 @@ def _rows(df) -> list[tuple]:
     return sorted((r.new_id, r.seen_id, r.jaccard) for r in df.collect())
 
 
+def _fail_writes_to(monkeypatch, table: str) -> None:
+    """Make every parquet write whose path ends in ``/<table>`` raise, as a
+    crash at that point of a build would."""
+    write = DataFrameWriter.parquet
+
+    def fail(self, path, *a, **k):
+        if path.endswith(f"/{table}"):
+            raise RuntimeError("upsert failed")
+        return write(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+
+
+def _tables(spark, store: str) -> dict[str, Counter]:
+    """Each store table as a multiset of rows (arrays as tuples)."""
+    return {
+        t: Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(f"{store}/{t}").collect()
+        )
+        for t in ("shingle_ids", "signatures", "bands")
+    }
+
+
+def _files(store: str) -> set[str]:
+    return {
+        str(p.relative_to(store))
+        for p in Path(store).rglob("*.parquet")
+    }
+
+
 def test_band_store_releases_shingle_cache(spark, tmp_path, monkeypatch):
     """Building and querying the store persist the shingle relation for
     the call only: no non-checkpoint persisted RDD outlives either call,
@@ -90,10 +125,7 @@ def test_band_store_releases_shingle_cache(spark, tmp_path, monkeypatch):
     assert cross_pairs_against_store(new, CFG, store).count() > 0
     assert persisted() - before == set()
 
-    def fail(*_a, **_k):
-        raise RuntimeError("upsert failed")
-
-    monkeypatch.setattr(bandstore, "upsert_parquet", fail)
+    _fail_writes_to(monkeypatch, "shingle_ids")  # the second append
     with pytest.raises(RuntimeError, match="upsert failed"):
         build_band_store(new, CFG, store)
     assert persisted() - before == set()
@@ -128,6 +160,80 @@ def test_store_query_shuffle_does_not_grow_with_store(spark, tmp_path):
         new, CFG, large, checkpoint_dir=str(tmp_path / "ckpt")
     )
     assert _rows(reliable) == out_large
+
+
+def test_extend_rerun_after_partial_append_equals_clean_build(
+    spark, tmp_path, monkeypatch
+):
+    """A build that fails after its ``signatures`` append leaves the
+    batch's ids in ``signatures`` only; rerunning it probes them, prunes
+    them and appends again, ending with the same rows as a build that
+    never failed.  The batch holds fresh documents and re-ingested
+    ones, so the rerun exercises the prune as well as the append."""
+    seen, new = _corpus(spark, 40)
+    batch = new.unionByName(seen.where(F.col("doc_id") % 3 == 0))
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for store in (clean, crashed):
+        build_band_store(seen, CFG, store)
+    build_band_store(batch, CFG, clean)
+
+    with monkeypatch.context() as m:
+        _fail_writes_to(m, "shingle_ids")
+        with pytest.raises(RuntimeError, match="upsert failed"):
+            build_band_store(batch, CFG, crashed)
+    partial = _tables(spark, crashed)
+    want = _tables(spark, clean)
+    assert partial["signatures"] == want["signatures"]
+    assert partial["bands"] != want["bands"]
+    build_band_store(batch, CFG, crashed)
+    assert _tables(spark, crashed) == want
+
+
+def test_reingest_keeps_each_row_once(spark, tmp_path, monkeypatch):
+    """Re-ingesting a subset of the stored documents leaves every table
+    with each id's rows exactly once — the probe must hold the stored
+    ids until the last table is pruned — and so does a rerun after a
+    crash between the prune's last two tables."""
+    seen, _ = _corpus(spark, 40)
+    subset = seen.where(F.col("doc_id") % 3 == 0)
+    clean, store = str(tmp_path / "clean"), str(tmp_path / "store")
+    build_band_store(seen, CFG, clean)
+    want = _tables(spark, clean)
+    build_band_store(seen, CFG, store)
+    build_band_store(subset, CFG, store)
+    assert _tables(spark, store) == want
+
+    with monkeypatch.context() as m:
+        _fail_writes_to(m, "signatures__staging")  # the prune's last delete
+        with pytest.raises(RuntimeError, match="upsert failed"):
+            build_band_store(subset, CFG, store)
+    partial = _tables(spark, store)
+    assert partial["signatures"] == want["signatures"]
+    assert partial["bands"] != want["bands"]
+    build_band_store(subset, CFG, store)
+    assert _tables(spark, store) == want
+
+
+def test_store_extend_does_not_rewrite_the_store(spark, tmp_path):
+    """Extending an N-doc store and a 4N-doc store with the same fresh
+    batch shuffles within 1.25x of the same bytes, and every parquet file
+    that existed before the extend is still there afterwards: the extend
+    writes the batch and reads the store's doc ids only.  Rewriting
+    each table through a merge (the former upsert) replaced every file
+    and shuffled the whole store."""
+    n = 60
+    seen, new = _corpus(spark, n)
+    seen4, _ = _corpus(spark, n, n_extra=3 * n)
+    shuffled = []
+    for docs, name in ((seen, "small"), (seen4, "large")):
+        store = str(tmp_path / name)
+        build_band_store(docs, CFG, store)
+        before = _files(store)
+        _, nbytes = job_counters(spark, lambda: build_band_store(new, CFG, store))
+        shuffled.append(nbytes)
+        assert before < _files(store)
+    small, large = shuffled
+    assert large <= 1.25 * small, (small, large)
 
 
 def test_oph_band_store_matches_recomputing_cross_corpus(spark, tmp_path):

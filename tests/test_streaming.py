@@ -58,6 +58,23 @@ def test_incremental_similar_pairs_equals_batch(spark):
     assert inc_pairs == batch_pairs
 
 
+def test_oph_incremental_similar_pairs_equals_batch(spark):
+    """Under sig_strategy='oph' the incremental pipeline bands OPH
+    signatures, so it finds the batch pair set of the same cfg.  At this
+    cfg the OPH and affine batch pair sets differ by hundreds of pairs,
+    so banding affine signatures under an 'oph' cfg cannot pass."""
+    cfg = MinHashLSHConfig(
+        num_hashes=32, num_bands=4, threshold=0.5, id_strategy="md5",
+        sig_strategy="oph",
+    )
+    inc = incremental_similar_pairs(spark, SF_SMALL, cfg)
+    batch = similar_pairs(load_table(spark, SF_SMALL, "documents"), cfg)
+    inc_pairs = {(r.doc_id_a, r.doc_id_b) for r in inc.collect()}
+    batch_pairs = {(r.doc_id_a, r.doc_id_b) for r in batch.collect()}
+    assert len(batch_pairs) >= 100
+    assert inc_pairs == batch_pairs
+
+
 def test_stateful_sessionize_matches_batch(spark):
     """applyInPandasWithState closed sessions == batch sessions minus each
     user's final (still-open) session."""
@@ -134,6 +151,34 @@ def test_incremental_pairs_rejects_mismatched_signature_spec(spark, tmp_path):
     with pytest.raises(ValueError, match="signature spec"):
         incremental_similar_pairs(
             spark, SF_SMALL, reseeded, threshold=0.3, state_dir=state
+        )
+
+
+def test_legacy_oph_incremental_state_is_refused(spark, tmp_path):
+    """OPH state written before the state-format marker banded affine
+    signatures under an 'oph' spec; resuming it must fail with a rebuild
+    message instead of silently under-matching (affine state carries no
+    marker and resumes as before: the idempotent-rerun test above)."""
+    import dataclasses
+    import json
+
+    import pytest
+
+    from mapreduce_minhash_lsh_spark.config import GOLDEN
+
+    oph = dataclasses.replace(GOLDEN, sig_strategy="oph")
+    state = str(tmp_path / "state")
+    incremental_similar_pairs(spark, SF_SMALL, oph, threshold=0.3, state_dir=state)
+    meta = spark.read.parquet(f"{state}/source_meta").first()
+    assert json.loads(meta.signature_spec)["state_format"] == 2
+    legacy = json.dumps(oph.signature_spec(), sort_keys=True)
+    spark.createDataFrame(
+        [(meta.sf_dir, meta.n_docs, legacy)],
+        ["sf_dir", "n_docs", "signature_spec"],
+    ).coalesce(1).write.mode("overwrite").parquet(f"{state}/source_meta")
+    with pytest.raises(ValueError, match="before state format"):
+        incremental_similar_pairs(
+            spark, SF_SMALL, oph, threshold=0.3, state_dir=state
         )
 
 
