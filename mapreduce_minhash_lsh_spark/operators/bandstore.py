@@ -284,8 +284,11 @@ def prune_band_store(
     column; absent ids are a no-op.
     """
     # ``signatures`` last: an id stays there until its other rows are
-    # gone, so a rerun's probe still sees a half-pruned id.
-    for table in ("bands", "shingle_ids", "signatures"):
-        delete_from_parquet(
-            spark, f"{store_dir}/{table}", drop_ids, ["doc_id"]
-        )
+    # gone, so a rerun's probe still sees a half-pruned id.  One call,
+    # so the three tables share one materialized id set.
+    delete_from_parquet(
+        spark,
+        [f"{store_dir}/{t}" for t in ("bands", "shingle_ids", "signatures")],
+        drop_ids,
+        ["doc_id"],
+    )

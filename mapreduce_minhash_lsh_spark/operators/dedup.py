@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
+from mapreduce_minhash_lsh_spark.operators.shingling import by_doc_id, explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     PAIR_VERIFY_BUDGET,
     _materialize,
@@ -288,7 +288,7 @@ def similar_groups(
 
     threshold = cfg.threshold if threshold is None else threshold
     rel = signature_set_relation(
-        explode_shingles(docs, cfg.k), cfg, checkpoint_dir
+        explode_shingles(by_doc_id(docs), cfg.k), cfg, checkpoint_dir
     )
     cands = banded_pairs(
         rel, cfg, max_bucket_size=max_bucket_size, oversize=oversize

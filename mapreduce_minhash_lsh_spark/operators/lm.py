@@ -88,7 +88,6 @@ def train_bigram_lm(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> BigramLM:
     """Train the bigram LM in ONE corpus pass, materialized at call
     time (one job); at scale the count relations can instead be written
@@ -122,24 +121,16 @@ def train_bigram_lm(
     recomputing it per consumer; for repeated scoring runs write it to
     parquet instead (the docstring's index/query split).
 
-    ``eager=False`` (ADVICE r14 escape hatch) defers the checkpoint's
-    materialization into the FIRST action that consumes the model —
-    restoring fully-lazy training for callers that train many models
-    they may never score.  Caveat: the deferred blocks are saved by
-    whichever action runs first, and the scoring plan's independent
-    broadcast builds run CONCURRENTLY — each then recomputes the count
-    aggregate until one has saved the blocks, so a multi-consumer first
-    action can re-pay (part of) the training pass; eager training never
-    does.  Cleanup for repeated training in one session: localCheckpoint
+    Cleanup for repeated training in one session: localCheckpoint
     blocks are freed by ``lm.bigrams.unpersist()`` (or the bench's
     sweep over ``getPersistentRDDs``) once the model is done with —
-    they do NOT survive executor loss either way (use the
+    they do NOT survive executor loss (use the
     checkpoint_dir-based ``_materialize`` for that)."""
     bg = _doc_bigrams(docs, text_col, id_col)
     bigrams = (
         bg.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("c_bg"))
-        .localCheckpoint(eager=eager)
+        .localCheckpoint(eager=True)
     )
     prefixes = bigrams.groupBy(
         F.substring_index(F.col("bigram"), " ", 1).alias("w1")
@@ -226,7 +217,6 @@ def train_trigram_lm(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> TrigramLM:
     """Count relations for :func:`stupid_backoff_scores` — all n-gram
     orders counted by ONE corpus pass.
@@ -277,7 +267,7 @@ def train_trigram_lm(
     counts = (
         grams.groupBy("o", "g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=eager)
+        .localCheckpoint(eager=True)
     )
     trigrams = counts.where(F.col("o") == 3).select(
         F.col("g").alias("trigram"), F.col("c").alias("c3")
@@ -288,8 +278,6 @@ def train_trigram_lm(
     unigrams = counts.where(F.col("o") == 1).select(
         F.col("g").alias("tok"), F.col("c").alias("c1")
     )
-    # (``eager=False``: same escape hatch, caveats and cleanup story as
-    # train_bigram_lm — see its docstring.)
     totals = unigrams.agg(
         # coalesce: sum() over an empty relation is NULL where the old
         # count() form gave 0 — keep the empty-corpus row identical.

@@ -8,6 +8,8 @@ partial aggregation inside ``groupBy().agg()`` — no user code (SURVEY.md §4).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +34,30 @@ def explode_shingles(
         docs.where(F.length(F.col(text_col)) > 0)
         .select(F.col(id_col).alias("doc_id"), F.explode(arr).alias("shingle"))
     )
+
+
+def by_doc_id(docs: DataFrame) -> DataFrame:
+    """``docs`` hash-partitioned on ``doc_id`` — the input shape for a
+    per-document aggregate over its exploded shingles.
+
+    Shuffling the text costs ~1 byte per character; shuffling the
+    aggregate's partials instead (the fused (sig, sh_set) relation
+    carries one 8-byte id per distinct shingle) costs ~8.  With the
+    text already clustered by doc_id, Catalyst runs the explode and
+    the partial and final aggregates in one stage, and the aggregate
+    adds no exchange of its own (SCALE.md §1).  The exchange is
+    ``repartition("doc_id")``, which adaptive execution may coalesce,
+    so a small corpus still aggregates in one task.
+
+    A relation already hash-partitioned on doc_id alone — what
+    ``load_table`` returns for documents of 128 KB or more — is
+    returned unchanged: a second repartition would collapse into the
+    first and drop its partition count.
+    """
+    part = docs._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if re.fullmatch(r"hashpartitioning\(doc_id#\d+L?, \d+\)", part.toString()):
+        return docs
+    return docs.repartition("doc_id")
 
 
 def shingle_postings(

@@ -385,7 +385,7 @@ def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -
 
 def delete_from_parquet(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     keys: DataFrame,
     key_cols: list[str],
 ) -> None:
@@ -394,18 +394,24 @@ def delete_from_parquet(
     pruning) plain parquet lacks.  Anti-join + staged swap, same
     non-atomic-rename caveat and idempotency as the unpartitioned
     ``upsert_parquet`` mode; deleting keys that are absent is a no-op.
+
+    ``path`` may list several tables that share the key columns: the
+    distinct key set is materialized once and every table is rewritten
+    from it, in list order.
     """
     # Scheme-resolved probe: os.path.exists on a remote URI is always
     # False, which silently turned takedown deletes into no-ops there
     # (VERDICT r10 #3).
-    if not fs_exists(spark, path):
+    paths = [path] if isinstance(path, str) else path
+    paths = [p for p in paths if fs_exists(spark, p)]
+    if not paths:
         return
     keys = keys.select(*key_cols).distinct().localCheckpoint(eager=True)
-    existing = spark.read.parquet(path)
-    remaining = existing.join(keys, key_cols, "left_anti")
-    staging = path.rstrip("/") + "__staging"
-    remaining.write.mode("overwrite").parquet(staging)
-    _swap_staging(spark, path, staging)
+    for p in paths:
+        remaining = spark.read.parquet(p).join(keys, key_cols, "left_anti")
+        staging = p.rstrip("/") + "__staging"
+        remaining.write.mode("overwrite").parquet(staging)
+        _swap_staging(spark, p, staging)
 
 
 def apply_cdc(

@@ -837,3 +837,46 @@ def test_band_store_rejects_mismatched_signature_spec(spark, golden_docs, tmp_pa
         build_band_store(new, rotated, store)
     # the matching cfg still works
     assert cross_pairs_against_store(new, oph, store).count() >= 0
+
+
+def test_flagship_merges_a_doc_id_split_across_partitions(spark):
+    """similar_pairs' signature aggregate groups the shingles of every
+    row that shares a doc_id, wherever the rows sit.  Doc 0 arrives as
+    two rows in different input partitions; the result must equal that
+    of a relation holding doc 0 as one row with the merged shingle set.
+    The halves overlap by k-1 characters, so joining them there makes
+    no shingle that neither half has (checked below)."""
+    import random
+
+    rng = random.Random(3)
+    words = ["ash", "oak", "elm", "fir", "yew", "maple", "birch", "cedar"]
+
+    def text(n):
+        return " ".join(rng.choice(words) for _ in range(n))
+
+    # shingles are right-padded at the text's end, so both halves also
+    # end like the merged text does ("...e" -> "e  ")
+    head, tail = text(10) + " pine", "ne " + text(10) + " maple"
+    whole = head + tail[2:]
+    assert set(shingles_py(whole, 3)) == set(shingles_py(head, 3)) | set(
+        shingles_py(tail, 3)
+    )
+    others = [(i, text(12)) for i in range(2, 30)]
+    others += [(1, whole.replace(" oak", " elm", 1) + " x")]
+    cfg = MinHashLSHConfig(num_hashes=32, num_bands=8, threshold=0.5, seed=5,
+                           id_strategy="md5")
+    split = spark.sparkContext.parallelize([(0, head)] + others + [(0, tail)], 2)
+    docs = spark.createDataFrame(split, ["doc_id", "text"])
+    parts = docs.rdd.glom().map(lambda rows: {r.doc_id for r in rows}).collect()
+    assert 0 in parts[0] and 0 in parts[1]
+    merged = spark.createDataFrame([(0, whole)] + others, ["doc_id", "text"])
+
+    def rows(df):
+        return sorted(
+            (r.doc_id_a, r.doc_id_b, r.jaccard)
+            for r in similar_pairs(df, cfg).collect()
+        )
+
+    want = rows(merged)
+    assert (0, 1) in {(a, b) for a, b, _ in want}
+    assert rows(docs) == want

@@ -379,3 +379,151 @@ def test_batched_signature_aggregate_plan_and_values_match_r14_form(spark):
     assert norm(old_df) == norm(new_df)
     key = lambda r: (r.doc_id, tuple(r.sig), tuple(sorted(r.sh_set)))  # noqa: E731
     assert sorted(map(key, old_df.collect())) == sorted(map(key, new_df.collect()))
+
+
+class _Captured(Exception):
+    pass
+
+
+def _signature_aggregate(monkeypatch, build):
+    """The lazy (sig, sh_set) aggregate ``build()`` hands to its first
+    materialization, captured before anything runs."""
+    from mapreduce_minhash_lsh_spark.operators import similarity
+
+    seen = []
+
+    def capture(df, *args, **kwargs):
+        seen.append(df)
+        raise _Captured
+
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_materialize", capture)
+        try:
+            build()
+        except _Captured:
+            pass
+    assert seen, "build() never materialized a relation"
+    return seen[0]
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _physical_plan(df):
+    p = df._jdf.queryExecution().executedPlan()
+    return p.inputPlan() if p.nodeName() == "AdaptiveSparkPlan" else p
+
+
+def _normalized_plan(spark, df) -> str:
+    import re
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    s = df._jdf.queryExecution().explainString(mode)
+    s = re.sub(r"#\d+L?", "#X", s)
+    # lambda variables are numbered by a process-wide counter
+    s = re.sub(r"\bx_\d+\b", "x_X", s)
+    return re.sub(r"plan_id=\d+", "plan_id=X", s)
+
+
+def test_signature_aggregate_shuffles_text_not_partials(spark, monkeypatch):
+    """On a one-file documents relation under load_table's 128 KB gate
+    (the benchmark corpora's shape), similar_pairs hashes the TEXT by
+    doc_id ahead of the explode, so the fused (sig, sh_set) aggregate
+    runs in the explode's stage: exactly one Exchange, below the
+    Generate, carrying (doc_id, text) — none between the Generate and
+    the aggregate, where the per-shingle partials (~8 B per shingle
+    against ~1 B per character of text) would otherwise cross."""
+    import os
+
+    from mapreduce_minhash_lsh_spark.operators.similarity import similar_pairs
+
+    assert os.path.getsize(f"{SF_SMALL}/documents.parquet") < 128 * 1024
+    docs = load_table(spark, SF_SMALL, "documents")
+    agg = _signature_aggregate(
+        monkeypatch, lambda: similar_pairs(docs, registry.PIPELINE_CFG)
+    )
+    nodes = list(_plan_nodes(_physical_plan(agg)))
+    exchanges = [n for n in nodes if "Exchange" in n.nodeName()]
+    assert len(exchanges) == 1, [n.nodeName() for n in nodes]
+    (gen,) = [n for n in nodes if n.nodeName() == "Generate"]
+    below_gen = [n for n in _plan_nodes(gen) if "Exchange" in n.nodeName()]
+    assert len(below_gen) == 1, gen.toString()
+    (ex,) = below_gen
+    out = ex.output()
+    assert [out.apply(i).name() for i in range(out.size())] == ["doc_id", "text"]
+    assert "hashpartitioning(doc_id#" in ex.toString(), ex.toString()
+
+
+def test_signature_aggregate_plan_unchanged_on_hash_partitioned_docs(
+    spark, monkeypatch, tmp_path
+):
+    """Documents of 128 KB or more come out of load_table already
+    hash-partitioned on doc_id (ensure_min_partitions), and similar_pairs
+    must leave them as they are: a second repartition would collapse
+    into the loader's and let adaptive execution coalesce the
+    signature pass to one task.  The aggregate's plan is byte-identical
+    (modulo expression and plan ids) to the one built straight from
+    ``explode_shingles(docs)``."""
+    import random
+
+    from mapreduce_minhash_lsh_spark.operators.shingling import (
+        by_doc_id,
+        explode_shingles,
+    )
+    from mapreduce_minhash_lsh_spark.operators.similarity import (
+        signature_set_relation,
+        similar_pairs,
+    )
+
+    rng = random.Random(7)
+    words = [f"w{i:03d}" for i in range(400)]
+    rows = [
+        (i, " ".join(rng.choice(words) for _ in range(40))) for i in range(3000)
+    ]
+    spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    docs = load_table(spark, str(tmp_path), "documents")
+    assert by_doc_id(docs) is docs, "corpus must pass load_table's 128 KB gate"
+    cfg = registry.PIPELINE_CFG
+    new = _signature_aggregate(monkeypatch, lambda: similar_pairs(docs, cfg))
+    old = _signature_aggregate(
+        monkeypatch,
+        lambda: signature_set_relation(
+            explode_shingles(docs, cfg.k), cfg, None, eager=False
+        ),
+    )
+    assert _normalized_plan(spark, new) == _normalized_plan(spark, old)
+
+
+def test_near_dup_drop_ids_job_budget(spark, monkeypatch):
+    """Per-query budget for ``near_dup_drop_ids`` at sf0.01: no more
+    Spark jobs and less shuffle than before the signature pass shuffled
+    the text instead of the aggregate's partials.  Measured before that
+    change: 19 jobs, 1,095,881 shuffle bytes; after: 19 jobs, 753,539
+    bytes.  defaultParallelism (the edge partition count of
+    near_dup_groups) is pinned, and the one-file documents table is
+    checked to load as one partition, so the counts do not depend on
+    the machine's core count."""
+    import os
+
+    from pyspark import SparkContext
+
+    from tests.conftest import job_counters
+
+    sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 4))
+    assert load_table(spark, sf, "documents").rdd.getNumPartitions() == 1
+    q = registry.queries()["near_dup_drop_ids"]
+    jobs, shuffle = job_counters(
+        spark,
+        lambda: q(spark, sf).write.format("noop").mode("overwrite").save(),
+    )
+    assert jobs <= 19, jobs
+    assert shuffle < 1_095_881, shuffle
