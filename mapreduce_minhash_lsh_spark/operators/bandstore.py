@@ -12,7 +12,10 @@ read them:
                                           join only ever needs the ids)
       signatures/    (doc_id, sig)        array<long> signatures under
                                           cfg.sig_strategy
-      bands/         (doc_id, band, band_key)   60-bit band keys
+      bands/         (doc_id, band, band_key)   60-bit md5 band keys
+                                          (``lsh.compact_band_keys``,
+                                          whatever cfg.band_key_strategy
+                                          says)
 
 ``build_band_store`` is also the EXTEND and RE-INGEST operation, keyed
 on doc_id: one probe finds the batch ids already stored, only those are
@@ -30,7 +33,14 @@ shingling and signatures, the band equi-join over one scan of the
 store's band table, and the store's ``shingle_ids``/``signatures`` rows
 of CANDIDATE documents only — those two tables are pruned to the
 candidate ids before any exchange.  The band table is the only store
-table an ingest reads whole.
+table an ingest reads whole.  Verification is the flagship's own core:
+``similarity.candidate_payload`` builds both sides' payloads,
+``similarity.fused_overlap_counts`` joins them to the candidates and
+``similarity.jaccard`` scores the counts.
+
+Stores need map-side shingle ids ('md5' or 'xxhash' ``id_strategy``):
+'rank' ids are ranks in each batch's own vocabulary, so stored and new
+signatures would not agree, and the store refuses such a cfg.
 
 At 100 TB the store is the expensive-to-recompute asset: signatures are
 N x n_hashes longs and bands N x n_bands rows — both tiny next to the
@@ -53,7 +63,10 @@ from mapreduce_minhash_lsh_spark.operators.minhash import (
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     _materialize,
+    candidate_ids,
+    candidate_payload,
     fused_overlap_counts,
+    jaccard,
 )
 from mapreduce_minhash_lsh_spark.sources.fs import fs_exists
 from mapreduce_minhash_lsh_spark.sources.tables import delete_from_parquet
@@ -80,7 +93,15 @@ def _check_or_write_spec(
     rotation->optimal densify default change — would silently
     under-match instead of erroring.  Fail fast instead.  An OPH store
     without the ``minhash.OPH_FORMAT`` marker is refused with a rebuild
-    message: its signatures are affine."""
+    message: its signatures are affine.  A cfg with ``id_strategy``
+    'rank' is refused outright: its ids are ranks in each batch's own
+    vocabulary, so no two batches' signatures agree."""
+    if cfg.id_strategy == "rank":
+        raise ValueError(
+            "band store: id_strategy 'rank' numbers shingles by each "
+            "batch's own vocabulary, so stored and new signatures never "
+            "agree; use id_strategy 'md5' or 'xxhash'."
+        )
     spec, legacy = recorded_spec(cfg, "store_format")
     spec_path = f"{store_dir}/_spec"
     if _spec_exists(spark, spec_path):
@@ -182,20 +203,6 @@ def load_band_store(
     )
 
 
-def _candidate_payload(
-    ids: DataFrame, sig: DataFrame, sids: DataFrame
-) -> DataFrame:
-    """(doc_id, sig, sh_set) for the candidate documents in ``ids`` only:
-    the broadcast ids are semi-joined into ``sig`` and ``sids``
-    map-side, so only candidate documents' rows reach an exchange."""
-    sets = (
-        sids.join(ids, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("sid").alias("sh_set"))
-    )
-    return sig.join(ids, "doc_id", "left_semi").join(sets, "doc_id")
-
-
 def cross_pairs_against_store(
     new_docs: DataFrame,
     cfg: MinHashLSHConfig,
@@ -236,40 +243,24 @@ def cross_pairs_against_store(
             ),
             checkpoint_dir,
         )
-        sids_new = sh_new.select(
-            "doc_id", md5_long(F.col("shingle")).alias("sid")
-        )
         # Both sides' distinct candidate ids in one broadcast, reused by
         # all four semi-joins.  The hint is explicit because a
         # materialized candidate list carries no size statistics
         # (``_reset_stats``), so the planner would otherwise shuffle
         # both sides whole.
-        ids = F.broadcast(
-            cands.select(F.col("doc_id_a").alias("doc_id"))
-            .union(cands.select(F.col("doc_id_b").alias("doc_id")))
-            .distinct()
-        )
+        ids = F.broadcast(candidate_ids(cands))
         counts = fused_overlap_counts(
             cands,
-            _candidate_payload(ids, sig_new, sids_new),
+            candidate_payload(ids, sh_new, sig_new),
             cfg,
             threshold,
             checkpoint_dir,
-            rel_b=_candidate_payload(ids, sig_seen, sids_seen),
+            rel_b=candidate_payload(ids, sids_seen, sig_seen),
         )
     finally:
         sh_new.unpersist()
-    return (
-        counts.where(F.col("nc") > 0)
-        .select(
-            F.col("doc_id_a").alias("new_id"),
-            F.col("doc_id_b").alias("seen_id"),
-            (
-                F.col("nc").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("nc"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return jaccard(counts, threshold).withColumnsRenamed(
+        {"doc_id_a": "new_id", "doc_id_b": "seen_id"}
     )
 
 

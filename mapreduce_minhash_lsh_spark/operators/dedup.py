@@ -19,8 +19,8 @@ from mapreduce_minhash_lsh_spark.operators.shingling import by_doc_id, explode_s
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     PAIR_VERIFY_BUDGET,
     _materialize,
-    _reset_stats,
     exact_jaccard,
+    jaccard,
 )
 
 
@@ -142,10 +142,11 @@ def near_dup_groups(
             # The observe() metric rides the eager-checkpoint job itself:
             # exactly ONE action (and one scan) per propagation round.
             obs = Observation()
-            labels = _reset_stats(
+            labels = _materialize(
                 step.observe(
                     obs, F.sum(F.col("_changed").cast("long")).alias("n_changed")
-                ).localCheckpoint(eager=True)
+                ),
+                None,
             ).drop("_changed")
             if int(obs.get["n_changed"] or 0) == 0:
                 return labels
@@ -165,7 +166,7 @@ def near_dup_groups(
                 lookup = labels.select(
                     F.col("doc_id").alias("_g"), F.col("group_id").alias("_gg")
                 )
-                labels = _reset_stats(
+                labels = _materialize(
                     labels.join(lookup, labels.group_id == lookup._g, "left")
                     .select(
                         "doc_id",
@@ -173,8 +174,8 @@ def near_dup_groups(
                             F.col("group_id"),
                             F.coalesce(F.col("_gg"), F.col("group_id")),
                         ).alias("group_id"),
-                    )
-                    .localCheckpoint(eager=True)
+                    ),
+                    None,
                 )
             neighbor_min = (
                 edges.join(labels, edges.doc_id_b == labels.doc_id)
@@ -280,7 +281,6 @@ def similar_groups(
     from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig  # noqa: F401
     from mapreduce_minhash_lsh_spark.operators.lsh import banded_pairs
     from mapreduce_minhash_lsh_spark.operators.similarity import (
-        _materialize,
         fused_overlap_counts,
         signature_prefilter,
         signature_set_relation,
@@ -320,11 +320,7 @@ def similar_groups(
     # pin both paths equal).
     if direct_verify_budget is not None and n_edges <= direct_verify_budget:
         counts = fused_overlap_counts(edges, rel, cfg, threshold, checkpoint_dir)
-        verified = counts.where(F.col("nc") > 0).where(
-            F.col("nc").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("nc"))
-            >= threshold
-        ).select("doc_id_a", "doc_id_b")
+        verified = jaccard(counts, threshold).select("doc_id_a", "doc_id_b")
         # every endpoint of a verified edge is in a >= 2-doc component,
         # so near_dup_groups' labels are exactly this operator's output.
         return near_dup_groups(verified, max_iter=max_iter)
@@ -422,11 +418,7 @@ def similar_groups(
                 n_reps = n_live
                 exhaustive = True
         counts = fused_overlap_counts(reps, rel, cfg, threshold, checkpoint_dir)
-        verified = counts.where(F.col("nc") > 0).where(
-            F.col("nc").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("nc"))
-            >= threshold
-        ).select("doc_id_a", "doc_id_b")
+        verified = jaccard(counts, threshold).select("doc_id_a", "doc_id_b")
         # Contract: components over the (tiny) component graph of the
         # verified representative edges, then relabel every doc.
         # Materialized (near_dup_groups reads it once per edge

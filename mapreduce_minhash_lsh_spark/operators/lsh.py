@@ -16,11 +16,12 @@ parallelized instead of serialized into one reducer.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
-from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 
 
 def band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
@@ -55,32 +56,29 @@ def band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
 
 
 def compact_band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """``band_keys`` with the key bucketed to a 60-bit md5 long.
-
-    The comma-joined band key is ~10 chars per minhash value (~170 B at
-    r=16); the bucket self-join shuffles and hash-probes it once per
-    band row, and at the 10x probe that string handling was most of the
-    join's 3.6 s.  Hashing the key to the 60-bit md5 prefix (same parse
-    the DuckDB oracle replays — functions/hashing.py:md5_id) cuts the
-    key to 8 B.  A 60-bit collision would only ADD a candidate pair
-    (p ~ n_buckets^2/2^61 — vanishing), and every candidate still passes
-    exact verification, so the pipeline result is unchanged; the oracle
-    buckets on the identical hash, so even the candidate list stays
-    bit-exact across engines.
-    """
-    bk = band_keys(signatures, cfg)
-    return bk.select(
-        "doc_id", "band", md5_long(F.col("band_key")).alias("band_key")
-    )
+    """:func:`bands_for` with 'md5' keys whatever ``cfg.band_key_strategy``
+    says — the format band stores and streaming state persist.  Stores
+    have always held md5 keys while recording the cfg's
+    band_key_strategy in their spec, so a spec naming 'xxhash' cannot
+    tell an older store from a newer one; md5 keeps every store
+    readable."""
+    return bands_for(signatures, replace(cfg, band_key_strategy="md5"))
 
 
 def bands_for(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """(doc_id, band, band_key) under ``cfg.band_key_strategy``: 'md5'
-    (engine-portable, oracle-checkable — default; the same keys as
-    :func:`compact_band_keys`) or 'xxhash' (one xxhash64 over the band
-    index and its r minhash longs — no string build, no md5; cheapest,
-    production).  A 64-bit collision only ADDs a candidate pair, which
-    exact verification then scores."""
+    """(doc_id, band, band_key) under ``cfg.band_key_strategy``.
+
+    'md5' (engine-portable, oracle-checkable — the default): the 60-bit
+    md5 prefix of :func:`band_keys`' comma-joined string key.  That
+    string is ~10 chars per minhash value (~170 B at r=16), and at the
+    10x probe its handling was most of the band join's 3.6 s; the md5
+    prefix (the parse the DuckDB oracle replays —
+    functions/hashing.py:md5_long) cuts the key to 8 B, and the oracle
+    buckets on the identical hash, so the candidate list stays bit-exact
+    across engines.  'xxhash': one xxhash64 over the band index and its
+    r minhash longs — no string build, no md5; cheapest, production.  A
+    collision only ADDs a candidate pair, which exact verification then
+    scores."""
     return signatures.select(
         "doc_id", F.posexplode(_key_array(signatures, cfg)).alias("band", "band_key")
     )

@@ -171,18 +171,7 @@ def exact_jaccard(
     (operators/bandstore.py) persists the 8-byte ids rather than the
     strings, and the derivation here is a no-op for it.
     """
-    counts = pair_overlap_counts(pairs, doc_shingles, checkpoint_dir)
-    return (
-        counts.select(
-            "doc_id_a",
-            "doc_id_b",
-            (
-                F.col("nc").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("nc"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") > 0)
-    )
+    return jaccard(pair_overlap_counts(pairs, doc_shingles, checkpoint_dir))
 
 
 def pair_overlap_counts(
@@ -192,51 +181,74 @@ def pair_overlap_counts(
 ) -> DataFrame:
     """(doc_id_a, doc_id_b, nc, na, nb): exact shingle-set intersection
     and set sizes per candidate pair — the shared core of every
-    set-overlap measure (Jaccard in :func:`exact_jaccard`, containment
-    in :func:`containment_pairs`).  Plan shape documented on
+    set-overlap measure (:func:`jaccard`, :func:`containment`).  The
+    candidate documents' sets (:func:`candidate_payload`) go through
+    :func:`fused_overlap_counts`, which applies no prefilter to a
+    payload without signatures.  Plan shape documented on
     exact_jaccard; the returned relation is already materialized."""
-    if "sid" in doc_shingles.columns:
-        ids = doc_shingles.select("doc_id", "sid")
-    else:
-        ids = doc_shingles.select(
-            "doc_id", md5_long(F.col("shingle")).alias("sid")
-        )
-    cand_docs = (
+    payload = candidate_payload(candidate_ids(pairs), doc_shingles)
+    return fused_overlap_counts(pairs, payload, None, None, checkpoint_dir)
+
+
+def candidate_ids(pairs: DataFrame) -> DataFrame:
+    """(doc_id): the distinct documents a candidate list names on
+    either side."""
+    return (
         pairs.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_id_b").alias("doc_id")))
         .distinct()
     )
+
+
+def candidate_payload(
+    ids: DataFrame, doc_shingles: DataFrame, sig: DataFrame | None = None
+) -> DataFrame:
+    """(doc_id, [sig,] sh_set) for the documents in ``ids`` only — the
+    one builder of verify payloads outside the fused signature
+    aggregate.  ``ids`` is semi-joined into the (doc_id, shingle | sid)
+    relation, and into ``sig`` when given, before the set aggregate, so
+    only candidate documents' rows reach an exchange (map-side when the
+    caller broadcasts ``ids``).  Set ids are the 60-bit md5 ids of
+    exact_jaccard unless ``doc_shingles`` already carries ``sid``."""
+    if "sid" in doc_shingles.columns:
+        sids = doc_shingles.select("doc_id", "sid")
+    else:
+        sids = doc_shingles.select(
+            "doc_id", md5_long(F.col("shingle")).alias("sid")
+        )
     sets = (
-        ids.join(cand_docs, "doc_id", "left_semi")
+        sids.join(ids, "doc_id", "left_semi")
         .groupBy("doc_id")
         .agg(F.collect_set("sid").alias("sh_set"))
     )
-    sa = sets.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("sh_set").alias("set_a")
+    if sig is None:
+        return sets
+    return sig.join(ids, "doc_id", "left_semi").join(sets, "doc_id")
+
+
+def jaccard(counts: DataFrame, threshold: float | None = None) -> DataFrame:
+    """(doc_id_a, doc_id_b, nc, na, nb) -> (doc_id_a, doc_id_b, jaccard)
+    for the pairs that share a shingle (nc > 0, which also drops the
+    prefilter-rejected nc = -1), kept at ``jaccard >= threshold`` when
+    a threshold is given."""
+    j = F.col("nc").cast("double") / (F.col("na") + F.col("nb") - F.col("nc"))
+    out = counts.where(F.col("nc") > 0).select(
+        "doc_id_a", "doc_id_b", j.alias("jaccard")
     )
-    sb = sets.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("sh_set").alias("set_b")
+    return out if threshold is None else out.where(F.col("jaccard") >= threshold)
+
+
+def containment(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id_a, doc_id_b, nc, na, nb) -> (doc_id_a, doc_id_b,
+    containment = nc / min(na, nb)) at ``containment >= threshold`` —
+    the asymmetric twin of :func:`jaccard`; prefilter-rejected pairs
+    (nc = -1) are dropped."""
+    c = F.col("nc").cast("double") / F.least("na", "nb")
+    return (
+        counts.where(F.col("nc") >= 0)
+        .select("doc_id_a", "doc_id_b", c.alias("containment"))
+        .where(F.col("containment") >= threshold)
     )
-    n_common = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    # Materialize (nc, na, nb) BEFORE deriving jaccard: a caller's
-    # threshold filter on the derived column gets pushed below the
-    # projection by substitution, and with array_intersect outside
-    # whole-stage CSE the intersection would be re-evaluated once per
-    # reference (measured 3x = 6.4 s -> 0.3 s at 552k pairs).  The
-    # checkpointed relation is 5 scalars per candidate pair — the same
-    # size class as the candidate list itself, bounded at any scale.
-    counts = (
-        pairs.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            n_common.alias("nc"),
-            F.size("set_a").alias("na"),
-            F.size("set_b").alias("nb"),
-        )
-    )
-    return _materialize(counts, checkpoint_dir)
 
 
 def signature_set_relation(
@@ -373,55 +385,73 @@ def _sig_set_from_base(
         F.expr(f"array({mins}) AS sig"),
         F.expr("collect_set(sid) AS sh_set"),
     )
-    return _materialize(rel, checkpoint_dir)
+    return _materialize(rel, checkpoint_dir, eager)
 
 
-def fused_overlap_counts(
-    pairs: DataFrame,
-    rel: DataFrame,
-    cfg: MinHashLSHConfig,
-    threshold: float,
-    checkpoint_dir: str | None = None,
-    rel_b: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id_a, doc_id_b, nc, na, nb) with the signature-agreement
-    prefilter FUSED into the verify join: one pair of joins attaches
-    (sig, sh_set) payloads, the integer agreement cutoff is evaluated
-    first, and ``array_intersect`` runs only on survivors (nc = -1
-    marks prefilter-rejected pairs).  Versus the two-stage form this
-    saves two joins over the candidate list and one materialization
-    barrier; the exact-verification semantics (EST_SLACK cutoff, md5-id
-    intersection) are unchanged.  Materialized for the same
-    re-evaluation reason as pair_overlap_counts.
-
-    ``rel_b``: optional separate payload relation for the doc_id_b side
-    (asymmetric joins — cross-corpus: a-side is always the new corpus,
-    b-side the seen corpus, so neither join scans the other's docs)."""
-    if rel_b is None:
-        rel_b = rel
-    cut = min_agree(cfg, threshold)
-    pa = rel.select(
-        F.col("doc_id").alias("doc_id_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("sh_set").alias("set_a"),
-    )
-    pb = rel_b.select(
-        F.col("doc_id").alias("doc_id_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("sh_set").alias("set_b"),
-    )
+def _agreement(cut: int):
+    """Column: ``sig_a`` and ``sig_b`` agree at >= ``cut`` positions —
+    the signature-agreement prefilter (``cut`` from :func:`min_agree`)
+    shared by :func:`signature_prefilter` and
+    :func:`fused_overlap_counts`."""
     agree = F.size(
         F.filter(
             F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
             lambda m: m,
         )
     )
-    nc = F.when(
-        agree >= cut, F.size(F.array_intersect("set_a", "set_b"))
-    ).otherwise(F.lit(-1))
+    return agree >= cut
+
+
+def fused_overlap_counts(
+    pairs: DataFrame,
+    rel: DataFrame,
+    cfg: MinHashLSHConfig | None,
+    threshold: float | None,
+    checkpoint_dir: str | None = None,
+    rel_b: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, nc, na, nb): the one pair x payload verify
+    join.  One pair of joins attaches each side's (doc_id, [sig,]
+    sh_set) payload.  When the payload carries ``sig``, the
+    signature-agreement prefilter is FUSED in: the integer cutoff is
+    evaluated first and ``array_intersect`` runs only on survivors
+    (nc = -1 marks prefilter-rejected pairs).  Versus the two-stage form
+    this saves two joins over the candidate list and one materialization
+    barrier; the exact-verification semantics (EST_SLACK cutoff, md5-id
+    intersection) are unchanged.  Without ``sig``
+    (:func:`pair_overlap_counts`) every pair is intersected, and ``cfg``
+    and ``threshold`` are unused.
+
+    ``rel_b``: optional separate payload relation for the doc_id_b side
+    (asymmetric joins — cross-corpus: a-side is always the new corpus,
+    b-side the seen corpus, so neither join scans the other's docs)."""
+    if rel_b is None:
+        rel_b = rel
+    has_sig = "sig" in rel.columns
+
+    def side(r: DataFrame, s: str) -> DataFrame:
+        sig = [F.col("sig").alias(f"sig_{s}")] if has_sig else []
+        return r.select(
+            F.col("doc_id").alias(f"doc_id_{s}"),
+            *sig,
+            F.col("sh_set").alias(f"set_{s}"),
+        )
+
+    nc = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
+    if has_sig:
+        nc = F.when(_agreement(min_agree(cfg, threshold)), nc).otherwise(
+            F.lit(-1)
+        )
+    # Materialize (nc, na, nb) BEFORE any caller derives a measure: a
+    # threshold filter on the derived column gets pushed below the
+    # projection by substitution, and with array_intersect outside
+    # whole-stage CSE the intersection would be re-evaluated once per
+    # reference (measured 3x = 6.4 s -> 0.3 s at 552k pairs).  The
+    # checkpointed relation is 5 scalars per candidate pair — the same
+    # size class as the candidate list itself, bounded at any scale.
     counts = (
-        pairs.join(pa, "doc_id_a")
-        .join(pb, "doc_id_b")
+        pairs.join(side(rel, "a"), "doc_id_a")
+        .join(side(rel_b, "b"), "doc_id_b")
         .select(
             "doc_id_a",
             "doc_id_b",
@@ -707,18 +737,7 @@ def similar_pairs_from_shingles(
         rel, cfg, threshold, checkpoint_dir, pair_budget, max_bucket_size,
         oversize, auto_split_threshold,
     )
-    return (
-        counts.where(F.col("nc") > 0)
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            (
-                F.col("nc").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("nc"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return jaccard(counts, threshold)
 
 
 def signature_prefilter(
@@ -760,16 +779,10 @@ def signature_prefilter(
         arr = F.transform(arr, lambda x: x.cast("int"))
     sa = signatures.select(F.col("doc_id").alias("doc_id_a"), arr.alias("sig_a"))
     sb = signatures.select(F.col("doc_id").alias("doc_id_b"), arr.alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda b: b,
-        )
-    )
     return (
         pairs.join(sa, "doc_id_a")
         .join(sb, "doc_id_b")
-        .where(agree >= cut)
+        .where(_agreement(cut))
         .select("doc_id_a", "doc_id_b")
     )
 
@@ -839,17 +852,8 @@ def cross_corpus_pairs(
         rel_new, cfg, threshold, checkpoint_dir, pair_budget, max_bucket_size,
         "drop", None, rel_b=rel_seen,
     )
-    return (
-        counts.where(F.col("nc") > 0)
-        .select(
-            F.col("doc_id_a").alias("new_id"),
-            F.col("doc_id_b").alias("seen_id"),
-            (
-                F.col("nc").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("nc"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return jaccard(counts, threshold).withColumnsRenamed(
+        {"doc_id_a": "new_id", "doc_id_b": "seen_id"}
     )
 
 
@@ -896,15 +900,7 @@ def containment_pairs(
         rel, cfg, cfg.threshold, checkpoint_dir, pair_budget, max_bucket_size,
         oversize, None,
     )
-    return (
-        counts.where(F.col("nc") >= 0)
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            (F.col("nc").cast("double") / F.least("na", "nb")).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
+    return containment(counts, threshold)
 
 
 def containment_pairs_postings(
@@ -961,8 +957,4 @@ def containment_pairs_postings(
         counts = pair_overlap_counts(cands, sh, checkpoint_dir)
     finally:
         sh.unpersist()
-    return counts.select(
-        "doc_id_a",
-        "doc_id_b",
-        (F.col("nc").cast("double") / F.least("na", "nb")).alias("containment"),
-    ).where(F.col("containment") >= threshold)
+    return containment(counts, threshold)

@@ -1,6 +1,7 @@
 """Band-store ingest: cache release, store-size independence of the
-query's shuffle and of the extend's, crash reruns of the extend, and OPH
-signatures in the store."""
+query's shuffle and of the extend's, crash reruns of the extend, OPH
+signatures in the store, the stored band-key format and the refusal of
+'rank' ids."""
 
 from __future__ import annotations
 
@@ -16,10 +17,12 @@ from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
+from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.bandstore import (
     build_band_store,
     cross_pairs_against_store,
 )
+from mapreduce_minhash_lsh_spark.operators.lsh import band_keys
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
 from mapreduce_minhash_lsh_spark.operators.similarity import (
     cross_corpus_pairs,
@@ -286,3 +289,44 @@ def test_legacy_oph_band_store_is_refused(spark, tmp_path):
             new, dataclasses.replace(cfg, sig_strategy="affine"), store
         )
     assert spark.read.parquet(f"{store}/_spec").first().spec == legacy
+
+
+@pytest.mark.parametrize("band_key_strategy", ["md5", "xxhash"])
+def test_store_band_keys_are_md5_of_string_keys(spark, tmp_path, band_key_strategy):
+    """Whatever ``band_key_strategy`` says, the stored band keys are the
+    60-bit md5 of ``lsh.band_keys``' comma-joined string keys — the
+    format every store has held — and the store query still equals the
+    recomputing cross-corpus join under the same cfg."""
+    cfg = dataclasses.replace(CFG, band_key_strategy=band_key_strategy)
+    seen, new = _corpus(spark, 40)
+    store = str(tmp_path / "store")
+    build_band_store(seen, cfg, store)
+
+    def rows(df) -> list[tuple]:
+        return sorted((r.doc_id, r.band, r.band_key) for r in df.collect())
+
+    strings = band_keys(spark.read.parquet(f"{store}/signatures"), cfg)
+    want_bands = strings.select(
+        "doc_id", "band", md5_long(F.col("band_key")).alias("band_key")
+    )
+    assert rows(spark.read.parquet(f"{store}/bands")) == rows(want_bands)
+
+    want = _rows(cross_corpus_pairs(new, seen, cfg))
+    assert len(want) >= 10
+    assert _rows(cross_pairs_against_store(new, cfg, store)) == want
+
+
+def test_rank_ids_are_refused(spark, tmp_path):
+    """'rank' ids number shingles by each batch's own vocabulary, so a
+    store's signatures never agree with a new batch's: building or
+    querying a store under them fails and names the map-side id
+    strategies, before anything is written."""
+    rank = dataclasses.replace(CFG, id_strategy="rank")
+    seen, new = _corpus(spark, 10)
+    store = tmp_path / "store"
+    with pytest.raises(ValueError, match="'md5' or 'xxhash'"):
+        build_band_store(seen, rank, str(store))
+    assert not store.exists()
+    build_band_store(seen, CFG, str(store))
+    with pytest.raises(ValueError, match="'md5' or 'xxhash'"):
+        cross_pairs_against_store(new, rank, str(store))

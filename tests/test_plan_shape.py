@@ -502,15 +502,12 @@ def test_signature_aggregate_plan_unchanged_on_hash_partitioned_docs(
     assert _normalized_plan(spark, new) == _normalized_plan(spark, old)
 
 
-def test_near_dup_drop_ids_job_budget(spark, monkeypatch):
-    """Per-query budget for ``near_dup_drop_ids`` at sf0.01: no more
-    Spark jobs and less shuffle than before the signature pass shuffled
-    the text instead of the aggregate's partials.  Measured before that
-    change: 19 jobs, 1,095,881 shuffle bytes; after: 19 jobs, 753,539
-    bytes.  defaultParallelism (the edge partition count of
-    near_dup_groups) is pinned, and the one-file documents table is
-    checked to load as one partition, so the counts do not depend on
-    the machine's core count."""
+def _sf001_jobs(spark, monkeypatch, name: str) -> tuple[int, int]:
+    """(jobs, shuffle bytes) of registered query ``name`` at sf0.01.
+    defaultParallelism (the edge partition count of near_dup_groups) is
+    pinned, and the one-file documents table is checked to load as one
+    partition, so the counts do not depend on the machine's core
+    count."""
     import os
 
     from pyspark import SparkContext
@@ -520,10 +517,36 @@ def test_near_dup_drop_ids_job_budget(spark, monkeypatch):
     sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 4))
     assert load_table(spark, sf, "documents").rdd.getNumPartitions() == 1
-    q = registry.queries()["near_dup_drop_ids"]
-    jobs, shuffle = job_counters(
+    q = registry.queries()[name]
+    return job_counters(
         spark,
         lambda: q(spark, sf).write.format("noop").mode("overwrite").save(),
     )
-    assert jobs <= 19, jobs
+
+
+def test_near_dup_drop_ids_job_budget(spark, monkeypatch):
+    """Per-query budget for ``near_dup_drop_ids`` at sf0.01: no more
+    Spark jobs and less shuffle than before the signature pass shuffled
+    the text instead of the aggregate's partials.  Measured before that
+    change: 19 jobs, 1,095,881 shuffle bytes; after: 19 jobs, 753,539
+    bytes; 18 jobs once the lazily checkpointed affine signature
+    relation is materialized by the valve's first count instead of a
+    job of its own."""
+    jobs, shuffle = _sf001_jobs(spark, monkeypatch, "near_dup_drop_ids")
+    assert jobs <= 18, jobs
     assert shuffle < 1_095_881, shuffle
+
+
+def test_similar_pairs_job_budget(spark, monkeypatch):
+    """Per-query budget for ``similar_pairs`` at sf0.01: measured 9 jobs
+    (10 while the affine signature relation took a job of its own)."""
+    jobs, _ = _sf001_jobs(spark, monkeypatch, "similar_pairs")
+    assert jobs <= 9, jobs
+
+
+def test_containment_pairs_job_budget(spark, monkeypatch):
+    """Per-query budget for ``containment_pairs`` at sf0.01: measured 9
+    jobs (10 while the affine signature relation took a job of its
+    own)."""
+    jobs, _ = _sf001_jobs(spark, monkeypatch, "containment_pairs")
+    assert jobs <= 9, jobs
