@@ -9,9 +9,10 @@ densification-quality signal) and wall-clock.
     python3 experiments/oph_probe.py [REPLICAS=10]         # short-doc corpus
     python3 experiments/oph_probe.py --long-docs           # k=5, m >> n regime
 
-Schemes: affine; oph/optimal (the default production densification);
-oph/rotation (kept as the comparison row — the round-4 scheme whose
-adjacent-slot correlation inflates candidates ~10x on short docs).
+Schemes: affine; oph (optimal densification).  The round-4 rotation
+densification, whose adjacent-slot correlation inflated candidates ~10x
+on short docs, has been removed; its rows stay in
+experiments/results_r5.json as the record.
 
 Prints one JSON line so results can be tracked across rounds
 (experiments/results_r*.json).
@@ -72,8 +73,7 @@ def _replicated(spark, replicas: int):
 
 SCHEMES = [
     ("affine", dict(sig_strategy="affine")),
-    ("oph_optimal", dict(sig_strategy="oph", densify="optimal")),
-    ("oph_rotation", dict(sig_strategy="oph", densify="rotation")),
+    ("oph_optimal", dict(sig_strategy="oph")),
 ]
 
 

@@ -59,34 +59,11 @@ class MinHashLSHConfig:
     #   textbook family; per-shingle cost is num_hashes multiply-mods.
     # 'oph': one-permutation hashing (Li, Owen, Zhang 2012): ONE hash
     #   per shingle, bucketed mod num_hashes, min per bucket; empty
-    #   buckets are filled per ``densify``.  ~num_hashes-fold less
+    #   buckets are filled by optimal densification
+    #   (operators/minhash.oph_signatures_array).  ~num_hashes-fold less
     #   signature CPU — the 100 TB path for long documents; higher
     #   estimator variance on short ones.
     sig_strategy: str = "affine"
-    # Empty-bucket densification for sig_strategy='oph':
-    # 'optimal': Shrivastava (ICML 2017)-style optimal densification —
-    #   each empty slot walks a slot-specific universal-hash probe
-    #   sequence (shared across docs) to the first non-empty bucket and
-    #   copies its min.  Slot sequences are independent, so adjacent
-    #   empty slots decorrelate — measured ~10x fewer spurious LSH
-    #   candidates than rotation on short-doc corpora (10x probe:
-    #   596k vs 6.10M vs 617k affine — experiments/results_r5.json,
-    #   SCALE.md §10).  The default and production path; integer-only,
-    #   oracle-replayable.
-    # 'rotation': Shrivastava/Li 2014 rotation — borrow circularly from
-    #   the next non-empty bucket, offset by prime*distance.  Cheaper to
-    #   densify (one window pass) but adjacent empty slots borrow the
-    #   same donor, correlating signature positions.
-    # SIGNATURE FORMAT BREAK: densify changes the BYTES of OPH
-    #   signatures, not just their quality — artifacts persisted under
-    #   'rotation' (band stores, incremental state) are inconsistent
-    #   with 'optimal' signatures for the same corpus and silently
-    #   under-match if mixed.  The default changed rotation -> optimal
-    #   in round 5; persisted stores record their signature_spec() and
-    #   fail fast on mismatch (operators/bandstore.py for band stores,
-    #   streaming/jobs.incremental_similar_pairs for durable stream
-    #   state).
-    densify: str = "optimal"
 
     def __post_init__(self) -> None:
         if self.num_hashes % self.num_bands != 0:
@@ -99,8 +76,6 @@ class MinHashLSHConfig:
             )
         if self.sig_strategy not in ("affine", "oph"):
             raise ValueError(f"unknown sig_strategy {self.sig_strategy!r}")
-        if self.densify not in ("optimal", "rotation"):
-            raise ValueError(f"unknown densify {self.densify!r}")
 
     def signature_spec(self) -> dict:
         """The cfg fields that determine signature/band-key BYTES (not
@@ -110,9 +85,11 @@ class MinHashLSHConfig:
         differs: mixed-version state silently under-matches (a doc's
         old and new signatures stop agreeing with each other), which is
         strictly worse than failing.  ``threshold`` is deliberately
-        absent (it only filters results); ``densify`` is deliberately
-        present (the rotation -> optimal default change in round 5 is a
-        format break for OPH artifacts)."""
+        absent (it only filters results).  ``densify`` is the constant
+        'optimal', the one OPH densification since rotation was removed:
+        every stored spec records it, and a spec recording 'rotation'
+        (an OPH artifact of the removed scheme) is refused as a
+        mismatch."""
         return {
             "k": self.k,
             "num_hashes": self.num_hashes,
@@ -122,7 +99,7 @@ class MinHashLSHConfig:
             "id_strategy": self.id_strategy,
             "band_key_strategy": self.band_key_strategy,
             "sig_strategy": self.sig_strategy,
-            "densify": self.densify,
+            "densify": "optimal",
         }
 
     @property

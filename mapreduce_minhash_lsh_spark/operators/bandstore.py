@@ -89,11 +89,11 @@ def _check_or_write_spec(
     """Record the cfg's signature spec in the store on first build; on
     every later build/extend/query, refuse a cfg whose spec differs.  A
     store holds BYTES derived from the spec (signatures, band keys), so
-    a mismatched cfg — different seed, id strategy, or the round-5
-    rotation->optimal densify default change — would silently
-    under-match instead of erroring.  Fail fast instead.  An OPH store
-    without the ``minhash.OPH_FORMAT`` marker is refused with a rebuild
-    message: its signatures are affine.  A cfg with ``id_strategy``
+    a mismatched cfg — different seed, id strategy, band count or
+    signature scheme — would silently under-match instead of erroring.
+    Fail fast instead.  An OPH store without the ``minhash.OPH_FORMAT``
+    marker is refused with a rebuild message: its signatures are
+    affine.  A cfg with ``id_strategy``
     'rank' is refused outright: its ids are ranks in each batch's own
     vocabulary, so no two batches' signatures agree."""
     if cfg.id_strategy == "rank":

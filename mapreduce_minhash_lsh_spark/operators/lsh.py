@@ -22,35 +22,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
+from mapreduce_minhash_lsh_spark.operators.minhash import sig_array_form
 
 
 def band_keys(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
     """Signatures -> (doc_id, band, band_key).
 
-    Accepts either shape: the array form (doc_id, sig) from
-    ``minhash_signatures_array`` (primary — small generated code) or the
-    wide (mh_0..mh_{n-1}) form.  band_key joins the band's r minhash
-    values with ',' in hash order — same encoding as the reference
-    (MinHashLSH.java:135-141) plus the band index carried alongside.
-    posexplode keeps this a pure map-side reshape (no shuffle).
+    band_key joins the band's r minhash values with ',' in hash order —
+    same encoding as the reference (MinHashLSH.java:135-141) plus the
+    band index carried alongside.  posexplode keeps this a pure map-side
+    reshape (no shuffle).  Wide signatures are read through
+    ``minhash.sig_array_form``.
     """
     r = cfg.rows_per_band
-    if "sig" in signatures.columns:
-        keys = F.array(*[
-            F.array_join(
-                F.transform(
-                    F.slice("sig", band * r + 1, r), lambda x: x.cast("string")
-                ),
-                ",",
-            )
-            for band in range(cfg.num_bands)
-        ])
-    else:
-        keys = F.array(*[
-            F.concat_ws(",", *[F.col(f"mh_{band * r + i}") for i in range(r)])
-            for band in range(cfg.num_bands)
-        ])
-    return signatures.select(
+    keys = F.array(*[
+        F.array_join(
+            F.transform(
+                F.slice("sig", band * r + 1, r), lambda x: x.cast("string")
+            ),
+            ",",
+        )
+        for band in range(cfg.num_bands)
+    ])
+    return sig_array_form(signatures, cfg).select(
         "doc_id", F.posexplode(keys).alias("band", "band_key")
     )
 
@@ -79,14 +73,15 @@ def bands_for(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
     r minhash longs — no string build, no md5; cheapest, production.  A
     collision only ADDs a candidate pair, which exact verification then
     scores."""
-    return signatures.select(
-        "doc_id", F.posexplode(_key_array(signatures, cfg)).alias("band", "band_key")
+    return sig_array_form(signatures, cfg).select(
+        "doc_id", F.posexplode(_key_array(cfg)).alias("band", "band_key")
     )
 
 
-def _key_array(signatures: DataFrame, cfg: MinHashLSHConfig):
-    """Column: array of num_bands compact band keys (one long per band),
-    under cfg.band_key_strategy — the per-doc band-key vector.
+def _key_array(cfg: MinHashLSHConfig):
+    """Column: array of num_bands compact band keys (one long per band)
+    over the ``sig`` column, under cfg.band_key_strategy — the per-doc
+    band-key vector.
 
     Built as ONE SQL-parsed expression (r14): the Column form cost
     ~0.2-0.5 s of driver-side py4j per construction, paid by every
@@ -94,27 +89,18 @@ def _key_array(signatures: DataFrame, cfg: MinHashLSHConfig):
     key value) is identical — md5_long's conv/substring parse and the
     band-indexed xxhash64 are rendered verbatim."""
     r = cfg.rows_per_band
-    if "sig" in signatures.columns:
-        def cols_sql(band: int) -> list[str]:
-            return [f"sig[{band * r + i}]" for i in range(r)]
-        def joined_sql(band: int) -> str:
-            return (
-                f"array_join(transform(slice(sig, {band * r + 1}, {r}), "
-                "x -> CAST(x AS STRING)), ',')"
-            )
-    else:
-        def cols_sql(band: int) -> list[str]:
-            return [f"mh_{band * r + i}" for i in range(r)]
-        def joined_sql(band: int) -> str:
-            return "concat_ws(','," + ",".join(cols_sql(band)) + ")"
     if cfg.band_key_strategy == "xxhash":
         keys = ",".join(
-            f"xxhash64({band}," + ",".join(cols_sql(band)) + ")"
+            f"xxhash64({band},"
+            + ",".join(f"sig[{band * r + i}]" for i in range(r))
+            + ")"
             for band in range(cfg.num_bands)
         )
     else:
         keys = ",".join(
-            f"CAST(conv(substring(md5({joined_sql(band)}), 1, 15), 16, 10) AS BIGINT)"
+            "CAST(conv(substring(md5(array_join(transform("
+            f"slice(sig, {band * r + 1}, {r}), x -> CAST(x AS STRING)), ',')), "
+            "1, 15), 16, 10) AS BIGINT)"
             for band in range(cfg.num_bands)
         )
     return F.expr(f"array({keys})")
@@ -176,8 +162,8 @@ def _lowest_band_join(
 def _band_rows(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
     """(doc_id, keys, band, band_key): one row per band, each carrying
     the doc's full band-key vector — computed map-side, no regroup."""
-    return signatures.select(
-        "doc_id", _key_array(signatures, cfg).alias("keys")
+    return sig_array_form(signatures, cfg).select(
+        "doc_id", _key_array(cfg).alias("keys")
     ).select("doc_id", "keys", F.posexplode("keys").alias("band", "band_key"))
 
 
@@ -198,7 +184,7 @@ def banded_pairs(
     oversize: str = "drop",
     auto_split_threshold: int = AUTO_SPLIT_THRESHOLD,
 ) -> DataFrame:
-    """Signatures (array ``sig`` or wide ``mh_*`` form) -> distinct
+    """Signatures -> distinct
     candidate pairs (doc_id_a, doc_id_b) WITHOUT a global distinct: each
     pair is emitted exactly once, by its LOWEST agreeing band (the one
     LSH candidate generator; stored band rows take :func:`band_row_pairs`).

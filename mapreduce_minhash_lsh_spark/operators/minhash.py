@@ -7,9 +7,10 @@ textbook equivalent min over a universal hash family,
 
     sig_j(doc) = min over shingles s of  (a_j * id(s) + b_j) mod p
 
-computed as ONE ``groupBy(doc_id)`` with ``num_hashes`` min-aggregates —
-a single shuffle, map-side partial aggregation for free, no vectors
-materialized, no Python in the hot path.
+computed as ONE ``groupBy(doc_id)`` over one array-valued aggregate of
+``num_hashes`` mins (:func:`affine_sig_agg`) — a single shuffle, map-side
+partial aggregation for free, no vectors materialized, no Python in the
+hot path.
 """
 
 from __future__ import annotations
@@ -47,35 +48,58 @@ def shingle_ids(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
     return doc_shingles.join(vocab, "shingle").select("doc_id", "shingle_id")
 
 
+def affine_sig_agg(cfg: MinHashLSHConfig):
+    """The affine signature aggregate over a ``shingle_id`` column:
+    ``array(min((a_0 * shingle_id + b_0) % p), ..., min(..._{n-1})) AS
+    sig`` — the one affine MinHash expression of the package; every
+    affine signature relation is a ``groupBy("doc_id")`` over it.
+
+    Built as ONE SQL-parsed expression (r14/r15): the Column form
+    (F.min(affine_hash(...))) cost ~5 py4j round trips per hash —
+    1.5-2.4 s of driver-side Python per construction at n=128, about a
+    third of a flagship query's wall clock — and even one
+    F.expr(...).alias(...) per named aggregate was still ~2 round trips
+    each (~0.25 s at n=128).  The array of mins directly in the agg list
+    is exactly the resultExpressions shape the optimizer produced from
+    n named ``mh_j`` aggregates plus an ``array()`` projection after
+    CollapseProject, so the optimized plan (same literals, same
+    ``(a * x + b) % p`` shape — affine_hash's contract) and every value
+    are the same; one F.expr call instead of ~n.  Spark keeps the
+    n-buffer aggregate inside whole-stage codegen (the session raises
+    spark.sql.codegen.maxFields for it), and the aggregate streams:
+    constant per-group state, no per-doc shingle list materialized."""
+    mins = ",".join(
+        f"min(({a} * shingle_id + {b}) % {cfg.prime})"
+        for a, b in cfg.hash_params()
+    )
+    return F.expr(f"array({mins}) AS sig")
+
+
 def minhash_signatures_array(
     doc_shingles: DataFrame, cfg: MinHashLSHConfig
 ) -> DataFrame:
-    """(doc_id, shingle) -> (doc_id, sig: array<long>) — the primary shape.
-
-    The wide num_hashes-min-aggregate plan packed into an array by a pure
-    projection.  Shapes measured at sf0.1 (5k docs, n=128, local[32]):
-
-    * wide named min-aggregates: ~1.3 s warm, whole-stage-codegen'd
-      (the one-off Janino compile of the 128-agg signature measured
-      <1 s in-process — the ~6 s cold-start billed to it in BENCH_r01
-      was page-cache/JIT, not codegen);
-    * collect_list + nested expression ``transform``: ~2 s warm —
-      higher-order functions stay outside whole-stage codegen, so the
-      128 x |shingles| lambda evals are interpreted;
-    * explode-by-params long formulation: ~1.5-2 s warm and a recurring
-      128x row fan-out before the partial aggregate.
-
-    The wide aggregate also streams (constant per-group state — no
-    per-doc shingle list materialized), which is the property that
-    matters for multi-GB documents at 100 TB.
-    """
-    wide = minhash_signatures(doc_shingles, cfg)
-    return wide.select(
-        "doc_id",
-        F.expr(
-            "array(" + ",".join(f"mh_{j}" for j in range(cfg.num_hashes)) + ")"
-        ).alias("sig"),
+    """(doc_id, shingle) -> (doc_id, sig: array<long>) — the primary
+    shape: :func:`affine_sig_agg` grouped by doc_id over
+    :func:`shingle_ids`.  Shapes measured at sf0.1 (5k docs, n=128,
+    local[32]): the min aggregates ~1.3 s warm, whole-stage-codegen'd;
+    collect_list + a nested ``transform`` ~2 s (higher-order functions
+    stay outside whole-stage codegen); an explode-by-params long
+    formulation ~1.5-2 s plus a 128x row fan-out before the partial
+    aggregate."""
+    return shingle_ids(doc_shingles, cfg).groupBy("doc_id").agg(
+        affine_sig_agg(cfg)
     )
+
+
+def sig_array_form(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
+    """Signatures in the array shape (doc_id, sig, ...).  A relation that
+    already has ``sig`` is returned unchanged; the wide (doc_id, mh_0 ..
+    mh_{n-1}) form of :func:`minhash_signatures` is packed back into
+    ``sig`` — the one place the wide shape is read."""
+    if "sig" in signatures.columns:
+        return signatures
+    mh = ",".join(f"mh_{j}" for j in range(cfg.num_hashes))
+    return signatures.selectExpr("doc_id", f"array({mh}) AS sig")
 
 
 def signatures_array(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
@@ -113,28 +137,13 @@ def recorded_spec(cfg: MinHashLSHConfig, marker: str) -> tuple[str, str]:
 
 
 def minhash_signatures(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """(doc_id, shingle) -> (doc_id, mh_0 .. mh_{n-1}) wide signature.
-
-    One shuffle on doc_id; the n mins ride the same exchange and the
-    whole aggregate is whole-stage-codegen'd (the reference needed a
-    whole MR job plus a distributed-cache fan-out for this step —
-    MinHashLSH.java:43-143).
-    """
-    ids = shingle_ids(doc_shingles, cfg)
-    # SQL-text aggregates (r14): the Column form (F.min(affine_hash(..)))
-    # costs ~5 py4j round trips per hash — 1.5-2.4 s of driver-side
-    # Python per construction at n=128 (measured; see
-    # similarity._sig_set_from_base).  Parsed trees are identical.
-    # (The alias rides inside each expr string — r15: one round trip per
-    # aggregate instead of two.  The wide n-column contract needs n
-    # NamedExpressions, so this form cannot batch further without adding
-    # a struct-unpack Project; the hot flagship path avoids the wide
-    # shape entirely via _sig_set_from_base's array-valued aggregate.)
-    aggs = [
-        F.expr(f"min(({a} * shingle_id + {b}) % {cfg.prime}) AS mh_{j}")
-        for j, (a, b) in enumerate(cfg.hash_params())
-    ]
-    return ids.groupBy("doc_id").agg(*aggs)
+    """(doc_id, shingle) -> (doc_id, mh_0 .. mh_{n-1}) wide signature:
+    the projection ``sig[j] AS mh_j`` of :func:`minhash_signatures_array`
+    (one shuffle on doc_id — the reference needed a whole MR job plus a
+    distributed-cache fan-out for this step, MinHashLSH.java:43-143)."""
+    return minhash_signatures_array(doc_shingles, cfg).selectExpr(
+        "doc_id", *(f"sig[{j}] AS mh_{j}" for j in range(cfg.num_hashes))
+    )
 
 
 def signatures_long(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
@@ -153,15 +162,29 @@ def oph_signatures_array(
     100 TB the signature stage is corpus_size x num_hashes of CPU.  OPH
     (Li/Owen/Zhang 2012) hashes each shingle ONCE, partitions the hash
     space into num_hashes buckets (shingle_id mod n), and takes the min
-    per non-empty bucket; empty buckets are filled per ``cfg.densify``
-    ('optimal' — default, slot-keyed probe sequences; or 'rotation' —
-    circular borrow with prime*distance offset; see
-    :func:`oph_sig_from_buckets`).  Per-shingle work drops
-    ~num_hashes-fold; collision probability per position remains ~J.
+    per non-empty bucket.  Per-shingle work drops ~num_hashes-fold;
+    collision probability per position remains ~J.
+
+    Empty buckets are filled by OPTIMAL densification (Shrivastava, ICML
+    2017 style): each empty slot probes a SLOT-SPECIFIC universal-hash
+    sequence of donor buckets (rank 1..DENS_T) and copies the first
+    non-empty bucket's min; rank 0 is the slot's own bucket.  Because
+    the probe sequence depends on the slot (not the doc), two docs empty
+    at the same slot walk the same donors and agree iff the first
+    commonly-non-empty donor's mins agree — and because different slots
+    probe independent sequences, adjacent empty slots decorrelate
+    (rotation densification, removed, made them all borrow the same
+    next non-empty bucket: 10.2x candidate inflation on short docs —
+    experiments/results_r5.json, SCALE.md §10).  Spurious agreement
+    across different donors is impossible by construction: bucket d's
+    ids are ≡ d (mod num_hashes), so values copied from different
+    buckets can never be equal.
 
     Plan: one aggregate over the big shingle relation (groupBy doc_id,
-    bucket — map-side partials shrink it to <=n rows/doc/partition);
-    the densification then runs only on n-bounded per-doc relations, so
+    bucket — map-side partials shrink it to <=n rows/doc/partition),
+    then ONE groupBy(doc_id) collecting the (bucket -> bmin) map
+    (:func:`oph_bucket_map`, <= n entries) whose select densifies by
+    expression (:func:`oph_sig_expr`) — no probe join, no regroup, so
     the 100 TB cost is the single pass over the shingles.
 
     Engine-portable under the 'md5'/'rank' id strategies (integer mins,
@@ -171,7 +194,9 @@ def oph_signatures_array(
     b1 = ids.groupBy(
         "doc_id", (F.col("shingle_id") % cfg.num_hashes).alias("bucket")
     ).agg(F.min("shingle_id").alias("bmin"))
-    return oph_sig_from_buckets(b1, cfg)
+    return b1.groupBy("doc_id").agg(oph_bucket_map(cfg).alias("_bm")).select(
+        "doc_id", oph_sig_expr(F.col("_bm"), cfg).alias("sig")
+    )
 
 
 # Optimal-densification probe-sequence constants — part of the pipeline
@@ -199,16 +224,6 @@ def densify_probe_rows(cfg: MinHashLSHConfig) -> list[tuple[int, int, int]]:
                 (s, r, ((DENS_A * (s * (DENS_T + 1) + r) + DENS_B) % cfg.prime) % n)
             )
     return rows
-
-
-def oph_sig_from_buckets(b1: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """(doc_id, bucket, bmin) -> (doc_id, sig) — the densification half
-    of OPH, shared by :func:`oph_signatures_array` and the fused
-    ``signature_set_relation`` (which carries per-bucket shingle sets
-    through the same aggregate).  Dispatches on ``cfg.densify``."""
-    if cfg.densify == "optimal":
-        return _oph_densify_optimal(b1, cfg)
-    return _oph_densify_rotation(b1, cfg)
 
 
 def oph_bucket_map(cfg: MinHashLSHConfig):
@@ -333,91 +348,3 @@ def oph_sig_expr(bm, cfg: MinHashLSHConfig):
         return F.transform(F.array(vals_expr), sig_from_vals)[0]
 
     return F.transform(F.array(bm), from_bound_map)[0]
-
-
-def _oph_densify_optimal(b1: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """Optimal densification (Shrivastava, ICML 2017 style): each empty
-    slot probes a SLOT-SPECIFIC universal-hash sequence of donor buckets
-    (rank 1..DENS_T) and copies the first non-empty bucket's min; rank 0
-    is the slot's own bucket.  Because the probe sequence depends on the
-    slot (not the doc), two docs empty at the same slot walk the same
-    donors and agree iff the first commonly-non-empty donor's mins agree
-    — and because DIFFERENT slots probe independent sequences, adjacent
-    empty slots decorrelate, unlike rotation where they all borrow the
-    same next non-empty bucket (the measured 10.2x candidate inflation
-    on short docs — experiments/results_r5.json, SCALE.md §10).
-
-    Spurious agreement across different donors is impossible by
-    construction: bucket d's ids are ≡ d (mod num_hashes), so copied
-    values from different buckets can never be equal — no offset term is
-    needed.
-
-    Plan: ONE groupBy(doc_id) collects the (bucket -> bmin) map (<= n
-    entries), and the whole densification — probes and circular-walk
-    fallback — is a single projection (:func:`oph_sig_expr`).  No probe
-    join, no anti-join, no regroup: the only shuffle is the collect
-    itself, matching the affine path's single-aggregate shape.
-    """
-    return b1.groupBy("doc_id").agg(oph_bucket_map(cfg).alias("_bm")).select(
-        "doc_id", oph_sig_expr(F.col("_bm"), cfg).alias("sig")
-    )
-
-
-def _oph_densify_rotation(b1: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
-    """Rotation densification (Shrivastava/Li 2014): empty buckets borrow
-    the next non-empty bucket's min circularly, offset by prime *
-    borrow-distance so different borrow distances cannot spuriously
-    agree.  One window pass; kept for comparison (cfg.densify=
-    'rotation') — adjacent empty slots borrow the SAME donor, which
-    correlates positions on sparse signatures."""
-    n = cfg.num_hashes
-    slots = (
-        b1.select("doc_id")
-        .distinct()
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(2 * n - 1))).alias("slot"),
-        )
-    )
-    unrolled = b1.select(
-        "doc_id", F.col("bucket").alias("slot"), "bmin"
-    ).unionByName(
-        b1.select("doc_id", (F.col("bucket") + n).alias("slot"), "bmin")
-    )
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("slot")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    filled = (
-        slots.join(unrolled, ["doc_id", "slot"], "left")
-        .select(
-            "doc_id",
-            "slot",
-            F.first("bmin", ignorenulls=True).over(w).alias("fv"),
-            F.first(
-                F.when(F.col("bmin").isNotNull(), F.col("slot")),
-                ignorenulls=True,
-            ).over(w).alias("fs"),
-        )
-        .where(F.col("slot") < n)
-    )
-    sig_rows = filled.select(
-        "doc_id",
-        "slot",
-        # prime * distance must multiply as LONG: prime fits int32, so an
-        # int-typed product overflows at distance >= 2
-        (
-            F.col("fv")
-            + F.lit(cfg.prime).cast("long")
-            * (F.col("fs") - F.col("slot")).cast("long")
-        ).alias("mh"),
-    )
-    return sig_rows.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("slot", "mh"))),
-            lambda s: s["mh"],
-        ).alias("sig")
-    )

@@ -27,6 +27,12 @@ from mapreduce_minhash_lsh_spark.operators.lsh import (
     bands_for,
     candidate_volume_bound,
 )
+from mapreduce_minhash_lsh_spark.operators.minhash import (
+    affine_sig_agg,
+    oph_bucket_map,
+    oph_sig_expr,
+    sig_array_form,
+)
 from mapreduce_minhash_lsh_spark.operators.shingling import by_doc_id, explode_shingles
 
 # Signature-agreement prefilter slack: the positionwise-agreement MinHash
@@ -329,62 +335,27 @@ def _sig_set_from_base(
     sh_set) relation — the strategy-independent aggregate tail of
     :func:`signature_set_relation`."""
     if cfg.sig_strategy == "oph":
-        from mapreduce_minhash_lsh_spark.operators.minhash import (
-            oph_bucket_map,
-            oph_sig_expr,
-            oph_sig_from_buckets,
-        )
-
         # One pass over the shingles: per-(doc, bucket) min AND the
         # bucket's shingle set; the doc's verify set is the flatten of
-        # its bucket sets (disjoint by construction).
+        # its bucket sets (disjoint by construction).  Densification is
+        # an expression, so sig AND sh_set ride ONE groupBy(doc_id).
         b1 = base.groupBy(
             "doc_id", (F.col("shingle_id") % cfg.num_hashes).alias("bucket")
         ).agg(
             F.min("shingle_id").alias("bmin"),
             F.collect_set("sid").alias("bset"),
         )
-        if cfg.densify == "optimal":
-            # Expression densification: sig AND sh_set ride ONE
-            # groupBy(doc_id) — no sig/sets join, no densify shuffles.
-            g = b1.groupBy("doc_id").agg(
-                oph_bucket_map(cfg).alias("_bm"),
-                F.flatten(F.collect_list("bset")).alias("sh_set"),
-            )
-            rel = g.select(
-                "doc_id", oph_sig_expr(F.col("_bm"), cfg).alias("sig"), "sh_set"
-            )
-            return _materialize(rel, checkpoint_dir, eager)
-        sets = b1.groupBy("doc_id").agg(
-            F.flatten(F.collect_list("bset")).alias("sh_set")
+        g = b1.groupBy("doc_id").agg(
+            oph_bucket_map(cfg).alias("_bm"),
+            F.flatten(F.collect_list("bset")).alias("sh_set"),
         )
-        sig = oph_sig_from_buckets(b1.select("doc_id", "bucket", "bmin"), cfg)
-        rel = sig.join(sets, "doc_id")
-        return _materialize(
-            rel.select("doc_id", "sig", "sh_set"), checkpoint_dir, eager
+        rel = g.select(
+            "doc_id", oph_sig_expr(F.col("_bm"), cfg).alias("sig"), "sh_set"
         )
-    # The 128 affine-min aggregates are built as SQL text (r14): the
-    # Column form (F.min(affine_hash(...))) costs ~5 py4j round trips
-    # per hash — measured 1.5-2.4 s of pure DRIVER-SIDE PYTHON per
-    # flagship construction, roughly a third of the whole query's wall
-    # clock, paid by every similarity-family query.  r15: even one
-    # F.expr(...).alias(...) PER aggregate was still ~2 round trips each
-    # (~0.25 s at n=128, profiled as the largest pure-construction item
-    # left in the family).  The whole signature now rides ONE
-    # array-valued aggregate expression — array(min_0, ..., min_{n-1})
-    # directly in the agg list, which is exactly the resultExpressions
-    # shape the optimizer produced from the old mh_j-columns + array()
-    # projection after CollapseProject, so the optimized plan (same
-    # literals, same `(a * x + b) % p` shape — affine_hash's contract)
-    # and every value are unchanged; 2 F.expr calls instead of ~130.
-    mins = ",".join(
-        f"min(({a} * shingle_id + {b}) % {cfg.prime})"
-        for a, b in cfg.hash_params()
-    )
-    rel = base.groupBy("doc_id").agg(
-        F.expr(f"array({mins}) AS sig"),
-        F.expr("collect_set(sid) AS sh_set"),
-    )
+    else:
+        rel = base.groupBy("doc_id").agg(
+            affine_sig_agg(cfg), F.expr("collect_set(sid) AS sh_set")
+        )
     return _materialize(rel, checkpoint_dir, eager)
 
 
@@ -754,27 +725,22 @@ def signature_prefilter(
     cut = min_agree(cfg, threshold)
     if cut <= 0:
         return pairs
-    if "sig" in signatures.columns:
-        arr = F.col("sig")
-    else:
-        arr = F.array(*[F.col(f"mh_{j}") for j in range(cfg.num_hashes)])
+    signatures = sig_array_form(signatures, cfg)
+    arr = F.col("sig")
     # Where signature values are provably < prime <= 2^31 — affine (mod
-    # p by construction) and OPH-optimal over hashed ids (bmins of
-    # mod-p ids) — cast the sig to int: lossless, positionwise equality
-    # unchanged, and it HALVES the payload this stage shuffles at PAIR
-    # volume (the first join re-shuffles (pair, sig_a) by doc_id_b for
-    # the second; at the 160x probe that intermediate is the widest
-    # relation of the group path).  Excluded: rotation densification
-    # (values carry + prime*distance, up to ~2^38), 'rank' ids under
-    # OPH (raw ranks, unbounded at 100 TB vocab), and any user cfg with
-    # prime > 2^31 — __post_init__ does not bound prime, and mod-p
-    # values then no longer fit an int: the cast would throw
-    # CAST_OVERFLOW under Spark 4's default ANSI mode (or silently wrap
-    # with ANSI off, corrupting agreement counts).  Such cfgs keep the
-    # lossless long path.
+    # p by construction) and OPH over hashed ids (bmins of mod-p ids) —
+    # cast the sig to int: lossless, positionwise equality unchanged, and
+    # it HALVES the payload this stage shuffles at PAIR volume (the first
+    # join re-shuffles (pair, sig_a) by doc_id_b for the second; at the
+    # 160x probe that intermediate is the widest relation of the group
+    # path).  Excluded: 'rank' ids under OPH (raw ranks, unbounded at
+    # 100 TB vocab), and any user cfg with prime > 2^31 — __post_init__
+    # does not bound prime, and mod-p values then no longer fit an int:
+    # the cast would throw CAST_OVERFLOW under Spark 4's default ANSI
+    # mode (or silently wrap with ANSI off, corrupting agreement counts).
+    # Such cfgs keep the lossless long path.
     if cfg.prime <= 2**31 and (
-        cfg.sig_strategy == "affine"
-        or (cfg.densify == "optimal" and cfg.id_strategy in ("md5", "xxhash"))
+        cfg.sig_strategy == "affine" or cfg.id_strategy in ("md5", "xxhash")
     ):
         arr = F.transform(arr, lambda x: x.cast("int"))
     sa = signatures.select(F.col("doc_id").alias("doc_id_a"), arr.alias("sig_a"))

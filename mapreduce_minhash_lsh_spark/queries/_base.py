@@ -21,7 +21,7 @@ from mapreduce_minhash_lsh_spark.operators.lsh import (
     banded_pairs,
 )
 from mapreduce_minhash_lsh_spark.operators.minhash import (
-    minhash_signatures,
+    minhash_signatures_array,
     signatures_long,
 )
 from mapreduce_minhash_lsh_spark.operators.shingling import (

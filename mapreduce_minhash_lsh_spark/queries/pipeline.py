@@ -30,7 +30,7 @@ from mapreduce_minhash_lsh_spark.queries._base import (  # noqa: F401
     cross_corpus_pairs,
     explode_shingles,
     load_table,
-    minhash_signatures,
+    minhash_signatures_array,
     register,
     shingle_postings,
     signatures_long,
@@ -103,7 +103,7 @@ def q_minhash_signatures(spark: SparkSession, sf: str) -> DataFrame:
 def q_lsh_bands(spark: SparkSession, sf: str) -> DataFrame:
     """P4 with the band index IN the key (fixes MinHashLSH.java:138-142)."""
     sh = explode_shingles(load_table(spark, sf, "documents"), _CFG.k)
-    return band_keys(minhash_signatures(sh, _CFG), _CFG)
+    return band_keys(minhash_signatures_array(sh, _CFG), _CFG)
 
 
 @register(
@@ -115,7 +115,7 @@ def q_candidate_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """J1/F2: band-bucket equi-self-join candidates (MinHashLSH.java:168-193
     rebuilt as a join, not a single quadratic reducer)."""
     sh = explode_shingles(load_table(spark, sf, "documents"), _CFG.k)
-    return banded_pairs(minhash_signatures(sh, _CFG), _CFG)
+    return banded_pairs(minhash_signatures_array(sh, _CFG), _CFG)
 
 
 @register(
@@ -130,7 +130,7 @@ def q_candidate_pairs_split(spark: SparkSession, sf: str) -> DataFrame:
     full-recall by construction, and this proves it on the real corpus."""
     sh = explode_shingles(load_table(spark, sf, "documents"), _CFG.k)
     return banded_pairs(
-        minhash_signatures(sh, _CFG), _CFG, max_bucket_size=3, oversize="split"
+        minhash_signatures_array(sh, _CFG), _CFG, max_bucket_size=3, oversize="split"
     )
 
 
@@ -533,7 +533,7 @@ _N_H = _CFG.num_hashes
 
 # OPH signature CTE: one md5-derived hash per shingle, bucketed mod n,
 # min per bucket, OPTIMAL densification (operators/minhash.py
-# _oph_densify_optimal; Shrivastava ICML 2017 style): each empty slot
+# oph_signatures_array; Shrivastava ICML 2017 style): each empty slot
 # walks its slot-specific universal-hash probe sequence — the same
 # DENS_A/DENS_B/DENS_T literals — to the first non-empty bucket and
 # copies its min (rank 0 = the slot itself); slots whose DENS_T probes

@@ -398,6 +398,11 @@ def incremental_similar_pairs(
     emitted exactly once — at the later of its two docs' batches (cross
     pairs: current-vs-seen band join; intra pairs: current self-join) —
     so the output needs no cross-batch dedup.
+
+    The state needs map-side shingle ids ('md5' or 'xxhash'
+    ``id_strategy``): 'rank' ids are ranks in each batch's own
+    vocabulary, so a cfg naming 'rank' is refused before any state is
+    read or written, as the band store refuses it.
     """
     from mapreduce_minhash_lsh_spark.operators.lsh import compact_band_keys
     from mapreduce_minhash_lsh_spark.operators.minhash import (
@@ -411,6 +416,13 @@ def incremental_similar_pairs(
     import shutil
     import tempfile
 
+    if cfg.id_strategy == "rank":
+        raise ValueError(
+            "incremental_similar_pairs: id_strategy 'rank' numbers shingles "
+            "by each micro-batch's own vocabulary, so signatures of "
+            "different batches never agree and cross-batch pairs are "
+            "lost; use id_strategy 'md5' or 'xxhash'."
+        )
     threshold = cfg.threshold if threshold is None else threshold
     docs = load_table(spark, sf_dir, "documents")
     own_state = state_dir is None
@@ -518,8 +530,8 @@ def incremental_similar_pairs(
                 )
             # The stored band keys / shingle ids are BYTES derived from
             # cfg.signature_spec(); resuming under a different spec (seed,
-            # id strategy, the rotation->optimal densify default change)
-            # silently under-matches — the same failure mode the band
+            # id strategy, band count, signature scheme) silently
+            # under-matches — the same failure mode the band
             # store guards against (operators/bandstore.py).  Fail fast.
             stored_spec = getattr(row, "signature_spec", None)
             if stored_spec is not None and stored_spec != spec:

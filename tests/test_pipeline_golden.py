@@ -339,6 +339,48 @@ def test_xxhash_band_strategy_wide_and_array_forms_agree(spark, golden_docs):
     assert sorted(map(tuple, wide.collect())) == sorted(map(tuple, arr.collect()))
 
 
+@pytest.mark.parametrize(
+    "sig_strategy,id_strategy",
+    [
+        ("affine", "rank"),
+        ("affine", "md5"),
+        ("affine", "xxhash"),
+        ("oph", "md5"),
+        ("oph", "xxhash"),
+    ],
+)
+def test_signatures_array_equals_signature_set_relation(
+    spark, sig_strategy, id_strategy
+):
+    """``minhash.signatures_array`` holds the bytes of the ``sig`` column
+    of ``similarity.signature_set_relation`` over the same shingle
+    relation, so signatures persisted through the one band and agree
+    with those the other recomputes; the wide ``minhash_signatures`` is
+    the projection ``mh_j = sig[j]``."""
+    from mapreduce_minhash_lsh_spark.operators.minhash import signatures_array
+    from mapreduce_minhash_lsh_spark.operators.similarity import (
+        signature_set_relation,
+    )
+    from mapreduce_minhash_lsh_spark.sources.tables import load_table
+    from tests.conftest import SF_SMALL
+
+    cfg = MinHashLSHConfig(
+        num_hashes=32, num_bands=4, id_strategy=id_strategy,
+        sig_strategy=sig_strategy,
+    )
+    sh = explode_shingles(load_table(spark, SF_SMALL, "documents"), cfg.k)
+    got = dict(signatures_array(sh, cfg).collect())
+    want = dict(signature_set_relation(sh, cfg).select("doc_id", "sig").collect())
+    assert len(want) > 100
+    assert got == want
+    if sig_strategy == "affine":
+        wide = {
+            r.doc_id: [r[f"mh_{j}"] for j in range(cfg.num_hashes)]
+            for r in minhash_signatures(sh, cfg).collect()
+        }
+        assert wide == want
+
+
 def test_containment_postings_finds_planted_subset(spark):
     """A short doc quoted verbatim inside a long doc has containment 1.0
     but Jaccard ~ len_short/len_long — the banded generator misses it
@@ -764,11 +806,8 @@ def test_oph_optimal_densification_semantics(spark):
     * copied values keep their donor's residue class mod num_hashes, so
       values copied from different donors can never spuriously agree;
     * ultra-short docs (fewer shingles than probe attempts can cover)
-      still resolve every slot via the circular-walk fallback;
-    * 'rotation' remains available and differs (offset encoding).
+      still resolve every slot via the circular-walk fallback.
     """
-    import dataclasses
-
     from mapreduce_minhash_lsh_spark.operators.minhash import (
         oph_signatures_array,
     )
@@ -812,17 +851,16 @@ def test_oph_optimal_densification_semantics(spark):
         mins[r.sid % n] = min(mins.get(r.sid % n, r.sid), r.sid)
     for b, m in mins.items():
         assert sig[1][b] == m
-    rot = dataclasses.replace(cfg, densify="rotation")
-    sig_rot = {r.doc_id: r.sig for r in oph_signatures_array(sh, rot).collect()}
-    assert sig_rot[1] != sig[1] or sig_rot[2] != sig[2]
 
 
 def test_band_store_rejects_mismatched_signature_spec(spark, golden_docs, tmp_path):
-    """A store built under one signature spec must fail fast — not
-    silently under-match — when built against or queried with a cfg
-    whose signature-affecting fields differ (the densify default change
-    is the motivating format break)."""
+    """A store whose recorded signature spec differs from the cfg's must
+    fail fast — not silently under-match — when built against or
+    queried.  The store's spec is rewritten to differ only in its
+    ``densify`` value ('rotation', the removed densification): an OPH
+    store of that scheme holds signatures no current cfg computes."""
     import dataclasses
+    import json
 
     import pytest
 
@@ -832,15 +870,26 @@ def test_band_store_rejects_mismatched_signature_spec(spark, golden_docs, tmp_pa
     )
 
     store = str(tmp_path / "store")
-    oph = dataclasses.replace(GOLDEN_STORE, sig_strategy="oph", densify="optimal")
+    oph = dataclasses.replace(GOLDEN_STORE, sig_strategy="oph")
     build_band_store(golden_docs.where(F.col("doc_id") % 2 == 0), oph, store)
-    rotated = dataclasses.replace(oph, densify="rotation")
+    spec_path = f"{store}/_spec"
+    built = spark.read.parquet(spec_path).first().spec
+    fields = json.loads(built)
+    assert fields["densify"] == "optimal"
+
+    def write_spec(text):
+        spark.createDataFrame([(text,)], ["spec"]).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(spec_path)
+
+    write_spec(json.dumps(dict(fields, densify="rotation"), sort_keys=True))
     new = golden_docs.where(F.col("doc_id") % 2 == 1)
     with pytest.raises(ValueError, match="signature spec"):
-        cross_pairs_against_store(new, rotated, store)
+        cross_pairs_against_store(new, oph, store)
     with pytest.raises(ValueError, match="signature spec"):
-        build_band_store(new, rotated, store)
-    # the matching cfg still works
+        build_band_store(new, oph, store)
+    # the matching spec still works
+    write_spec(built)
     assert cross_pairs_against_store(new, oph, store).count() >= 0
 
 

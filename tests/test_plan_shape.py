@@ -550,3 +550,35 @@ def test_containment_pairs_job_budget(spark, monkeypatch):
     own)."""
     jobs, _ = _sf001_jobs(spark, monkeypatch, "containment_pairs")
     assert jobs <= 9, jobs
+
+
+def test_cross_corpus_near_dups_job_budget(spark, monkeypatch):
+    """Per-query budget for ``cross_corpus_near_dups`` at sf0.01:
+    measured 18 jobs, 1,104,853 shuffle bytes."""
+    jobs, shuffle = _sf001_jobs(spark, monkeypatch, "cross_corpus_near_dups")
+    assert jobs <= 18, jobs
+    assert shuffle <= 1_104_853, shuffle
+
+
+def test_lsh_bands_job_budget(spark, monkeypatch):
+    """Per-query budget for ``lsh_bands`` at sf0.01: measured 2 jobs,
+    171,635 shuffle bytes (the one signature aggregate's exchange)."""
+    jobs, shuffle = _sf001_jobs(spark, monkeypatch, "lsh_bands")
+    assert jobs <= 2, jobs
+    assert shuffle <= 171_635, shuffle
+
+
+def test_candidate_pairs_job_budget(spark, monkeypatch):
+    """Per-query budget for ``candidate_pairs`` at sf0.01: measured 3
+    jobs, 171,635 shuffle bytes."""
+    jobs, shuffle = _sf001_jobs(spark, monkeypatch, "candidate_pairs")
+    assert jobs <= 3, jobs
+    assert shuffle <= 171_635, shuffle
+
+
+def test_oph_similar_pairs_job_budget(spark, monkeypatch):
+    """Per-query budget for ``oph_similar_pairs`` at sf0.01: measured 9
+    jobs, 728,374 shuffle bytes."""
+    jobs, shuffle = _sf001_jobs(spark, monkeypatch, "oph_similar_pairs")
+    assert jobs <= 9, jobs
+    assert shuffle <= 728_374, shuffle

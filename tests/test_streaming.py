@@ -50,7 +50,7 @@ def test_incremental_similar_pairs_equals_batch(spark):
     as one batch run (same seeded config => same signatures/buckets;
     candidate generation is batch-order-independent because every
     cross/intra-batch bucket pair is considered)."""
-    cfg = MinHashLSHConfig(num_hashes=32, num_bands=4)
+    cfg = MinHashLSHConfig(num_hashes=32, num_bands=4, id_strategy="md5")
     inc = incremental_similar_pairs(spark, SF_SMALL, cfg)
     batch = similar_pairs(load_table(spark, SF_SMALL, "documents"), cfg)
     inc_pairs = {(r.doc_id_a, r.doc_id_b) for r in inc.collect()}
@@ -98,14 +98,17 @@ def test_stateful_sessionize_matches_batch(spark):
 
 
 def test_incremental_pairs_rerun_over_same_state_is_idempotent(spark, tmp_path):
+    import dataclasses
+
     from mapreduce_minhash_lsh_spark.config import GOLDEN
     from mapreduce_minhash_lsh_spark.streaming.jobs import incremental_similar_pairs
 
+    cfg = dataclasses.replace(GOLDEN, id_strategy="md5")
     state = str(tmp_path / "state")
     first = {
         (r.doc_id_a, r.doc_id_b)
         for r in incremental_similar_pairs(
-            spark, SF_SMALL, GOLDEN, threshold=0.3, state_dir=state
+            spark, SF_SMALL, cfg, threshold=0.3, state_dir=state
         ).collect()
     }
     assert first
@@ -125,7 +128,7 @@ def test_incremental_pairs_rerun_over_same_state_is_idempotent(spark, tmp_path):
     second = {
         (r.doc_id_a, r.doc_id_b)
         for r in incremental_similar_pairs(
-            spark, SF_SMALL, GOLDEN, threshold=0.3, state_dir=state
+            spark, SF_SMALL, cfg, threshold=0.3, state_dir=state
         ).collect()
     }
     assert second == first
@@ -143,11 +146,12 @@ def test_incremental_pairs_rejects_mismatched_signature_spec(spark, tmp_path):
     from mapreduce_minhash_lsh_spark.config import GOLDEN
     from mapreduce_minhash_lsh_spark.streaming.jobs import incremental_similar_pairs
 
+    cfg = dataclasses.replace(GOLDEN, id_strategy="md5")
     state = str(tmp_path / "state")
     incremental_similar_pairs(
-        spark, SF_SMALL, GOLDEN, threshold=0.3, state_dir=state
+        spark, SF_SMALL, cfg, threshold=0.3, state_dir=state
     )
-    reseeded = dataclasses.replace(GOLDEN, seed=GOLDEN.seed + 1)
+    reseeded = dataclasses.replace(cfg, seed=cfg.seed + 1)
     with pytest.raises(ValueError, match="signature spec"):
         incremental_similar_pairs(
             spark, SF_SMALL, reseeded, threshold=0.3, state_dir=state
@@ -166,7 +170,7 @@ def test_legacy_oph_incremental_state_is_refused(spark, tmp_path):
 
     from mapreduce_minhash_lsh_spark.config import GOLDEN
 
-    oph = dataclasses.replace(GOLDEN, sig_strategy="oph")
+    oph = dataclasses.replace(GOLDEN, id_strategy="md5", sig_strategy="oph")
     state = str(tmp_path / "state")
     incremental_similar_pairs(spark, SF_SMALL, oph, threshold=0.3, state_dir=state)
     meta = spark.read.parquet(f"{state}/source_meta").first()
@@ -180,6 +184,25 @@ def test_legacy_oph_incremental_state_is_refused(spark, tmp_path):
         incremental_similar_pairs(
             spark, SF_SMALL, oph, threshold=0.3, state_dir=state
         )
+
+
+def test_incremental_pairs_refuses_rank_ids(spark, tmp_path):
+    """Streaming state under id_strategy 'rank' would band each
+    micro-batch's signatures over that batch's own vocabulary ranks, so
+    cross-batch pairs would be lost; the cfg is refused, naming the
+    map-side strategies, before any state is read or written."""
+    import os
+
+    import pytest
+
+    from mapreduce_minhash_lsh_spark.config import GOLDEN
+
+    state = str(tmp_path / "state")
+    with pytest.raises(ValueError, match="'md5' or 'xxhash'"):
+        incremental_similar_pairs(
+            spark, SF_SMALL, GOLDEN, threshold=0.3, state_dir=state
+        )
+    assert not os.path.exists(state)
 
 
 # ---------------------------------------------------------------------------
@@ -713,7 +736,7 @@ def test_compact_state_incremental_row_stores(spark, tmp_path):
     yields the exact pair set of a never-compacted run."""
     import os
 
-    cfg = MinHashLSHConfig(num_hashes=32, num_bands=4)
+    cfg = MinHashLSHConfig(num_hashes=32, num_bands=4, id_strategy="md5")
 
     def run(state):
         return incremental_similar_pairs(spark, SF_SMALL, cfg, state_dir=state)
