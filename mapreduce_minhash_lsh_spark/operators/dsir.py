@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.functions.text import tokens, word_ngrams
+from mapreduce_minhash_lsh_spark.operators.similarity import _materialize
 
 # Same quantization scale as the n-gram LM: 1e-4 nats per feature is
 # far finer than any selection threshold, and the worst-case cross-
@@ -149,7 +150,7 @@ def dsir_logweights(
     # plans/r15/dsir_logweights_before.txt has 3 documents-scan
     # subtrees).  All three derive exactly from the per-(doc, bucket)
     # feature HISTOGRAM — multiplicity compressed map-side by the
-    # partial aggregation, eagerly materialized once (localCheckpoint —
+    # partial aggregation, eagerly materialized once (_materialize —
     # the repo-wide multi-consumer barrier): c(bucket) = sum of _n over
     # docs, N = sum of _n, and the per-doc score is sum(_n * lq) with
     # n_feats = sum(_n) — plain integer re-aggregations of the
@@ -162,13 +163,13 @@ def dsir_logweights(
         )
         # the flag rides the explode (constant per doc), so ONE
         # aggregation yields the histogram for both corpora at once
-        hist = (
+        hist = _materialize(
             doc_feature_buckets(
                 flagged, n_buckets, text_col, id_col, carry=["_is_t"]
             )
             .groupBy("doc_id", "_is_t", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("_n")),
+            None,
         )
         counts = hist.groupBy("bucket").agg(
             F.sum("_n").alias("c_bg"),
@@ -183,20 +184,18 @@ def dsir_logweights(
             F.sum(F.coalesce(F.col("c_tg"), F.lit(0))).alias("n_tg"),
         )
     elif target is not None:
-        hist = (
+        hist = _materialize(
             doc_feature_buckets(docs, n_buckets, text_col, id_col)
             .groupBy("doc_id", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("_n")),
+            None,
         )
         # the target-side count relation is <= n_buckets rows but its
         # aggregate is a full target-corpus pass, consumed TWICE (the
         # counts join and the totals) — materialize the tiny result.
         tfeats = doc_feature_buckets(target, n_buckets, text_col, id_col)
-        c_t = (
-            tfeats.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("c_tg"))
-            .localCheckpoint(eager=True)
+        c_t = _materialize(
+            tfeats.groupBy("bucket").agg(F.count(F.lit(1)).alias("c_tg")), None
         )
         # N_t must count ALL target features: a general two-corpus
         # target can hold buckets the background never produces, and
@@ -204,10 +203,12 @@ def dsir_logweights(
         # post-join would silently shrink the smoothing denominator.
         # (In the subset/target_pred case the two are provably equal.)
         n_tg_from = c_t.agg(F.sum("c_tg").alias("n_tg"))
+        # c_t is <= n_buckets rows; the hint keeps the broadcast join
+        # the planner chose before _materialize reset c_t's statistics.
         counts = (
             hist.groupBy("bucket")
             .agg(F.sum("_n").alias("c_bg"))
-            .join(c_t, "bucket", "left")
+            .join(F.broadcast(c_t), "bucket", "left")
         )
         totals = counts.agg(F.sum("c_bg").alias("n_bg")).crossJoin(n_tg_from)
     else:

@@ -162,9 +162,15 @@ def _lowest_band_join(
 def _band_rows(signatures: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
     """(doc_id, keys, band, band_key): one row per band, each carrying
     the doc's full band-key vector — computed map-side, no regroup."""
+    # posexplode_outer: Spark infers size(keys) > 0 under a plain
+    # posexplode and pushes it below this projection, computing every
+    # band key twice; keys always holds num_bands >= 1 entries, so the
+    # outer form yields the same rows.
     return sig_array_form(signatures, cfg).select(
         "doc_id", _key_array(cfg).alias("keys")
-    ).select("doc_id", "keys", F.posexplode("keys").alias("band", "band_key"))
+    ).select(
+        "doc_id", "keys", F.posexplode_outer("keys").alias("band", "band_key")
+    )
 
 
 # Buckets above this many members go through the triangle split under
@@ -271,7 +277,8 @@ def banded_pairs(
             )
             .select(
                 "doc_id", "keys", "survs",
-                F.posexplode("keys").alias("band", "band_key"),
+                # outer: no inferred size(keys) > 0 filter (see _band_rows)
+                F.posexplode_outer("keys").alias("band", "band_key"),
             )
             .where(F.element_at("survs", F.col("band") + 1))
         )

@@ -13,45 +13,148 @@ Patterns covered (each with a batch-equivalent used as its oracle):
 ``Trigger.AvailableNow`` drains all existing files then stops, which
 makes every job here runnable (and deterministically testable) on the
 static testdata; in production the same code tails a directory/Kafka.
-"""
+The memory-sink jobs drain through :func:`_drain`.
+
+The seven state-dir jobs (``incremental_similar_pairs``,
+``streaming_ivf_index`` and the five log jobs in ``_LOG_SPECS``) run
+through one ``foreachBatch`` harness, :func:`_run_state_dir_job`, and
+supply only a per-batch step and a read-back.  The ``state_dir``
+contract they share:
+
+* Fingerprint.  A caller ``state_dir`` means "resume THIS input": the
+  first run records what the state depends on (corpus path plus the
+  job's geometry or signature spec) in ``source_meta``, and a run with
+  another fingerprint is refused, since the committed offsets name the
+  stored split and a silent resume would return the old input's result.
+  Read-side knobs (a pair threshold, ``n_merges``, ``min_count``) may
+  vary over one state.  Without a ``state_dir`` the job owns a temp dir
+  and removes it before returning.
+* Meta before split.  The source is re-split once into 4 files under
+  the state dir and fed one file per trigger, so a static corpus
+  arrives as real micro-batches and a restart sees the files its
+  offsets name.  ``source_meta`` commits before the split's
+  ``_SUCCESS``, so no crash leaves a committed split without its
+  fingerprint; a committed split whose meta is missing or empty is
+  corrupt state and fails fast.
+* Replay idempotency.  Each micro-batch writes under its own
+  ``batch_id=`` partition with dynamic partition overwrite: a replayed
+  batch replaces its partition instead of double-counting, and a rerun
+  over a drained state replays nothing.  Every log is read through its
+  fold (``_StateDir.fold``: SUM, bit_or, DISTINCT, or UNION of disjoint
+  rows), each associative, so the folded state equals the batch-built
+  one under any micro-batching and each job's oracle is its batch
+  twin's SQL.
+* Compaction safety.  :func:`compact_state` writes the same folds into
+  one ``batch_id=-1`` partition, below every real batch, and refuses
+  while a batch has an offset but no commit: that batch will replay,
+  and folding it first would double-count a SUM log."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import shutil
+import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_minhash_lsh_spark.sources.fs import fs_exists, fs_join
+from mapreduce_minhash_lsh_spark.operators.similarity import _materialize, exact_jaccard
+from mapreduce_minhash_lsh_spark.sources.fs import (
+    fs_delete,
+    fs_exists,
+    fs_join,
+    fs_list_names,
+    fs_rename,
+)
 from mapreduce_minhash_lsh_spark.sources.tables import load_table
+
+# Every log under a streaming state_dir, with its fold: subdir -> (kind,
+# group_cols, value_cols).  kind "sum" folds with SUM (associative
+# integer counts), "or" with bit_or (associative, commutative,
+# idempotent), "set" with DISTINCT (set union), "rows" with plain UNION:
+# each doc belongs to exactly one micro-batch, so the row-store
+# partitions are disjoint and compacting them is an identity rewrite
+# that collapses one-directory-per-batch into one (SCALE.md §17).
+_LOG_SPECS: dict[str, tuple[str, list[str], list[str]]] = {
+    "bloom_bits": ("or", ["word"], ["bits"]),          # streaming_bloom_words
+    "lc_bits": ("or", ["lang", "word"], ["bits"]),     # streaming_lang_vocab_sketch
+    "counts_bucket": ("sum", ["bucket"], ["c_bg", "c_tg"]),  # streaming_dsir_logweights
+    "counts_bigram": ("sum", ["bigram"], ["c"]),       # streaming_lm_scores
+    "counts_word": ("sum", ["word"], ["cnt"]),         # streaming_bpe_merges
+    "counts_prefix": ("sum", ["w1"], ["c"]),           # streaming_lm_scores
+    "tokens": ("set", ["tok"], []),                    # streaming_lm_scores
+    "bands": ("rows", [], []),                         # incremental_similar_pairs
+    "shingles": ("rows", [], []),                      # incremental_similar_pairs
+    "pairs": ("rows", [], []),                         # incremental_similar_pairs
+}
+
+_FOLD_AGGS = {"sum": F.sum, "or": F.bit_or}
+
+
+@dataclass(frozen=True)
+class _StateDir:
+    """Paths and batch_id-partitioned logs under one job's state dir."""
+
+    spark: SparkSession
+    root: str
+
+    def path(self, name: str) -> str:
+        return fs_join(self.root, name)
+
+    def write(
+        self, log: str, df: DataFrame, batch_id: int, *partition_cols: str
+    ) -> None:
+        """Idempotent per-batch write: the batch lands in its own
+        ``batch_id=`` partition and dynamic overwrite replaces exactly
+        that partition on replay."""
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", *partition_cols)
+            .parquet(self.path(log))
+        )
+
+    def read(self, log: str) -> DataFrame:
+        return self.spark.read.parquet(self.path(log))
+
+    def fold(self, log: str) -> DataFrame:
+        """The one fold of ``log``'s partitions, per ``_LOG_SPECS``."""
+        kind, group_cols, value_cols = _LOG_SPECS[log]
+        df = self.read(log)
+        if kind == "set":
+            return df.select(*group_cols).distinct()
+        if kind == "rows":
+            return df.drop("batch_id")
+        agg = _FOLD_AGGS[kind]
+        return df.groupBy(*group_cols).agg(*[agg(c).alias(c) for c in value_cols])
 
 
 def _init_or_verify_split_state(
-    spark: SparkSession,
-    state_dir: str,
+    state: _StateDir,
     split_dir: str,
-    meta_path: str,
-    fingerprint: str,
-    write_split,
+    source: DataFrame,
+    meta: dict,
     label: str,
+    verify: Callable[[Row], None] | None,
 ) -> None:
-    """Shared (split, source_meta) lifecycle for the resumable
-    streaming jobs.  Two hardening rules (ADVICE r11):
-
-    * the meta commits BEFORE the split's _SUCCESS, so there is no
-      crash window in which a committed split exists without its
-      fingerprint (a crash between the two writes leaves the split
-      un-committed and the next run rebuilds both);
-    * a committed split whose meta is absent or unreadable is CORRUPT
-      state and fails fast — resuming it would make a wrong-corpus /
-      wrong-geometry reuse undetectable.
+    """Write ``meta`` as the one-row ``source_meta`` and then ``source``
+    as a 4-file split, or check a committed split's stored meta: missing
+    or empty is corrupt state; otherwise ``verify(row)`` raises on a
+    mismatch (by default the stored ``fingerprint`` must equal
+    ``meta``'s).
 
     fs_exists/fs_join, not os.path: a remote (s3a/hdfs) state_dir
     would probe False locally and re-split the source out from under
-    the committed checkpoint offsets (VERDICT r9 #5 / r11 #6)."""
+    the committed checkpoint offsets."""
+    spark, state_dir = state.spark, state.root
+    meta_path = state.path("source_meta")
     if not fs_exists(spark, fs_join(split_dir, "_SUCCESS")):
         spark.createDataFrame(
-            [(fingerprint,)], ["fingerprint"]
+            [tuple(meta.values())], list(meta)
         ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-        write_split()
+        source.repartition(4).write.mode("overwrite").parquet(split_dir)
         return
     if not fs_exists(spark, meta_path):
         raise ValueError(
@@ -66,12 +169,83 @@ def _init_or_verify_split_state(
             f"state_dir {state_dir!r} is corrupt: source_meta is empty — "
             f"rebuild this {label} with a fresh state_dir"
         )
-    if row.fingerprint != fingerprint:
+    if verify is not None:
+        verify(row)
+    elif row.fingerprint != meta["fingerprint"]:
         raise ValueError(
             f"state_dir {state_dir!r} holds a {label} built from "
             f"{row.fingerprint!r}; refusing to resume it as "
-            f"{fingerprint!r} — use a fresh state_dir per corpus"
+            f"{meta['fingerprint']!r} — use a fresh state_dir per corpus"
         )
+
+
+def _run_state_dir_job(
+    spark: SparkSession,
+    state_dir: str | None,
+    source: DataFrame,
+    meta: dict,
+    label: str,
+    process_batch: Callable[[_StateDir, DataFrame, int], None],
+    read_back: Callable[[_StateDir], object],
+    split: str = "docs_split",
+    verify: Callable[[Row], None] | None = None,
+):
+    """The frame of every state-dir job (the module docstring states its
+    contract): own a temp state dir when the caller gives none,
+    fingerprint ``source`` and split it under the state dir, drain the
+    split one file per trigger through ``process_batch(state, batch_df,
+    batch_id)``, and return ``read_back(state)``.  A DataFrame result
+    passes the ``_materialize`` barrier first, so nothing in it reads
+    the state dir once a temp one is removed."""
+    own_state = state_dir is None
+    if own_state:
+        state_dir = tempfile.mkdtemp(prefix="stream_state_")
+    state = _StateDir(spark, state_dir)
+    split_dir = state.path(split)
+    try:
+        _init_or_verify_split_state(state, split_dir, source, meta, label, verify)
+        stream = (
+            spark.readStream.format("parquet")
+            .schema(source.schema)
+            .option("maxFilesPerTrigger", 1)
+            .load(split_dir)
+        )
+        query = (
+            stream.writeStream.foreachBatch(
+                lambda batch_df, batch_id: process_batch(state, batch_df, batch_id)
+            )
+            .option("checkpointLocation", state.path("_checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        result = read_back(state)
+        if isinstance(result, DataFrame):
+            result = _materialize(result, None)
+    finally:
+        if own_state:
+            shutil.rmtree(state_dir, ignore_errors=True)
+    return result
+
+
+def _drain(
+    df: DataFrame, name: str, output_mode: str, progress_out: list | None = None
+) -> DataFrame:
+    """Run the streaming ``df`` into the memory sink ``name`` with
+    AvailableNow until its source is drained; return the sink table.
+    ``progress_out`` (a list) is extended with the query's
+    recentProgress dicts."""
+    query = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    if progress_out is not None:
+        progress_out.extend(p for p in query.recentProgress if p is not None)
+    return df.sparkSession.table(name)
 
 
 def _events_stream(
@@ -126,6 +300,21 @@ def _events_stream(
     )
 
 
+def _hourly_by_type(stream: DataFrame, watermark: str, *aggs) -> DataFrame:
+    """(event_type, hour_epoch, *aggs) over watermarked tumbling 1h
+    event-time windows per event_type."""
+    windowed = (
+        stream.withWatermark("event_time", watermark)
+        .groupBy(F.window("event_time", "1 hour").alias("w"), F.col("event_type"))
+        .agg(*aggs)
+    )
+    return windowed.select(
+        "event_type",
+        F.unix_timestamp(F.col("w.start")).alias("hour_epoch"),
+        *windowed.columns[2:],
+    )
+
+
 def streaming_hourly_rollup(
     spark: SparkSession,
     sf_dir: str,
@@ -156,40 +345,15 @@ def streaming_hourly_rollup(
     each batch and keeps all state — exact on a finite drain (the
     batch-parity oracle path), unbounded on an infinite stream.
 
-    ``progress_out`` (a list, extended with the query's recentProgress
-    dicts after the drain) exposes the per-batch state-store metrics —
-    numRowsTotal is how a test or a production monitor verifies the
-    eviction actually bounds state.
-    """
-    stream = _events_stream(spark, sf_dir, max_files_per_trigger)
-    agg = (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(
-            F.window("event_time", "1 hour").alias("w"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,9)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            F.unix_timestamp(F.col("w.start")).alias("hour_epoch"),
-            "n_events",
-            "sum_value",
-        )
+    ``progress_out``: see :func:`_drain`; its state-store numRowsTotal
+    is how a test or a monitor verifies that eviction bounds state."""
+    agg = _hourly_by_type(
+        _events_stream(spark, sf_dir, max_files_per_trigger),
+        watermark,
+        F.count("*").alias("n_events"),
+        F.sum(F.col("value").cast("decimal(38,9)")).cast("double").alias("sum_value"),
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName("streaming_hourly")
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(p for p in query.recentProgress if p is not None)
-    return spark.table("streaming_hourly")
+    return _drain(agg, "streaming_hourly", output_mode, progress_out)
 
 
 def streaming_hourly_users(
@@ -212,33 +376,13 @@ def streaming_hourly_users(
     statistical bound for arbitrary data is asserted in
     tests/test_sketches.py.
     """
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(
-            F.window("event_time", "1 hour").alias("w"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.approx_count_distinct("user_id", rsd=rsd).alias("approx_users"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            "event_type",
-            F.unix_timestamp(F.col("w.start")).alias("hour_epoch"),
-            "approx_users",
-            "n_events",
-        )
+    agg = _hourly_by_type(
+        _events_stream(spark, sf_dir),
+        watermark,
+        F.approx_count_distinct("user_id", rsd=rsd).alias("approx_users"),
+        F.count("*").alias("n_events"),
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName("streaming_hourly_users")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("streaming_hourly_users")
+    return _drain(agg, "streaming_hourly_users", "complete")
 
 
 def streaming_view_click_join(
@@ -268,30 +412,23 @@ def streaming_view_click_join(
     measured 6.5 s -> 2.8 s at sf0.1 going 32 -> 8).  None = session
     default.
     """
-    views = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts_us").alias("view_ts_us"),
-            F.col("event_time").alias("view_time"),
+
+    def side(event_type: str, user_col: str) -> DataFrame:
+        # (user, <type>_id, <type>_ts_us, <type>_time) for one event type
+        return (
+            _events_stream(spark, sf_dir)
+            .where(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(user_col),
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("ts_us").alias(f"{event_type}_ts_us"),
+                F.col("event_time").alias(f"{event_type}_time"),
+            )
+            .withWatermark(f"{event_type}_time", watermark)
         )
-        .withWatermark("view_time", watermark)
-    )
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts_us").alias("click_ts_us"),
-            F.col("event_time").alias("click_time"),
-        )
-        .withWatermark("click_time", watermark)
-    )
-    joined = views.join(
-        clicks,
+
+    joined = side("view", "user_id").join(
+        side("click", "c_user_id"),
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_time") >= F.col("view_time"))
         & (
@@ -303,17 +440,9 @@ def streaming_view_click_join(
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName("streaming_view_clicks")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        return _drain(joined, "streaming_view_clicks", "append")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table("streaming_view_clicks")
 
 
 def streaming_dedup(
@@ -346,26 +475,15 @@ def streaming_dedup(
     OWN event time is already below the watermark is dropped as late
     rather than emitted.
 
-    ``progress_out``: as on :func:`streaming_hourly_rollup` — the
-    drained query's recentProgress, carrying the stateOperators
-    numRowsTotal the boundedness test asserts on."""
+    ``progress_out``: see :func:`_drain`; its stateOperators
+    numRowsTotal is what the boundedness test asserts on."""
     stream = _events_stream(spark, sf_dir, max_files_per_trigger)
     deduped = (
         stream.withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "ts_us")
     )
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName("streaming_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    if progress_out is not None:
-        progress_out.extend(p for p in query.recentProgress if p is not None)
-    return spark.table("streaming_dedup")
+    return _drain(deduped, "streaming_dedup", "append", progress_out)
 
 
 def incremental_similar_pairs(
@@ -380,30 +498,26 @@ def incremental_similar_pairs(
     batch operators, and join it against the accumulated signature
     store.  Demonstrates the batch/streaming unification.
 
-    State lives entirely OFF the driver, in three parquet tables under
-    ``state_dir`` (band store, shingle store, emitted pairs), each
-    partitioned by batch_id and written once per micro-batch with
-    DYNAMIC partition overwrite — a replayed batch overwrites its own
-    partition instead of appending a duplicate, so every write is
-    idempotent.  Combined with the stream's checkpointLocation (source
-    offsets under ``state_dir/_checkpoint``), kill/restart resumes at
-    the first uncommitted batch and reruns over the same state_dir
-    cannot double-count.  Nothing is collect()ed and no
-    union-of-checkpoints lineage accumulates: batch N costs one scan of
-    the store, not N replays.  On a cluster, point ``state_dir`` at
-    durable storage (S3/HDFS); the default is a per-run temp dir
-    because the testdata corpus is finite.
+    State lives entirely OFF the driver, in three parquet logs under
+    ``state_dir`` (band store, shingle store, verified pairs), under the
+    module docstring's state-dir contract; the fingerprint is the corpus
+    path and the signature spec.  Batch N costs one scan of the store,
+    not N replays.  On a cluster, point ``state_dir`` at durable storage
+    (S3/HDFS).
 
     Each document belongs to exactly one batch, and a pair (a, b) is
-    emitted exactly once — at the later of its two docs' batches (cross
-    pairs: current-vs-seen band join; intra pairs: current self-join) —
-    so the output needs no cross-batch dedup.
+    verified exactly once — at the later of its two docs' batches, by
+    one band join of the batch against itself and every earlier batch —
+    so the output needs no cross-batch dedup.  The pairs log keeps every
+    verified candidate with its ``jaccard``, and ``threshold`` filters on
+    read, so a resumed state answers any threshold as a fresh run would.
+    (A state written before the log kept every candidate holds only the
+    pairs at or above the threshold of the run that wrote each batch.)
 
     The state needs map-side shingle ids ('md5' or 'xxhash'
     ``id_strategy``): 'rank' ids are ranks in each batch's own
     vocabulary, so a cfg naming 'rank' is refused before any state is
-    read or written, as the band store refuses it.
-    """
+    read or written, as the band store refuses it."""
     from mapreduce_minhash_lsh_spark.operators.lsh import compact_band_keys
     from mapreduce_minhash_lsh_spark.operators.minhash import (
         OPH_FORMAT,
@@ -411,10 +525,6 @@ def incremental_similar_pairs(
         signatures_array,
     )
     from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
-    from mapreduce_minhash_lsh_spark.operators.similarity import exact_jaccard
-
-    import shutil
-    import tempfile
 
     if cfg.id_strategy == "rank":
         raise ValueError(
@@ -424,154 +534,74 @@ def incremental_similar_pairs(
             "lost; use id_strategy 'md5' or 'xxhash'."
         )
     threshold = cfg.threshold if threshold is None else threshold
-    docs = load_table(spark, sf_dir, "documents")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="inc_state_")
-    bands_path = fs_join(state_dir, "bands")
-    shingles_path = fs_join(state_dir, "shingles")
-    pairs_path = fs_join(state_dir, "pairs")
+    spec, legacy = recorded_spec(cfg, "state_format")
 
-    def write_batch(df: DataFrame, batch_id: int, path: str) -> None:
-        # Idempotent per-batch write: the batch lands in its own
-        # batch_id= partition and dynamic overwrite replaces exactly
-        # that partition on replay (no blind append to double-count).
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+    def verify(row: Row) -> None:
+        if row.sf_dir != sf_dir:
+            raise ValueError(
+                f"state_dir {state_dir!r} was built from {row.sf_dir!r}; "
+                f"refusing to resume it against {sf_dir!r} — use a fresh "
+                "state_dir per corpus"
+            )
+        # Stored band keys / shingle ids are bytes derived from the spec:
+        # resuming under another one silently under-matches.
+        stored_spec = getattr(row, "signature_spec", None)
+        if stored_spec is not None and stored_spec != spec:
+            if stored_spec == legacy:
+                raise ValueError(
+                    f"state_dir {state_dir!r} records sig_strategy "
+                    "'oph' but was written before state format "
+                    f"{OPH_FORMAT}, which banded affine signatures "
+                    "under that spec; its band keys match no OPH "
+                    "signature.  Rebuild it with a fresh state_dir."
+                )
+            raise ValueError(
+                f"state_dir {state_dir!r} was built with signature spec "
+                f"{stored_spec}; refusing to resume it with {spec} — "
+                "band keys/shingle ids would not match.  Use the "
+                "original config or a fresh state_dir."
+            )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         sh = explode_shingles(batch_df, cfg.k)
-        bands = compact_band_keys(signatures_array(sh, cfg), cfg)
         # Write this batch to the durable store FIRST, then read the
         # store back: one materialization per lineage, and every
         # downstream reference is a plain parquet scan (no growing
         # union-of-checkpoints plan).
-        write_batch(sh, batch_id, shingles_path)
-        write_batch(bands, batch_id, bands_path)
-        all_bands = spark.read.parquet(bands_path)
-        all_sh = spark.read.parquet(shingles_path).drop("batch_id")
+        state.write("shingles", sh, batch_id)
+        bands = compact_band_keys(signatures_array(sh, cfg), cfg)
+        state.write("bands", bands, batch_id)
+        all_bands = state.read("bands")
+        # This batch against itself and every earlier batch (the
+        # compacted history included): cross and intra pairs in one join.
         cur = all_bands.where(F.col("batch_id") == batch_id)
-        seen = all_bands.where(F.col("batch_id") < batch_id)
-        cross = (
+        upto = all_bands.where(F.col("batch_id") <= batch_id)
+        cand = (
             cur.alias("a")
-            .join(seen.alias("b"), ["band", "band_key"])
+            .join(upto.alias("b"), ["band", "band_key"])
+            .where(F.col("a.doc_id") != F.col("b.doc_id"))
             .select(
                 F.least("a.doc_id", "b.doc_id").alias("doc_id_a"),
                 F.greatest("a.doc_id", "b.doc_id").alias("doc_id_b"),
             )
+            .distinct()
         )
-        intra = (
-            cur.alias("a")
-            .join(cur.alias("b"), ["band", "band_key"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id_a"),
-                F.col("b.doc_id").alias("doc_id_b"),
-            )
-        )
-        cand = cross.unionByName(intra).distinct()
-        got = exact_jaccard(cand, all_sh).where(F.col("jaccard") >= threshold)
-        write_batch(got, batch_id, pairs_path)
+        state.write("pairs", exact_jaccard(cand, state.fold("shingles")), batch_id)
 
-    # Simulate a stream over the static corpus with REAL multi-batch
-    # arrival: the source is one parquet file (=> one availableNow batch),
-    # so re-split it into 4 files first and feed them one per trigger —
-    # otherwise the cross-batch seen-store path would never execute.
-    # With a durable state_dir the split lives UNDER it and is written
-    # only once: a restart must see the same source files the committed
-    # checkpoint offsets refer to, or replayed docs would re-enter as
-    # "new" batches.
-    if own_state:
-        split_dir = tempfile.mkdtemp(prefix="inc_docs_")
-    else:
-        split_dir = fs_join(state_dir, "docs_split")
-    meta_path = fs_join(state_dir, "source_meta") if not own_state else None
-    spec, legacy = recorded_spec(cfg, "state_format")
-    try:
-        # fs_exists/fs_join, not os.path: a remote (s3a/hdfs) state_dir
-        # would probe False locally and silently re-split the source out
-        # from under the committed checkpoint offsets (VERDICT r9 #5).
-        if not fs_exists(spark, fs_join(split_dir, "_SUCCESS")):
-            # meta BEFORE the split commits (ADVICE r11): no crash
-            # window can leave a committed split without its meta.
-            if meta_path is not None:
-                spark.createDataFrame(
-                    [(sf_dir, docs.count(), spec)],
-                    ["sf_dir", "n_docs", "signature_spec"],
-                ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-            docs.repartition(4).write.mode("overwrite").parquet(split_dir)
-        elif meta_path is not None:
-            if not fs_exists(spark, meta_path):
-                raise ValueError(
-                    f"state_dir {state_dir!r} is corrupt: the stored split "
-                    "is committed but source_meta is missing — a wrong-"
-                    "corpus resume would be undetectable; rebuild with a "
-                    "fresh state_dir"
-                )
-            # The committed checkpoint's offsets refer to the stored
-            # split; silently streaming a DIFFERENT corpus over it would
-            # return the old corpus's pairs as if they were the new one's.
-            row = spark.read.parquet(meta_path).first()
-            if row is None:
-                raise ValueError(
-                    f"state_dir {state_dir!r} is corrupt: source_meta is "
-                    "empty — rebuild with a fresh state_dir"
-                )
-            if row.sf_dir != sf_dir:
-                raise ValueError(
-                    f"state_dir {state_dir!r} was built from {row.sf_dir!r}; "
-                    f"refusing to resume it against {sf_dir!r} — use a fresh "
-                    "state_dir per corpus"
-                )
-            # The stored band keys / shingle ids are BYTES derived from
-            # cfg.signature_spec(); resuming under a different spec (seed,
-            # id strategy, band count, signature scheme) silently
-            # under-matches — the same failure mode the band
-            # store guards against (operators/bandstore.py).  Fail fast.
-            stored_spec = getattr(row, "signature_spec", None)
-            if stored_spec is not None and stored_spec != spec:
-                if stored_spec == legacy:
-                    raise ValueError(
-                        f"state_dir {state_dir!r} records sig_strategy "
-                        "'oph' but was written before state format "
-                        f"{OPH_FORMAT}, which banded affine signatures "
-                        "under that spec; its band keys match no OPH "
-                        "signature.  Rebuild it with a fresh state_dir."
-                    )
-                raise ValueError(
-                    f"state_dir {state_dir!r} was built with signature spec "
-                    f"{stored_spec}; refusing to resume it with {spec} — "
-                    "band keys/shingle ids would not match.  Use the "
-                    "original config or a fresh state_dir."
-                )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        result = (
-            spark.read.parquet(pairs_path)
+    def read_back(state: _StateDir) -> DataFrame:
+        return (
+            state.fold("pairs")
+            .where(F.col("jaccard") >= threshold)
             .select("doc_id_a", "doc_id_b", "jaccard")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        if own_state:
-            shutil.rmtree(split_dir, ignore_errors=True)
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return result
+
+    # n_docs is never read; -1 keeps the column (and its type) that
+    # metas written with the corpus count carry.
+    return _run_state_dir_job(
+        spark, state_dir, load_table(spark, sf_dir, "documents"),
+        {"sf_dir": sf_dir, "n_docs": -1, "signature_spec": spec},
+        "incremental pair state", process_batch, read_back, verify=verify,
+    )
 
 
 def streaming_ivf_index(
@@ -591,83 +621,37 @@ def streaming_ivf_index(
     deterministic sample — the moral equivalent of "yesterday's index"
     whose centroids a production ingest reuses; retraining per batch
     would silently re-map previously assigned lists (the exact failure
-    the ``cents`` parameter exists to prevent).  Each micro-batch is
-    written to its own ``batch_id=`` partition with dynamic partition
-    overwrite (idempotent on replay, same contract as
-    ``incremental_similar_pairs``), sub-partitioned by ``list_id`` so a
-    query's probed lists prune to files.
+    the ``cents`` parameter exists to prevent).  Each micro-batch's
+    ``batch_id=`` partition is sub-partitioned by ``list_id`` so a
+    query's probed lists prune to files.  State: the module docstring's
+    state-dir contract; the fingerprint pins corpus and quantizer shape.
 
     Returns (neighbor_id, list_id) for the whole corpus — byte-equal to
     a one-shot batch ``ivf_index`` under the same centroids, which is
     exactly what the DuckDB oracle (the unrolled-Lloyd assignment CTE)
     reproduces."""
-    import shutil
-    import tempfile
-
     from mapreduce_minhash_lsh_spark.operators.ann import _centroids, ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _centroids(emb, n_lists, lloyd_iters, "vec_id", "embedding")
 
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="ivf_stream_")
-    split_dir = fs_join(state_dir, "emb_split")
-    idx_path = fs_join(state_dir, "index")
-    meta_path = fs_join(state_dir, "source_meta")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         _, corpus = ivf_index(batch_df, cents=cents)
-        (
-            corpus.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(idx_path)
+        state.write("index", corpus, batch_id, "list_id")
+
+    def read_back(state: _StateDir) -> DataFrame:
+        # list_id comes back from DIRECTORY NAMES (partition-column
+        # inference -> int); pin the written long type for the
+        # schema-exact oracle compare.
+        return state.read("index").select(
+            "neighbor_id", F.col("list_id").cast("long").alias("list_id")
         )
 
-    try:
-        # STATE-REUSE CONTRACT (same as incremental_similar_pairs): a
-        # caller-supplied state_dir means "resume THIS corpus's index" —
-        # the committed checkpoint offsets refer to the stored split, so
-        # reuse against a different corpus or quantizer shape would
-        # silently return the previous index.  Fingerprint the input on
-        # first build and fail fast on mismatch instead.  fs_exists, not
-        # os.path.exists: a remote state_dir would probe False locally
-        # and re-split the source under the checkpoint (VERDICT r9 #5).
-        # one file per trigger => real multi-batch arrival over the
-        # static corpus (see incremental_similar_pairs for why)
-        _init_or_verify_split_state(
-            spark, state_dir, split_dir, meta_path,
-            f"{sf_dir}|n_lists={n_lists}|lloyd_iters={lloyd_iters}",
-            lambda: emb.repartition(4).write.mode("overwrite").parquet(split_dir),
-            label="index",
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        result = (
-            spark.read.parquet(idx_path)
-            # list_id comes back from DIRECTORY NAMES (partition-column
-            # inference -> int); pin the written long type for the
-            # schema-exact oracle compare.
-            .select("neighbor_id", F.col("list_id").cast("long").alias("list_id"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        if own_state:
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return result
+    return _run_state_dir_job(
+        spark, state_dir, emb,
+        {"fingerprint": f"{sf_dir}|n_lists={n_lists}|lloyd_iters={lloyd_iters}"},
+        "index", process_batch, read_back, split="emb_split",
+    )
 
 
 def streaming_lm_scores(
@@ -676,33 +660,12 @@ def streaming_lm_scores(
     state_dir: str | None = None,
 ) -> DataFrame:
     """Bigram-LM quality scoring with the LM maintained INCREMENTALLY:
-    stream the documents table in micro-batches, append each batch's
-    bigram/prefix count DELTAS (and its token set) to a partitioned
-    parquet count log, then score the corpus against the accumulated
-    LM — the continuous-crawl shape of operators/lm.py, mirroring
-    streaming_ivf_index's contract.
-
-    The count store is a LOG, not a read-modify-write table: every
-    batch writes its deltas under its own ``batch_id=`` partition with
-    dynamic partition overwrite (idempotent on checkpoint replay — a
-    replayed batch overwrites its own partition instead of
-    double-counting), and the LM is compacted ON READ with one groupBy
-    SUM.  Integer count sums are associative, so the accumulated LM is
-    EXACTLY the batch-trained LM regardless of how the corpus was
-    micro-batched — which is why the oracle is ngram_lm_scores' SQL
-    verbatim (batch-equivalence, the streaming family's standard
-    check).  Roll the log up between runs with :func:`compact_state`
-    (the read-side groupBy, materialized to one partition); the
-    replay-equivalence tests prove compaction commutes with further
-    ingest.
-
-    STATE-REUSE CONTRACT: same as streaming_ivf_index — a caller
-    state_dir means "resume THIS corpus's count log"; the input is
-    fingerprinted on first build and mismatching reuse fails fast.
-    """
-    import shutil
-    import tempfile
-
+    stream the documents table in micro-batches, log each batch's
+    bigram/prefix count DELTAS (and its token set), then score the
+    corpus against the folded LM — the continuous-crawl shape of
+    operators/lm.py; the oracle is ngram_lm_scores' SQL verbatim.  Roll
+    the log up between runs with :func:`compact_state`.  State: the
+    module docstring's state-dir contract; the fingerprint is the corpus."""
     from mapreduce_minhash_lsh_spark.operators.lm import (
         BigramLM,
         _doc_bigrams,
@@ -711,69 +674,33 @@ def streaming_lm_scores(
     from mapreduce_minhash_lsh_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="lm_stream_")
-    split_dir = fs_join(state_dir, "docs_split")
-    bg_path = fs_join(state_dir, "counts_bigram")
-    w1_path = fs_join(state_dir, "counts_prefix")
-    tok_path = fs_join(state_dir, "tokens")
-    meta_path = fs_join(state_dir, "source_meta")
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         bg = _doc_bigrams(batch_df, "text", "doc_id")
-        for rel, path in (
-            (bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c")), bg_path),
-            (bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c")), w1_path),
+        for log, rel in (
+            ("counts_bigram", bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c"))),
+            ("counts_prefix", bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c"))),
             (
+                "tokens",
                 batch_df.where(F.size(tokens(F.col("text"))) >= 2)
                 .select(F.explode(tokens(F.col("text"))).alias("tok"))
                 .distinct(),
-                tok_path,
             ),
         ):
-            (
-                rel.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+            state.write(log, rel, batch_id)
 
-    try:
-        _init_or_verify_split_state(
-            spark, state_dir, split_dir, meta_path,
-            f"{sf_dir}|bigram_lm",
-            lambda: docs.repartition(4).write.mode("overwrite").parquet(split_dir),
-            label="count log",
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    def read_back(state: _StateDir) -> DataFrame:
         lm = BigramLM(
-            bigrams=spark.read.parquet(bg_path)
-            .groupBy("bigram").agg(F.sum("c").alias("c_bg")),
-            prefixes=spark.read.parquet(w1_path)
-            .groupBy("w1").agg(F.sum("c").alias("c_w1")),
-            vocab=spark.read.parquet(tok_path)
-            .agg(F.countDistinct("tok").alias("vsz")),
+            bigrams=state.fold("counts_bigram").withColumnRenamed("c", "c_bg"),
+            prefixes=state.fold("counts_prefix").withColumnRenamed("c", "c_w1"),
+            vocab=state.fold("tokens").agg(F.count("tok").alias("vsz")),
         )
-        # materialize before the state dir (which the LM reads) goes away
-        result = bigram_lm_scores(docs, lm=lm).localCheckpoint(eager=True)
-    finally:
-        if own_state:
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return result
+        return bigram_lm_scores(docs, lm=lm)
+
+    return _run_state_dir_job(
+        spark, state_dir, docs, {"fingerprint": f"{sf_dir}|bigram_lm"},
+        "count log", process_batch, read_back,
+    )
 
 
 def streaming_bloom_words(
@@ -786,44 +713,24 @@ def streaming_bloom_words(
     """Build the benchmark-decontamination Bloom filter INCREMENTALLY:
     stream the documents table in micro-batches, extract each batch's
     benchmark 3-grams (doc_id % 97 == 0 — the same held-out split as
-    the batch query), and append the batch's (word, bits) Bloom
-    contributions to a partitioned parquet bit log.  The filter is
-    compacted ON READ with one groupBy bit_or — OR is associative,
-    commutative AND idempotent, so the accumulated filter is EXACTLY
-    the batch-built one regardless of micro-batching, duplicate grams
-    across batches, or checkpoint replay (a replayed batch overwrites
-    its own ``batch_id=`` partition via dynamic partition overwrite,
-    and re-ORing identical bits is a no-op anyway — the strongest
-    idempotency in the streaming family).
+    the batch query), and log the batch's (word, bits) Bloom
+    contributions, folded on read with bit_or.  OR is also idempotent,
+    so duplicate grams across batches and re-ORed replays are no-ops
+    even before the partition overwrite.
 
     Returns the dense word array (ceil(m_bits/60) longs), ready for
     :func:`operators.bloom.bloom_might_contain` — the production shape:
     the filter updates continuously as new benchmark releases land,
-    scoring jobs read the compacted bitmap.
-
-    STATE-REUSE CONTRACT: same as streaming_ivf_index /
-    streaming_lm_scores — a caller state_dir means "resume THIS
-    corpus's bit log"; the input is fingerprinted on first build and
-    mismatching reuse fails fast.
-    """
-    import shutil
-    import tempfile
-
+    scoring jobs read the compacted bitmap.  State: the module
+    docstring's state-dir contract; the fingerprint pins corpus and
+    filter geometry."""
     from mapreduce_minhash_lsh_spark.functions.text import word_ngrams
     from mapreduce_minhash_lsh_spark.operators.bloom import (
         BLOOM_WORD_BITS,
         bloom_positions,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="bloom_stream_")
-    split_dir = fs_join(state_dir, "docs_split")
-    bits_path = fs_join(state_dir, "bloom_bits")
-    meta_path = fs_join(state_dir, "source_meta")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         toks = F.split(F.col("text"), " ")
         grams = (
             batch_df.where((F.col("doc_id") % 97 == 0) & (F.size(toks) >= 3))
@@ -838,55 +745,29 @@ def streaming_bloom_words(
                 F.array(*bloom_positions(F.col("gram"), m_bits, k))
             ).alias("pos")
         )
-        (
+        bits = (
             pos.select(
                 (F.col("pos") / BLOOM_WORD_BITS).cast("long").alias("word"),
                 (F.col("pos") % BLOOM_WORD_BITS).cast("int").alias("bit"),
             )
             .groupBy("word")
             .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bits_path)
         )
+        state.write("bloom_bits", bits, batch_id)
 
-    try:
-        _init_or_verify_split_state(
-            spark, state_dir, split_dir, meta_path,
-            f"{sf_dir}|bloom|{m_bits}|{k}",
-            lambda: docs.repartition(4).write.mode("overwrite").parquet(split_dir),
-            label="Bloom bit log",
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    def read_back(state: _StateDir) -> list[int]:
         n_words = -(-m_bits // BLOOM_WORD_BITS)
         words = [0] * n_words
-        if fs_exists(spark, bits_path):
-            rows = (
-                spark.read.parquet(bits_path)
-                .groupBy("word")
-                .agg(F.bit_or("bits").alias("bits"))
-                .collect()
-            )
-            for r in rows:
+        if fs_exists(spark, state.path("bloom_bits")):
+            for r in state.fold("bloom_bits").collect():
                 words[r["word"]] = r["bits"]
-    finally:
-        if own_state:
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return words
+        return words
+
+    return _run_state_dir_job(
+        spark, state_dir, load_table(spark, sf_dir, "documents"),
+        {"fingerprint": f"{sf_dir}|bloom|{m_bits}|{k}"},
+        "Bloom bit log", process_batch, read_back,
+    )
 
 
 def streaming_dsir_logweights(
@@ -897,49 +778,23 @@ def streaming_dsir_logweights(
 ) -> DataFrame:
     """DSIR importance weights with the two hashed-n-gram multinomials
     maintained INCREMENTALLY: stream the documents table in
-    micro-batches, append each batch's per-bucket (background count,
-    target count) DELTAS to a batch_id-partitioned parquet count log,
-    then score the corpus against the accumulated model — the
-    continuous-crawl shape of operators/dsir.py, completing the
-    selection family's streaming story next to streaming_lm_scores
-    (count-delta log) and streaming_bloom_words (bit log).
-
-    The log is compacted ON READ with one groupBy SUM; integer count
-    sums are associative, so the accumulated model is EXACTLY the
-    batch-trained one under any micro-batching, and a checkpoint
-    replay overwrites its own ``batch_id=`` partition instead of
-    double-counting (dynamic partition overwrite — the family's
-    idempotency contract).  Scoring goes through
-    operators/dsir.dsir_score_from_counts, the same code path the
-    batch operator uses, so the oracle is dsir_logweights' SQL
-    verbatim (batch equivalence).  At 100 TB each batch's delta
-    relation is bounded by n_buckets rows regardless of batch size —
-    the count log grows with BATCH COUNT, not corpus size, and
-    :func:`compact_state` (the read-side groupBy, materialized to one
-    partition between runs) bounds that too.
-
-    STATE-REUSE CONTRACT: same as the other fingerprinted jobs —
-    a caller state_dir means "resume THIS corpus's count log";
-    mismatching corpus/geometry fails fast, and a committed split
-    with missing meta is corrupt state.
-    """
-    import shutil
-    import tempfile
-
+    micro-batches, log each batch's per-bucket (background count, target
+    count) DELTAS, then score the corpus against the folded model
+    through operators/dsir.dsir_score_from_counts, the batch operator's
+    own scoring path — so the oracle is dsir_logweights' SQL verbatim.
+    Each batch's delta relation is bounded by n_buckets rows regardless
+    of batch size, so the log grows with BATCH COUNT, not corpus size,
+    and :func:`compact_state` bounds that too.  State: the module
+    docstring's state-dir contract; the fingerprint pins corpus and
+    bucket count."""
     from mapreduce_minhash_lsh_spark.operators.dsir import (
         doc_feature_buckets,
         dsir_score_from_counts,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="dsir_stream_")
-    split_dir = fs_join(state_dir, "docs_split")
-    cnt_path = fs_join(state_dir, "counts_bucket")
-    meta_path = fs_join(state_dir, "source_meta")
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         flagged = batch_df.select(
             F.col("doc_id"),
             F.col("text"),
@@ -953,46 +808,15 @@ def streaming_dsir_logweights(
                 F.sum(F.col("_is_t").cast("long")).alias("c_tg"),
             )
         )
-        (
-            deltas.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(cnt_path)
-        )
+        state.write("counts_bucket", deltas, batch_id)
 
-    try:
-        _init_or_verify_split_state(
-            spark, state_dir, split_dir, meta_path,
-            f"{sf_dir}|dsir|{n_buckets}",
-            lambda: docs.repartition(4).write.mode("overwrite").parquet(split_dir),
-            label="DSIR count log",
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        counts = (
-            spark.read.parquet(cnt_path)
-            .groupBy("bucket")
-            .agg(F.sum("c_bg").alias("c_bg"), F.sum("c_tg").alias("c_tg"))
-        )
-        result = dsir_score_from_counts(
-            docs, counts, n_buckets
-        ).localCheckpoint(eager=True)
-    finally:
-        if own_state:
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return result
+    def read_back(state: _StateDir) -> DataFrame:
+        return dsir_score_from_counts(docs, state.fold("counts_bucket"), n_buckets)
+
+    return _run_state_dir_job(
+        spark, state_dir, docs, {"fingerprint": f"{sf_dir}|dsir|{n_buckets}"},
+        "DSIR count log", process_batch, read_back,
+    )
 
 
 def streaming_lang_vocab_sketch(
@@ -1003,43 +827,23 @@ def streaming_lang_vocab_sketch(
 ) -> DataFrame:
     """Per-language vocabulary cardinality with the linear-counting
     bitmaps maintained INCREMENTALLY: stream the documents table in
-    micro-batches, OR each batch's (lang, word, bits) contributions
-    into a batch_id-partitioned bit log, compact on read, estimate —
-    the continuous-crawl vocabulary-growth monitor, completing the
-    streaming x sketch matrix (Bloom bit log: membership; DSIR count
-    log: frequencies; this: cardinality).
-
-    Bitwise OR is associative, commutative and IDEMPOTENT, so the
-    accumulated bitmaps equal the batch-built ones exactly under any
-    micro-batching, duplicate grams across batches, or checkpoint
-    replay (a replayed batch also overwrites its own partition — two
-    independent idempotency layers, the Bloom job's contract).  The
-    estimate is computed by the same quantized expression the batch
-    operator uses, so the oracle is lang_vocab_sketch's SQL verbatim
-    (batch equivalence).  Fully distributed end to end: the bit log
-    is bounded by batches x langs x ceil(m/60) rows and never touches
-    the driver.
-
-    STATE-REUSE CONTRACT: same as the other fingerprinted jobs.
-    """
-    import shutil
-    import tempfile
-
+    micro-batches, log each batch's (lang, word, bits) contributions,
+    fold on read with bit_or, estimate — the continuous-crawl
+    vocabulary-growth monitor (Bloom bit log: membership; DSIR count
+    log: frequencies; this: cardinality).  The estimate is the batch
+    operator's quantized expression, so the oracle is
+    lang_vocab_sketch's SQL verbatim.  The bit log is bounded by
+    batches x langs x ceil(m/60) rows and never touches the driver.
+    State: the module docstring's state-dir contract; the fingerprint
+    pins corpus and bitmap size."""
     from mapreduce_minhash_lsh_spark.functions.text import word_ngrams
     from mapreduce_minhash_lsh_spark.operators.cardinality import (
         LC_WORD_BITS,
         lc_bit_position,
+        lc_estimate_from_set_bits,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="lc_stream_")
-    split_dir = fs_join(state_dir, "docs_split")
-    bits_path = fs_join(state_dir, "lc_bits")
-    meta_path = fs_join(state_dir, "source_meta")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         toks = F.split(F.col("text"), " ")
         pos = (
             batch_df.where(F.size(toks) >= 3)
@@ -1052,7 +856,7 @@ def streaming_lang_vocab_sketch(
                 lc_bit_position(F.col("gram"), m_bits).alias("pos"),
             )
         )
-        (
+        bits = (
             pos.select(
                 "lang",
                 (F.col("pos") / LC_WORD_BITS).cast("long").alias("word"),
@@ -1060,52 +864,21 @@ def streaming_lang_vocab_sketch(
             )
             .groupBy("lang", "word")
             .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bits_path)
         )
+        state.write("lc_bits", bits, batch_id)
 
-    try:
-        _init_or_verify_split_state(
-            spark, state_dir, split_dir, meta_path,
-            f"{sf_dir}|lc|{m_bits}",
-            lambda: docs.repartition(4).write.mode("overwrite").parquet(split_dir),
-            label="cardinality bit log",
+    def read_back(state: _StateDir) -> DataFrame:
+        set_bits = state.fold("lc_bits").groupBy("lang").agg(
+            F.sum(F.bit_count("bits")).cast("long").alias("n_set_bits")
         )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        words = (
-            spark.read.parquet(bits_path)
-            .groupBy("lang", "word")
-            .agg(F.bit_or("bits").alias("_bits"))
-        )
-        from mapreduce_minhash_lsh_spark.operators.cardinality import (
-            lc_estimate_from_set_bits,
-        )
+        return lc_estimate_from_set_bits(set_bits, m_bits, ["lang"])
 
-        set_bits = words.groupBy("lang").agg(
-            F.sum(F.bit_count("_bits")).cast("long").alias("n_set_bits")
-        )
-        result = lc_estimate_from_set_bits(
-            set_bits, m_bits, ["lang"]
-        ).localCheckpoint(eager=True)
-    finally:
-        if own_state:
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return result
+    return _run_state_dir_job(
+        spark, state_dir, load_table(spark, sf_dir, "documents"),
+        {"fingerprint": f"{sf_dir}|lc|{m_bits}"},
+        "cardinality bit log", process_batch, read_back,
+    )
+
 
 def streaming_bpe_merges(
     spark: SparkSession,
@@ -1116,128 +889,49 @@ def streaming_bpe_merges(
     min_count: int = 1,
 ) -> DataFrame:
     """BPE merge training with the word-frequency table maintained
-    INCREMENTALLY: stream the documents table in micro-batches, append
-    each batch's per-word count DELTAS to a batch_id-partitioned
-    parquet count log, then train on the folded counts — the
-    continuous-crawl shape of ``operators/bpe.learn_bpe_merges``,
-    extending the streaming x model matrix (Bloom bit log: membership;
-    DSIR / bigram-LM count logs: frequencies; LC bit log: cardinality;
-    this: the tokenizer itself).  As new crawl lands, the frequency
-    table absorbs it and retraining needs no corpus re-scan — the
-    corpus-scale word-count shuffle is amortized across ingestion.
+    INCREMENTALLY: stream the documents table in micro-batches, log each
+    batch's per-word count DELTAS, then train on the folded counts — the
+    continuous-crawl shape of ``operators/bpe.learn_bpe_merges``.  As new
+    crawl lands, the frequency table absorbs it and retraining needs no
+    corpus re-scan.  Training goes through
+    ``learn_bpe_merges_from_freqs``, the batch operator's own loop, so
+    the oracle is ``bpe_learned_merges``' SQL verbatim.  Each batch's
+    delta relation is bounded by the BATCH vocabulary;
+    :func:`compact_state` bounds the log's growth with batch count.
 
-    The log is compacted ON READ with one groupBy SUM; integer count
-    sums are associative, so the folded table is EXACTLY the
-    batch-computed ``word_frequencies`` under any micro-batching, and
-    a checkpoint replay overwrites its own ``batch_id=`` partition
-    instead of double-counting (dynamic partition overwrite — the
-    family's idempotency contract).  Training goes through
-    ``learn_bpe_merges_from_freqs``, the same loop the batch operator
-    uses, so the oracle is ``bpe_learned_merges``' SQL verbatim (batch
-    equivalence).  Each batch's delta relation is bounded by the
-    BATCH vocabulary (the ``counts_bigram`` shape, not a fixed
-    geometry); :func:`compact_state` (kind "sum") bounds the log's
-    growth with batch count.
-
-    STATE-REUSE CONTRACT: a caller state_dir means "resume THIS
-    corpus's count log" — the fingerprint pins corpus and
-    word_pattern (what the LOG depends on; n_merges/min_count are
-    read-side and free to vary across runs on the same log)."""
-    import shutil
-    import tempfile
-
+    State: the module docstring's state-dir contract; the fingerprint
+    pins corpus and word_pattern (what the LOG depends on;
+    n_merges/min_count are read-side and free to vary across runs on
+    the same log)."""
     from mapreduce_minhash_lsh_spark.operators.bpe import (
         _words,
         learn_bpe_merges_from_freqs,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="bpe_stream_")
-    split_dir = fs_join(state_dir, "docs_split")
-    cnt_path = fs_join(state_dir, "counts_word")
-    meta_path = fs_join(state_dir, "source_meta")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
         deltas = (
             _words(batch_df, "text", word_pattern)
             .groupBy("word")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        (
-            deltas.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(cnt_path)
-        )
+        state.write("counts_word", deltas, batch_id)
 
-    try:
-        _init_or_verify_split_state(
-            spark, state_dir, split_dir, meta_path,
-            f"{sf_dir}|bpe_words|{word_pattern}",
-            lambda: docs.repartition(4).write.mode("overwrite").parquet(split_dir),
-            label="BPE word-count log",
-        )
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(split_dir)
-        )
-        query = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", fs_join(state_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        freqs = (
-            spark.read.parquet(cnt_path)
-            .groupBy("word")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
+    def read_back(state: _StateDir) -> DataFrame:
+        freqs = state.fold("counts_word")
         if min_count > 1:
             freqs = freqs.where(F.col("cnt") >= F.lit(min_count))
-        # The training loop collects its bounded per-iteration argmax
-        # rows eagerly and returns a driver-created relation, so
-        # nothing in the result depends on the state dir afterwards.
-        result = learn_bpe_merges_from_freqs(freqs, n_merges)
-    finally:
-        if own_state:
-            shutil.rmtree(state_dir, ignore_errors=True)
-    return result
+        return learn_bpe_merges_from_freqs(freqs, n_merges)
+
+    return _run_state_dir_job(
+        spark, state_dir, load_table(spark, sf_dir, "documents"),
+        {"fingerprint": f"{sf_dir}|bpe_words|{word_pattern}"},
+        "BPE word-count log", process_batch, read_back,
+    )
 
 
 # ---------------------------------------------------------------------------
-# Log compaction (round 13 — VERDICT r12 "What's missing" #2)
+# Log compaction
 # ---------------------------------------------------------------------------
-
-# Every compactable log under a streaming state_dir, with the fold that
-# makes compaction a no-op algebraically: subdir -> (kind, group_cols,
-# value_cols).  kind "sum" folds with SUM (associative integer counts),
-# "or" with bit_or (associative, commutative, idempotent), "set" with
-# DISTINCT (set union), "rows" with plain UNION — each doc belongs to
-# exactly one micro-batch, so the row-store partitions are disjoint and
-# the "fold" is an identity rewrite that exists purely to collapse
-# one-directory-per-batch into one partition (the listing-cost argument
-# of SCALE.md §17 applies to the row stores exactly as to the bit/count
-# logs; VERDICT r13 missing #3).  These are exactly the read-side
-# combinations the owning jobs already apply, so ingest -> compact ->
-# ingest more yields bit-identical results to never compacting.
-_LOG_SPECS: dict[str, tuple[str, list[str], list[str]]] = {
-    "bloom_bits": ("or", ["word"], ["bits"]),          # streaming_bloom_words
-    "lc_bits": ("or", ["lang", "word"], ["bits"]),     # streaming_lang_vocab_sketch
-    "counts_bucket": ("sum", ["bucket"], ["c_bg", "c_tg"]),  # streaming_dsir_logweights
-    "counts_bigram": ("sum", ["bigram"], ["c"]),       # streaming_lm_scores
-    "counts_word": ("sum", ["word"], ["cnt"]),         # streaming_bpe_merges
-    "counts_prefix": ("sum", ["w1"], ["c"]),           # streaming_lm_scores
-    "tokens": ("set", ["tok"], []),                    # streaming_lm_scores
-    "bands": ("rows", [], []),                         # incremental_similar_pairs
-    "shingles": ("rows", [], []),                      # incremental_similar_pairs
-    "pairs": ("rows", [], []),                         # incremental_similar_pairs
-}
 
 # Row-store compaction output sizing: one output file per this many
 # rows (the fold kinds are bounded by their bucket/bitmap geometry and
@@ -1257,35 +951,16 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
     """Materialize the read-side fold of every batch_id-partitioned log
     under ``state_dir`` into a single ``batch_id=-1`` partition.
 
-    The log-based streaming jobs (Bloom bit log, DSIR count log,
-    linear-counting bit log, bigram-LM count log) append one bounded
-    partition per micro-batch; their docstrings promise that "a periodic
-    compaction bounds that too" — this is that job.  A long-lived ingest
-    otherwise accumulates one directory per micro-batch forever: the
-    DATA stays bounded (each partition is capped by the bucket/bitmap
-    geometry), but listing cost and small-file count grow with batch
-    count.  The ROW stores of ``incremental_similar_pairs`` (band /
-    shingle / emitted-pairs parquet, disjoint rows per batch) have the
-    same listing-cost growth and compact under the same mechanism as an
-    identity rewrite (kind "rows" — no fold needed, the rewrite exists
-    to collapse one-directory-per-batch into one; VERDICT r13 #3).
-    After compaction the log holds ONE partition whose batch_id (-1)
-    sorts BELOW every real micro-batch id, so the incremental job's
-    ``batch_id < current`` seen-store predicate naturally includes the
-    compacted history; later batches land beside it with their real
-    (>= 0) ids, and the read-side groupBy/union folds old + new exactly
-    as before — SUM/OR/DISTINCT/disjoint-UNION are associative, so
-    compacting commutes with further ingest.
-
-    SAFETY — compaction must never race a replayable batch: a micro-batch
-    whose sink write committed but whose checkpoint commit did not will
-    be RE-RUN on restart; if compaction folded that batch's partition
-    into ``batch_id=-1`` first, the replay re-creates the partition and
-    a SUM log double-counts it.  So this job refuses to run while the
-    state's checkpoint has an offset without a matching commit (run it
-    between drained AvailableNow runs, or after a clean stream stop —
-    the natural maintenance window).  Single-writer discipline is
-    assumed, as for any compaction job.
+    A long-lived ingest otherwise accumulates one directory per
+    micro-batch forever: the fold logs' data stays bounded by their
+    bucket/bitmap geometry and the row stores of
+    ``incremental_similar_pairs`` compact as an identity rewrite, but
+    listing cost and small-file count grow with batch count.  Later
+    batches land beside the compacted partition and fold with it (the
+    incremental job's ``batch_id <= current`` band join includes it).
+    Refuses while a batch is pending replay (the module docstring's
+    compaction-safety rule); run it between drained AvailableNow runs or
+    after a clean stream stop, with a single writer.
 
     The swap itself is crash-recoverable: the fold is staged to
     ``<log>__compact_tmp``, the live log is renamed aside, the staged
@@ -1295,14 +970,7 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
     atomic there — same caveat as upsert_parquet.)
 
     Returns per-log stats: ``{log: {"partitions_before": N,
-    "partitions_after": 1, "rows_before": R, "rows_after": r}}``.
-    """
-    from mapreduce_minhash_lsh_spark.sources.fs import (
-        fs_delete,
-        fs_list_names,
-        fs_rename,
-    )
-
+    "partitions_after": 1, "rows_before": R, "rows_after": r}}``."""
     cp = fs_join(state_dir, "_checkpoint")
     pending = _max_numbered(
         fs_list_names(spark, fs_join(cp, "offsets"))
@@ -1315,9 +983,10 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
             "the sum logs. Drain or cleanly stop the stream, then compact."
         )
 
+    state = _StateDir(spark, state_dir)
     stats: dict[str, dict] = {}
-    for log, (kind, group_cols, value_cols) in _LOG_SPECS.items():
-        path = fs_join(state_dir, log)
+    for log, (kind, _, _) in _LOG_SPECS.items():
+        path = state.path(log)
         tmp = path + "__compact_tmp"
         old = path + "__compact_old"
         # Crash recovery from a previous interrupted compaction: the live
@@ -1336,27 +1005,14 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
             fs_delete(spark, tmp)
             fs_delete(spark, old)
 
-        df = spark.read.parquet(path)
         parts_before = len(
             [n for n in fs_list_names(spark, path) if n.startswith("batch_id=")]
         )
-        rows_before = df.count()
-        if kind == "sum":
-            folded = df.groupBy(*group_cols).agg(
-                *[F.sum(c).alias(c) for c in value_cols]
-            )
-        elif kind == "or":
-            folded = df.groupBy(*group_cols).agg(
-                *[F.bit_or(c).alias(c) for c in value_cols]
-            )
-        elif kind == "rows":
-            # Disjoint rows per batch: identity rewrite, sized so the
-            # single batch_id=-1 partition holds bounded-size files
-            # written by parallel tasks (not one giant single-task file).
+        rows_before = state.read(log).count()
+        folded = state.fold(log)
+        if kind == "rows":
             n_files = max(1, -(-rows_before // _COMPACT_ROWS_PER_FILE))
-            folded = df.drop("batch_id").repartition(n_files)
-        else:  # set
-            folded = df.select(*group_cols).distinct()
+            folded = folded.repartition(n_files)
         (
             folded.withColumn("batch_id", F.lit(_COMPACTED_BATCH_ID))
             .write.mode("overwrite")

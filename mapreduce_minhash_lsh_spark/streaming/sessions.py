@@ -28,7 +28,8 @@ from pyspark.sql.types import (
 )
 
 from mapreduce_minhash_lsh_spark.plans.events import SESSION_GAP_US
-from mapreduce_minhash_lsh_spark.streaming.jobs import _events_stream
+from mapreduce_minhash_lsh_spark.operators.similarity import _materialize
+from mapreduce_minhash_lsh_spark.streaming.jobs import _drain, _events_stream
 
 OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
@@ -135,19 +136,12 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _SINK_SEQ[0] += 1
     name = f"streaming_sessions_{_SINK_SEQ[0]}"
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drained = _drain(sessions, name, "append")
     # Copy the result out of the memory sink, then DROP the sink table:
     # each call registers a fresh streaming_sessions_N temp view holding
     # the full closed-session result set in driver memory, so repeated
     # invocations (bench loops, parity sweeps) would otherwise accumulate
     # result sets for the life of the session.
-    result = spark.table(name).localCheckpoint(eager=True)
+    result = _materialize(drained, None)
     spark.catalog.dropTempView(name)
     return result

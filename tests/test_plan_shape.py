@@ -582,3 +582,24 @@ def test_oph_similar_pairs_job_budget(spark, monkeypatch):
     jobs, shuffle = _sf001_jobs(spark, monkeypatch, "oph_similar_pairs")
     assert jobs <= 9, jobs
     assert shuffle <= 728_374, shuffle
+
+
+def test_band_rows_compute_each_band_key_once(spark):
+    """Spark infers a ``size(keys) > 0`` filter under a ``posexplode`` of
+    an attribute and pushes it below the projection that builds the
+    keys, so every md5 band key was computed twice per document.
+    ``_band_rows`` explodes with ``posexplode_outer`` (no inferred
+    filter; the key array is never empty), so its executed plan has no
+    Filter and exactly num_bands md5 calls."""
+    from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
+    from mapreduce_minhash_lsh_spark.operators.lsh import _band_rows
+
+    cfg = MinHashLSHConfig(num_hashes=16, num_bands=4, id_strategy="md5")
+    sig = spark.range(64).selectExpr(
+        "id AS doc_id", "transform(sequence(0, 15), j -> id * 31 + j) AS sig"
+    )
+    rows = _band_rows(sig, cfg)
+    assert rows.count() == 64 * cfg.num_bands
+    executed = plan(rows)
+    assert "Filter" not in executed, executed
+    assert executed.count("md5(") == cfg.num_bands, executed

@@ -877,3 +877,86 @@ def test_compact_state_bpe_word_log(spark, tmp_path):
         spark, tmp_path, run, lambda df: sorted(map(tuple, df.collect()))
     )
     assert "counts_word" in stats
+
+
+# --- the shared state-dir contract (streaming/jobs.py module docstring) ----
+
+import pytest  # noqa: E402
+
+from mapreduce_minhash_lsh_spark.streaming import jobs as _jobs  # noqa: E402
+
+# Every state-dir job, run over one state_dir at sf0.001.
+_STATE_DIR_JOBS = {
+    "incremental_similar_pairs": lambda spark, sf, state: _jobs.incremental_similar_pairs(
+        spark, sf, MinHashLSHConfig(num_hashes=32, num_bands=4, id_strategy="md5"),
+        state_dir=state,
+    ),
+    "streaming_ivf_index": lambda spark, sf, state: _jobs.streaming_ivf_index(
+        spark, sf, n_lists=8, state_dir=state
+    ),
+    "streaming_lm_scores": lambda spark, sf, state: _jobs.streaming_lm_scores(
+        spark, sf, state_dir=state
+    ),
+    "streaming_bloom_words": lambda spark, sf, state: _jobs.streaming_bloom_words(
+        spark, sf, state_dir=state
+    ),
+    "streaming_dsir_logweights": lambda spark, sf, state: _jobs.streaming_dsir_logweights(
+        spark, sf, state_dir=state, n_buckets=512
+    ),
+    "streaming_lang_vocab_sketch": lambda spark, sf, state: _jobs.streaming_lang_vocab_sketch(
+        spark, sf, state_dir=state
+    ),
+    "streaming_bpe_merges": lambda spark, sf, state: _jobs.streaming_bpe_merges(
+        spark, sf, state_dir=state, n_merges=4, word_pattern="^[a-z]+$"
+    ),
+}
+
+
+def _rows(out):
+    return out if isinstance(out, list) else sorted(map(tuple, out.collect()))
+
+
+@pytest.mark.parametrize("job", sorted(_STATE_DIR_JOBS))
+def test_state_dir_contract(spark, tmp_path, job):
+    """Each state-dir job: a rerun over its drained state returns the
+    same output; the same corpus under another path is another
+    fingerprint and is refused; an empty, then a missing, source_meta
+    is corrupt state."""
+    import shutil
+
+    run = _STATE_DIR_JOBS[job]
+    state = str(tmp_path / "state")
+    first = _rows(run(spark, SF_SMALL, state))
+    assert first
+    assert _rows(run(spark, SF_SMALL, state)) == first
+    other = tmp_path / "other_sf"
+    other.symlink_to(SF_SMALL, target_is_directory=True)
+    with pytest.raises(ValueError, match="refusing to resume"):
+        run(spark, str(other), state)
+    meta = f"{state}/source_meta"
+    spark.read.parquet(meta).limit(0).write.mode("overwrite").parquet(meta)
+    with pytest.raises(ValueError, match="corrupt"):
+        run(spark, SF_SMALL, state)
+    shutil.rmtree(meta)
+    with pytest.raises(ValueError, match="corrupt"):
+        run(spark, SF_SMALL, state)
+
+
+def test_incremental_resume_at_lower_threshold_equals_fresh_run(spark, tmp_path):
+    """The pairs log keeps every verified candidate with its jaccard and
+    the threshold filters on read, so resuming a drained state at a
+    lower threshold returns what a fresh run at that threshold returns,
+    not the first run's pairs again."""
+    cfg = MinHashLSHConfig(num_hashes=16, num_bands=8, id_strategy="md5")
+    state = str(tmp_path / "state")
+
+    def pairs(threshold, state_dir=None):
+        out = incremental_similar_pairs(
+            spark, SF_SMALL, cfg, threshold=threshold, state_dir=state_dir
+        )
+        return {(r.doc_id_a, r.doc_id_b, r.jaccard) for r in out.collect()}
+
+    high = pairs(0.5, state)
+    fresh = pairs(0.3)
+    assert high < fresh
+    assert pairs(0.3, state) == fresh
