@@ -24,19 +24,25 @@ fresh batch therefore costs O(batch): other documents' rows are never
 rewritten, and each extend adds one file set per table (compact with
 ``sources.tables.compact_parquet`` into a sibling directory, then
 swap).  Appends write ``signatures`` first and prunes delete it last,
-so a build re-run after a crash ends as a clean build would.  This is
-the batch twin of the state store
-``streaming/jobs.incremental_similar_pairs`` keeps.
+so a build re-run after a crash ends as a clean build would.
+
+This module holds the one stateful-ingest core, which
+``streaming/jobs.incremental_similar_pairs`` shares with the store: one
+per-batch step (shingle, sign, band: :func:`_batch_step`), one
+signature-spec guard (``minhash._guard_spec``) and one candidate-only
+verify (:func:`_verify`).  The stream keeps its own layout (band keys
+and shingle strings in ``batch_id``-partitioned logs) and its own band
+join, since it pairs each batch with itself as well as with its state.
 
 Per-ingest cost of :func:`cross_pairs_against_store`: the new batch's
 shingling and signatures, the band equi-join over one scan of the
 store's band table, and the store's ``shingle_ids``/``signatures`` rows
 of CANDIDATE documents only — those two tables are pruned to the
 candidate ids before any exchange.  The band table is the only store
-table an ingest reads whole.  Verification is the flagship's own core:
-``similarity.candidate_payload`` builds both sides' payloads,
-``similarity.fused_overlap_counts`` joins them to the candidates and
-``similarity.jaccard`` scores the counts.
+table an ingest reads whole.  Verification is the flagship's own core
+(:func:`_verify`): ``similarity.candidate_payload`` builds both sides'
+payloads, ``similarity.fused_overlap_counts`` joins them to the
+candidates and ``similarity.jaccard`` scores the counts.
 
 Stores need map-side shingle ids ('md5' or 'xxhash' ``id_strategy``):
 'rank' ids are ranks in each batch's own vocabulary, so stored and new
@@ -49,6 +55,9 @@ corpus text they summarize.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,8 +65,7 @@ from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.functions.hashing import md5_long
 from mapreduce_minhash_lsh_spark.operators.lsh import band_row_pairs, compact_band_keys
 from mapreduce_minhash_lsh_spark.operators.minhash import (
-    OPH_FORMAT,
-    recorded_spec,
+    _guard_spec,
     signatures_array,
 )
 from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
@@ -72,60 +80,78 @@ from mapreduce_minhash_lsh_spark.sources.fs import fs_exists
 from mapreduce_minhash_lsh_spark.sources.tables import delete_from_parquet
 
 
-def _spec_exists(spark: SparkSession, spec_path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — NOT
-    ``os.path.exists``, which is always False for non-local store URIs
-    (S3/HDFS, the deployment target): there the os.path probe would
-    silently disarm the spec guard (reads skip validation; a write=True
-    build would overwrite ``_spec`` with the NEW cfg's spec, masking the
-    very mismatch the guard exists to catch).  Shared helper since r10
-    (VERDICT r9 #5): sources/fs.py."""
-    return fs_exists(spark, spec_path)
-
-
 def _check_or_write_spec(
     spark: SparkSession, store_dir: str, cfg: MinHashLSHConfig, write: bool
 ) -> None:
     """Record the cfg's signature spec in the store on first build; on
-    every later build/extend/query, refuse a cfg whose spec differs.  A
-    store holds BYTES derived from the spec (signatures, band keys), so
-    a mismatched cfg — different seed, id strategy, band count or
-    signature scheme — would silently under-match instead of erroring.
-    Fail fast instead.  An OPH store without the ``minhash.OPH_FORMAT``
-    marker is refused with a rebuild message: its signatures are
-    affine.  A cfg with ``id_strategy``
-    'rank' is refused outright: its ids are ranks in each batch's own
-    vocabulary, so no two batches' signatures agree."""
-    if cfg.id_strategy == "rank":
-        raise ValueError(
-            "band store: id_strategy 'rank' numbers shingles by each "
-            "batch's own vocabulary, so stored and new signatures never "
-            "agree; use id_strategy 'md5' or 'xxhash'."
-        )
-    spec, legacy = recorded_spec(cfg, "store_format")
+    every later build/extend/query, refuse a cfg that
+    ``minhash._guard_spec`` refuses ('rank' ids, a pre-format OPH store,
+    another spec).  The probe goes through the Hadoop FileSystem API
+    (``fs_exists``), not ``os.path.exists``, which is always False for
+    non-local store URIs (S3/HDFS) and would silently disarm the guard:
+    reads would skip validation and a build would overwrite ``_spec``
+    with the new cfg's spec, masking the very mismatch the guard exists
+    to catch."""
     spec_path = f"{store_dir}/_spec"
-    if _spec_exists(spark, spec_path):
-        stored = spark.read.parquet(spec_path).first().spec
-        if stored == spec:
-            return
-        if stored == legacy:
-            raise ValueError(
-                f"band store {store_dir!r} records sig_strategy 'oph' but "
-                "was written before store format "
-                f"{OPH_FORMAT}, which stored affine signatures under that "
-                "spec; its signatures and band keys match no OPH signature.  "
-                "Rebuild the store from its documents."
-            )
-        raise ValueError(
-            f"band store {store_dir!r} was built with signature spec "
-            f"{stored}; refusing to operate on it with {spec} — "
-            "signatures/band keys would not match.  Rebuild the store "
-            "or use the original config."
-        )
-    if write:
+
+    def read_stored() -> str | None:
+        if not fs_exists(spark, spec_path):
+            return None
+        return spark.read.parquet(spec_path).first().spec
+
+    spec, stored = _guard_spec(
+        cfg, "store_format", f"band store {store_dir!r}", read_stored
+    )
+    if write and stored is None:
         spark.createDataFrame([(spec,)], ["spec"]).coalesce(1).write.mode(
             "overwrite"
         ).parquet(spec_path)
+
+
+@contextmanager
+def _batch_step(
+    docs: DataFrame, cfg: MinHashLSHConfig, checkpoint_dir: str | None = None
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
+    """The one per-batch step of stateful ingest (the store's build and
+    query, the incremental streaming job): ``(sh, sig, bands)`` of
+    ``docs`` — the cached (doc_id, shingle) relation, the materialized
+    ``signatures_array`` and its ``compact_band_keys``.  The shingle
+    cache is released when the block exits."""
+    sh = explode_shingles(docs, cfg.k).persist()
+    try:
+        sig = _materialize(signatures_array(sh, cfg), checkpoint_dir)
+        yield sh, sig, compact_band_keys(sig, cfg)
+    finally:
+        sh.unpersist()
+
+
+def _verify(
+    cands: DataFrame,
+    side_a: tuple[DataFrame, ...],
+    side_b: tuple[DataFrame, ...] | None = None,
+    cfg: MinHashLSHConfig | None = None,
+    threshold: float | None = None,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, jaccard) of the candidate pairs ``cands``:
+    the one candidate-only verify of stateful ingest.  Both sides'
+    distinct candidate ids go out in one broadcast, which
+    ``similarity.candidate_payload`` semi-joins into each side's
+    (doc_id, shingle | sid[, sig]) relations before any exchange, so a
+    side's rows of non-candidate documents never shuffle however large
+    its state grows.  ``side_b`` defaults to ``side_a``.  A payload with
+    signatures takes the fused prefilter at ``threshold``; without them
+    every candidate is scored."""
+    # The hint is explicit because a materialized candidate list carries
+    # no size statistics (``_reset_stats``), so the planner would
+    # otherwise shuffle both sides whole.
+    ids = F.broadcast(candidate_ids(cands))
+    rel_b = None if side_b is None else candidate_payload(ids, *side_b)
+    counts = fused_overlap_counts(
+        cands, candidate_payload(ids, *side_a), cfg, threshold,
+        checkpoint_dir, rel_b=rel_b,
+    )
+    return jaccard(counts, threshold)
 
 
 def build_band_store(
@@ -159,11 +185,8 @@ def build_band_store(
     """
     spark = docs.sparkSession
     _check_or_write_spec(spark, store_dir, cfg, write=True)
-    sh = explode_shingles(docs, cfg.k).persist()
-    try:
+    with _batch_step(docs, cfg) as (sh, sig, bands):
         sids = sh.select("doc_id", md5_long(F.col("shingle")).alias("sid"))
-        sig = _materialize(signatures_array(sh, cfg), None)
-        bands = compact_band_keys(sig, cfg)
         sig_path = f"{store_dir}/signatures"
         if fs_exists(spark, sig_path):
             # Cached and counted before the prune rewrites
@@ -188,8 +211,6 @@ def build_band_store(
             ("bands", bands),
         ):
             rows.write.mode("append").parquet(f"{store_dir}/{table}")
-    finally:
-        sh.unpersist()
 
 
 def load_band_store(
@@ -234,34 +255,15 @@ def cross_pairs_against_store(
     spark = new_docs.sparkSession
     _check_or_write_spec(spark, store_dir, cfg, write=False)
     sids_seen, sig_seen, bands_seen = load_band_store(spark, store_dir)
-    sh_new = explode_shingles(new_docs, cfg.k).persist()
-    try:
-        sig_new = _materialize(signatures_array(sh_new, cfg), checkpoint_dir)
+    with _batch_step(new_docs, cfg, checkpoint_dir) as (sh_new, sig_new, bands):
         cands = _materialize(
-            band_row_pairs(
-                compact_band_keys(sig_new, cfg), bands_seen, max_bucket_size
-            ),
+            band_row_pairs(bands, bands_seen, max_bucket_size), checkpoint_dir
+        )
+        pairs = _verify(
+            cands, (sh_new, sig_new), (sids_seen, sig_seen), cfg, threshold,
             checkpoint_dir,
         )
-        # Both sides' distinct candidate ids in one broadcast, reused by
-        # all four semi-joins.  The hint is explicit because a
-        # materialized candidate list carries no size statistics
-        # (``_reset_stats``), so the planner would otherwise shuffle
-        # both sides whole.
-        ids = F.broadcast(candidate_ids(cands))
-        counts = fused_overlap_counts(
-            cands,
-            candidate_payload(ids, sh_new, sig_new),
-            cfg,
-            threshold,
-            checkpoint_dir,
-            rel_b=candidate_payload(ids, sids_seen, sig_seen),
-        )
-    finally:
-        sh_new.unpersist()
-    return jaccard(counts, threshold).withColumnsRenamed(
-        {"doc_id_a": "new_id", "doc_id_b": "seen_id"}
-    )
+    return pairs.withColumnsRenamed({"doc_id_a": "new_id", "doc_id_b": "seen_id"})
 
 
 def prune_band_store(

@@ -16,6 +16,7 @@ hot path.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -134,6 +135,47 @@ def recorded_spec(cfg: MinHashLSHConfig, marker: str) -> tuple[str, str]:
     if cfg.sig_strategy == "oph":
         fields[marker] = OPH_FORMAT
     return json.dumps(fields, sort_keys=True), legacy
+
+
+def _guard_spec(
+    cfg: MinHashLSHConfig,
+    marker: str,
+    label: str,
+    read_stored: Callable[[], str | None] | None = None,
+) -> tuple[str, str | None]:
+    """The one signature-spec guard of durable state (band stores,
+    streaming state): ``(spec, stored)``, the :func:`recorded_spec` to
+    record and the one ``read_stored()`` found (None: nothing recorded
+    yet).  Durable state holds bytes derived from the spec, so instead
+    of silently under-matching it refuses, in this order:
+
+    * ``id_strategy`` 'rank', before ``read_stored`` runs: its ids are
+      ranks in each batch's own vocabulary, so no two batches'
+      signatures agree;
+    * OPH state recorded without the ``marker`` (written before
+      :data:`OPH_FORMAT`): it holds affine signatures;
+    * any other spec than the cfg's."""
+    if cfg.id_strategy == "rank":
+        raise ValueError(
+            f"{label}: id_strategy 'rank' numbers shingles by each batch's "
+            "own vocabulary, so no two batches' signatures agree; use "
+            "id_strategy 'md5' or 'xxhash'."
+        )
+    spec, legacy = recorded_spec(cfg, marker)
+    stored = None if read_stored is None else read_stored()
+    if stored == legacy != spec:
+        raise ValueError(
+            f"{label} records sig_strategy 'oph' but was written before "
+            f"{marker.replace('_', ' ')} {OPH_FORMAT}, when OPH state held "
+            "affine signatures; rebuild it from its documents."
+        )
+    if stored not in (None, spec):
+        raise ValueError(
+            f"{label} was built with signature spec {stored}; refusing to "
+            f"use it with {spec}, whose signatures and band keys would not "
+            "match.  Rebuild it or use the original config."
+        )
+    return spec, stored
 
 
 def minhash_signatures(doc_shingles: DataFrame, cfg: MinHashLSHConfig) -> DataFrame:
@@ -319,21 +361,12 @@ def oph_sig_expr(bm, cfg: MinHashLSHConfig):
             # Circular-walk fallback (argmin by clockwise distance over
             # the non-empty slots; array_min skips nulls), lazily
             # evaluated — coalesce short-circuits.
+            def donor(d):
+                v = F.element_at(vals, F.pmod(s + d, F.lit(n)) + F.lit(1))
+                return F.when(v.isNotNull(), F.struct(d.alias("d"), v.alias("v")))
+
             walk = F.array_min(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(n - 1)),
-                    lambda d: F.when(
-                        F.element_at(
-                            vals, F.pmod(s + d, F.lit(n)) + F.lit(1)
-                        ).isNotNull(),
-                        F.struct(
-                            d.alias("d"),
-                            F.element_at(
-                                vals, F.pmod(s + d, F.lit(n)) + F.lit(1)
-                            ).alias("v"),
-                        ),
-                    ),
-                )
+                F.transform(F.sequence(F.lit(1), F.lit(n - 1)), donor)
             )["v"]
             return F.coalesce(
                 F.element_at(vals, s + F.lit(1)), probe_hit, walk

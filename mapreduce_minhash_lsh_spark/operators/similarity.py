@@ -780,8 +780,7 @@ def cross_corpus_pairs(
     ``check_disjoint=True`` to fail fast instead (one cheap
     left-semi ``isEmpty`` probe on the id intersection).  At
     production scale the seen side's signatures/bands are
-    precomputed and stored — exactly the band-store layout
-    ``streaming/jobs.incremental_similar_pairs`` maintains; this batch
+    precomputed and stored (``operators/bandstore.py``); this batch
     form recomputes them so the operator is self-contained.
 
     ``max_bucket_size`` caps each side's band bucket independently (a

@@ -6,9 +6,10 @@ Patterns covered (each with a batch-equivalent used as its oracle):
   * streaming exact dedup (``dropDuplicates`` keyed on id within the
     watermark horizon) — the incremental form of operators/dedup.py;
   * incremental near-dup candidate detection via ``foreachBatch``: each
-    micro-batch is shingled/minhashed with the *same* operators as batch
-    and joined against the accumulated signature store — one logic, two
-    execution modes.
+    micro-batch runs through the band store's per-batch step and verify
+    (operators/bandstore.py) and is band-joined against the band-key
+    and shingle logs of earlier batches — one logic, two execution
+    modes.
 
 ``Trigger.AvailableNow`` drains all existing files then stops, which
 makes every job here runnable (and deterministically testable) on the
@@ -59,7 +60,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_minhash_lsh_spark.operators.similarity import _materialize, exact_jaccard
+from mapreduce_minhash_lsh_spark.operators.bandstore import _batch_step, _verify
+from mapreduce_minhash_lsh_spark.operators.minhash import _guard_spec
+from mapreduce_minhash_lsh_spark.operators.similarity import _materialize
 from mapreduce_minhash_lsh_spark.sources.fs import (
     fs_delete,
     fs_exists,
@@ -494,47 +497,34 @@ def incremental_similar_pairs(
     state_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs discovered incrementally: stream the documents in
-    micro-batches via foreachBatch, minhash each batch with the SAME
-    batch operators, and join it against the accumulated signature
-    store.  Demonstrates the batch/streaming unification.
+    micro-batches via foreachBatch and run each through the band store's
+    stateful-ingest core (operators/bandstore.py): the same per-batch
+    step (shingle, sign, band), signature-spec guard and candidate-only
+    verify.  Demonstrates the batch/streaming unification.
 
     State lives entirely OFF the driver, in three parquet logs under
-    ``state_dir`` (band store, shingle store, verified pairs), under the
-    module docstring's state-dir contract; the fingerprint is the corpus
-    path and the signature spec.  Batch N costs one scan of the store,
-    not N replays.  On a cluster, point ``state_dir`` at durable storage
-    (S3/HDFS).
+    ``state_dir`` (each batch's band keys, its shingle strings, and the
+    verified pairs), under the module docstring's state-dir contract;
+    the fingerprint is the corpus path and the signature spec.  On a
+    cluster, point ``state_dir`` at durable storage (S3/HDFS).
 
     Each document belongs to exactly one batch, and a pair (a, b) is
     verified exactly once — at the later of its two docs' batches, by
-    one band join of the batch against itself and every earlier batch —
-    so the output needs no cross-batch dedup.  The pairs log keeps every
-    verified candidate with its ``jaccard``, and ``threshold`` filters on
-    read, so a resumed state answers any threshold as a fresh run would.
-    (A state written before the log kept every candidate holds only the
-    pairs at or above the threshold of the run that wrote each batch.)
+    one band join of the broadcast batch against itself and every
+    earlier batch — so the output needs no cross-batch dedup.  Only the
+    candidate documents' shingles reach an exchange, so a batch
+    shuffles in proportion to itself and its candidates, not to the
+    state.  The pairs log keeps every verified candidate with its
+    ``jaccard``, and ``threshold`` filters on read, so a resumed state
+    answers any threshold as a fresh run would.  (A state written before
+    the log kept every candidate holds only the pairs at or above the
+    threshold of the run that wrote each batch.)
 
     The state needs map-side shingle ids ('md5' or 'xxhash'
-    ``id_strategy``): 'rank' ids are ranks in each batch's own
-    vocabulary, so a cfg naming 'rank' is refused before any state is
+    ``id_strategy``): a cfg naming 'rank' is refused before any state is
     read or written, as the band store refuses it."""
-    from mapreduce_minhash_lsh_spark.operators.lsh import compact_band_keys
-    from mapreduce_minhash_lsh_spark.operators.minhash import (
-        OPH_FORMAT,
-        recorded_spec,
-        signatures_array,
-    )
-    from mapreduce_minhash_lsh_spark.operators.shingling import explode_shingles
-
-    if cfg.id_strategy == "rank":
-        raise ValueError(
-            "incremental_similar_pairs: id_strategy 'rank' numbers shingles "
-            "by each micro-batch's own vocabulary, so signatures of "
-            "different batches never agree and cross-batch pairs are "
-            "lost; use id_strategy 'md5' or 'xxhash'."
-        )
+    spec, _ = _guard_spec(cfg, "state_format", "incremental_similar_pairs")
     threshold = cfg.threshold if threshold is None else threshold
-    spec, legacy = recorded_spec(cfg, "state_format")
 
     def verify(row: Row) -> None:
         if row.sf_dir != sf_dir:
@@ -543,50 +533,33 @@ def incremental_similar_pairs(
                 f"refusing to resume it against {sf_dir!r} — use a fresh "
                 "state_dir per corpus"
             )
-        # Stored band keys / shingle ids are bytes derived from the spec:
-        # resuming under another one silently under-matches.
-        stored_spec = getattr(row, "signature_spec", None)
-        if stored_spec is not None and stored_spec != spec:
-            if stored_spec == legacy:
-                raise ValueError(
-                    f"state_dir {state_dir!r} records sig_strategy "
-                    "'oph' but was written before state format "
-                    f"{OPH_FORMAT}, which banded affine signatures "
-                    "under that spec; its band keys match no OPH "
-                    "signature.  Rebuild it with a fresh state_dir."
-                )
-            raise ValueError(
-                f"state_dir {state_dir!r} was built with signature spec "
-                f"{stored_spec}; refusing to resume it with {spec} — "
-                "band keys/shingle ids would not match.  Use the "
-                "original config or a fresh state_dir."
-            )
+        _guard_spec(
+            cfg, "state_format", f"state_dir {state_dir!r}",
+            lambda: getattr(row, "signature_spec", None),
+        )
 
     def process_batch(state: _StateDir, batch_df: DataFrame, batch_id: int) -> None:
-        sh = explode_shingles(batch_df, cfg.k)
-        # Write this batch to the durable store FIRST, then read the
-        # store back: one materialization per lineage, and every
-        # downstream reference is a plain parquet scan (no growing
-        # union-of-checkpoints plan).
-        state.write("shingles", sh, batch_id)
-        bands = compact_band_keys(signatures_array(sh, cfg), cfg)
-        state.write("bands", bands, batch_id)
-        all_bands = state.read("bands")
-        # This batch against itself and every earlier batch (the
-        # compacted history included): cross and intra pairs in one join.
-        cur = all_bands.where(F.col("batch_id") == batch_id)
-        upto = all_bands.where(F.col("batch_id") <= batch_id)
-        cand = (
-            cur.alias("a")
-            .join(upto.alias("b"), ["band", "band_key"])
-            .where(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("doc_id_a"),
-                F.greatest("a.doc_id", "b.doc_id").alias("doc_id_b"),
+        with _batch_step(batch_df, cfg) as (sh, _, bands):
+            state.write("shingles", sh, batch_id)
+            state.write("bands", bands, batch_id)
+            # This batch against itself and every earlier batch (the
+            # compacted history included): cross and intra pairs in one
+            # join, with the batch's band rows broadcast so the state's
+            # never shuffle.
+            upto = state.read("bands").where(F.col("batch_id") <= batch_id)
+            cand = (
+                F.broadcast(bands).alias("a")
+                .join(upto.alias("b"), ["band", "band_key"])
+                .where(F.col("a.doc_id") != F.col("b.doc_id"))
+                .select(
+                    F.least("a.doc_id", "b.doc_id").alias("doc_id_a"),
+                    F.greatest("a.doc_id", "b.doc_id").alias("doc_id_b"),
+                )
+                .distinct()
             )
-            .distinct()
-        )
-        state.write("pairs", exact_jaccard(cand, state.fold("shingles")), batch_id)
+            state.write(
+                "pairs", _verify(cand, (state.fold("shingles"),)), batch_id
+            )
 
     def read_back(state: _StateDir) -> DataFrame:
         return (
@@ -703,6 +676,21 @@ def streaming_lm_scores(
     )
 
 
+def _bit_words(pos: DataFrame, word_bits: int, *keys: str) -> DataFrame:
+    """(*keys, word, bits): the bit positions ``pos`` packed into
+    ``word_bits``-bit words and OR-ed per (keys, word) — one batch's
+    contribution to a bit log (Bloom filter, linear-counting bitmap)."""
+    return (
+        pos.select(
+            *keys,
+            (F.col("pos") / word_bits).cast("long").alias("word"),
+            (F.col("pos") % word_bits).cast("int").alias("bit"),
+        )
+        .groupBy(*keys, "word")
+        .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
+    )
+
+
 def streaming_bloom_words(
     spark: SparkSession,
     sf_dir: str,
@@ -745,15 +733,7 @@ def streaming_bloom_words(
                 F.array(*bloom_positions(F.col("gram"), m_bits, k))
             ).alias("pos")
         )
-        bits = (
-            pos.select(
-                (F.col("pos") / BLOOM_WORD_BITS).cast("long").alias("word"),
-                (F.col("pos") % BLOOM_WORD_BITS).cast("int").alias("bit"),
-            )
-            .groupBy("word")
-            .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
-        )
-        state.write("bloom_bits", bits, batch_id)
+        state.write("bloom_bits", _bit_words(pos, BLOOM_WORD_BITS), batch_id)
 
     def read_back(state: _StateDir) -> list[int]:
         n_words = -(-m_bits // BLOOM_WORD_BITS)
@@ -856,16 +836,7 @@ def streaming_lang_vocab_sketch(
                 lc_bit_position(F.col("gram"), m_bits).alias("pos"),
             )
         )
-        bits = (
-            pos.select(
-                "lang",
-                (F.col("pos") / LC_WORD_BITS).cast("long").alias("word"),
-                (F.col("pos") % LC_WORD_BITS).cast("int").alias("bit"),
-            )
-            .groupBy("lang", "word")
-            .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
-        )
-        state.write("lc_bits", bits, batch_id)
+        state.write("lc_bits", _bit_words(pos, LC_WORD_BITS, "lang"), batch_id)
 
     def read_back(state: _StateDir) -> DataFrame:
         set_bits = state.fold("lc_bits").groupBy("lang").agg(

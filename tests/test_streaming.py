@@ -75,6 +75,21 @@ def test_oph_incremental_similar_pairs_equals_batch(spark):
     assert inc_pairs == batch_pairs
 
 
+def test_xxhash_incremental_similar_pairs_equals_batch(spark):
+    """Under id_strategy='xxhash' the incremental pipeline, which runs
+    on the band store's per-batch step and verify, finds the batch pair
+    set of the same cfg, with the same Jaccard values."""
+    cfg = MinHashLSHConfig(num_hashes=32, num_bands=4, id_strategy="xxhash")
+    inc = incremental_similar_pairs(spark, SF_SMALL, cfg)
+    batch = similar_pairs(load_table(spark, SF_SMALL, "documents"), cfg)
+    inc_rows = sorted((r.doc_id_a, r.doc_id_b, r.jaccard) for r in inc.collect())
+    batch_rows = sorted(
+        (r.doc_id_a, r.doc_id_b, r.jaccard) for r in batch.collect()
+    )
+    assert inc_rows
+    assert inc_rows == batch_rows
+
+
 def test_stateful_sessionize_matches_batch(spark):
     """applyInPandasWithState closed sessions == batch sessions minus each
     user's final (still-open) session."""
@@ -960,3 +975,57 @@ def test_incremental_resume_at_lower_threshold_equals_fresh_run(spark, tmp_path)
     fresh = pairs(0.3)
     assert high < fresh
     assert pairs(0.3, state) == fresh
+
+
+def test_incremental_batch_shuffle_does_not_grow_with_state(spark, tmp_path):
+    """The same one-file batch appended to a drained state of N docs and
+    to one of 4N, whose extra 3N docs share no character shingle with
+    any doc: both resumed runs return the same rows, and the 4N run
+    shuffles within 1.25x of the N run's bytes — the batch's band rows
+    and candidate ids are broadcast, so neither the band log nor the
+    shingle log shuffles whole."""
+    import random
+    import string
+
+    from tests.conftest import job_counters
+
+    cfg = MinHashLSHConfig(num_hashes=32, num_bands=4, id_strategy="md5")
+    docs = load_table(spark, SF_SMALL, "documents")
+    n = docs.count()
+    # Every third character is one of 5 code points owned by the doc
+    # (CJK Extension B), so each of its 3-shingles is its own; digits
+    # fill the rest, giving ~150 distinct shingles per doc, about as
+    # many as a testdata doc has.
+    rng = random.Random(5)
+
+    def text(i):
+        return "".join(
+            chr(0x20000 + 5 * i + rng.randrange(5)) if p % 3 == 0
+            else rng.choice(string.digits)
+            for p in range(450)
+        )
+
+    extra = spark.createDataFrame(
+        [(10_000_000 + i, text(i), "xx", "extra", 450) for i in range(3 * n)],
+        docs.schema,
+    )
+    runs = {}
+    for tag, corpus in (("small", docs), ("large", docs.unionByName(extra))):
+        sf = tmp_path / f"sf_{tag}"
+        corpus.write.parquet(str(sf / "documents.parquet"))
+        state = str(tmp_path / f"state_{tag}")
+        incremental_similar_pairs(spark, str(sf), cfg, state_dir=state)
+        _append_split(spark, state)
+        out = []
+        _, shuffled = job_counters(
+            spark,
+            lambda: out.extend(
+                sorted(map(tuple, incremental_similar_pairs(
+                    spark, str(sf), cfg, state_dir=state
+                ).collect()))
+            ),
+        )
+        runs[tag] = (out, shuffled)
+    (small, b_small), (large, b_large) = runs["small"], runs["large"]
+    assert small and small == large
+    assert b_large <= 1.25 * b_small, (b_small, b_large)
