@@ -20,6 +20,7 @@ from dataclasses import replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
 from mapreduce_minhash_lsh_spark.operators.minhash import sig_array_form
@@ -251,8 +252,13 @@ def banded_pairs(
         return _lowest_band_join(cfg, rows, _band_rows(sig_b, cfg))
     if max_bucket_size is None:
         return _lowest_band_join(cfg, rows)
-    sized = rows.groupBy("band", "band_key").agg(F.count("*").alias("_n"))
-    rows = rows.join(sized, ["band", "band_key"])
+    # Bucket sizes as a window over the band rows, not an aggregate
+    # joined back to them: every consumer below then reads the one
+    # exchange under the window, which adaptive execution reuses, so
+    # each band key is computed once.
+    rows = rows.withColumn(
+        "_n", F.count("*").over(Window.partitionBy("band", "band_key"))
+    )
 
     if oversize == "drop":
         # Survival is a global bucket property, so each doc's per-band

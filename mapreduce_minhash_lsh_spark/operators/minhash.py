@@ -361,12 +361,21 @@ def oph_sig_expr(bm, cfg: MinHashLSHConfig):
             # Circular-walk fallback (argmin by clockwise distance over
             # the non-empty slots; array_min skips nulls), lazily
             # evaluated — coalesce short-circuits.
-            def donor(d):
-                v = F.element_at(vals, F.pmod(s + d, F.lit(n)) + F.lit(1))
-                return F.when(v.isNotNull(), F.struct(d.alias("d"), v.alias("v")))
-
             walk = F.array_min(
-                F.transform(F.sequence(F.lit(1), F.lit(n - 1)), donor)
+                F.transform(
+                    F.sequence(F.lit(1), F.lit(n - 1)),
+                    lambda d: F.when(
+                        F.element_at(
+                            vals, F.pmod(s + d, F.lit(n)) + F.lit(1)
+                        ).isNotNull(),
+                        F.struct(
+                            d.alias("d"),
+                            F.element_at(
+                                vals, F.pmod(s + d, F.lit(n)) + F.lit(1)
+                            ).alias("v"),
+                        ),
+                    ),
+                )
             )["v"]
             return F.coalesce(
                 F.element_at(vals, s + F.lit(1)), probe_hit, walk

@@ -510,11 +510,10 @@ def incremental_similar_pairs(
 
     Each document belongs to exactly one batch, and a pair (a, b) is
     verified exactly once — at the later of its two docs' batches, by
-    one band join of the broadcast batch against itself and every
-    earlier batch — so the output needs no cross-batch dedup.  Only the
-    candidate documents' shingles reach an exchange, so a batch
-    shuffles in proportion to itself and its candidates, not to the
-    state.  The pairs log keeps every verified candidate with its
+    one band join of the batch against itself and every earlier batch —
+    so the output needs no cross-batch dedup.  The verify broadcasts the
+    candidates' ids into the shingle log, so only candidate documents'
+    shingles reach an exchange.  The pairs log keeps every verified candidate with its
     ``jaccard``, and ``threshold`` filters on read, so a resumed state
     answers any threshold as a fresh run would.  (A state written before
     the log kept every candidate holds only the pairs at or above the
@@ -544,11 +543,10 @@ def incremental_similar_pairs(
             state.write("bands", bands, batch_id)
             # This batch against itself and every earlier batch (the
             # compacted history included): cross and intra pairs in one
-            # join, with the batch's band rows broadcast so the state's
-            # never shuffle.
+            # join.
             upto = state.read("bands").where(F.col("batch_id") <= batch_id)
             cand = (
-                F.broadcast(bands).alias("a")
+                bands.alias("a")
                 .join(upto.alias("b"), ["band", "band_key"])
                 .where(F.col("a.doc_id") != F.col("b.doc_id"))
                 .select(
@@ -676,21 +674,6 @@ def streaming_lm_scores(
     )
 
 
-def _bit_words(pos: DataFrame, word_bits: int, *keys: str) -> DataFrame:
-    """(*keys, word, bits): the bit positions ``pos`` packed into
-    ``word_bits``-bit words and OR-ed per (keys, word) — one batch's
-    contribution to a bit log (Bloom filter, linear-counting bitmap)."""
-    return (
-        pos.select(
-            *keys,
-            (F.col("pos") / word_bits).cast("long").alias("word"),
-            (F.col("pos") % word_bits).cast("int").alias("bit"),
-        )
-        .groupBy(*keys, "word")
-        .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
-    )
-
-
 def streaming_bloom_words(
     spark: SparkSession,
     sf_dir: str,
@@ -733,7 +716,15 @@ def streaming_bloom_words(
                 F.array(*bloom_positions(F.col("gram"), m_bits, k))
             ).alias("pos")
         )
-        state.write("bloom_bits", _bit_words(pos, BLOOM_WORD_BITS), batch_id)
+        bits = (
+            pos.select(
+                (F.col("pos") / BLOOM_WORD_BITS).cast("long").alias("word"),
+                (F.col("pos") % BLOOM_WORD_BITS).cast("int").alias("bit"),
+            )
+            .groupBy("word")
+            .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
+        )
+        state.write("bloom_bits", bits, batch_id)
 
     def read_back(state: _StateDir) -> list[int]:
         n_words = -(-m_bits // BLOOM_WORD_BITS)
@@ -836,7 +827,16 @@ def streaming_lang_vocab_sketch(
                 lc_bit_position(F.col("gram"), m_bits).alias("pos"),
             )
         )
-        state.write("lc_bits", _bit_words(pos, LC_WORD_BITS, "lang"), batch_id)
+        bits = (
+            pos.select(
+                "lang",
+                (F.col("pos") / LC_WORD_BITS).cast("long").alias("word"),
+                (F.col("pos") % LC_WORD_BITS).cast("int").alias("bit"),
+            )
+            .groupBy("lang", "word")
+            .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits"))
+        )
+        state.write("lc_bits", bits, batch_id)
 
     def read_back(state: _StateDir) -> DataFrame:
         set_bits = state.fold("lc_bits").groupBy("lang").agg(

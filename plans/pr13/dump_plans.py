@@ -33,7 +33,6 @@ repo, testdata, outdir = sys.argv[1], sys.argv[2], sys.argv[3]
 sys.path.insert(0, repo)
 os.makedirs(outdir, exist_ok=True)
 
-from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from mapreduce_minhash_lsh_spark import registry  # noqa: E402
@@ -75,7 +74,10 @@ def norm(s):
 
 
 captured = []
-_local_checkpoint = DataFrame.localCheckpoint
+# Patch the DataFrame class the session actually builds (a subclass of
+# pyspark.sql.DataFrame that defines its own localCheckpoint).
+_frame = type(spark.range(1))
+_local_checkpoint = _frame.localCheckpoint
 
 
 def _capturing(self, *a, **k):
@@ -83,7 +85,7 @@ def _capturing(self, *a, **k):
     return _local_checkpoint(self, *a, **k)
 
 
-DataFrame.localCheckpoint = _capturing
+_frame.localCheckpoint = _capturing
 
 
 def digest(rows):
@@ -108,6 +110,8 @@ for tag, cfg in STORE_CFGS.items():
         out = cross_pairs_against_store(new, cfg, store).collect()
         n_query = len(captured)
         build_band_store(new, cfg, store)
+        if n_query == 0 or len(captured) == n_query:
+            sys.exit(f"{tag}: no checkpointed relation captured")
         with open(os.path.join(outdir, f"store_{tag}.txt"), "w") as f:
             for i, p in enumerate(captured):
                 call = "query" if i < n_query else "extend"

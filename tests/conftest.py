@@ -10,25 +10,34 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def job_counters(spark, fn) -> tuple[int, int]:
+def job_counters(spark, fn, every_job: bool = False) -> tuple[int, int]:
     """Run ``fn()`` under a fresh job group; return ``(jobs,
     shuffle_write_bytes)`` summed over the jobs it launched, read from the
     application status store (kept with the UI disabled).  Jobs that
     adaptive execution submits from its own threads inherit the group.
     Skipped stages (shuffle output reused from an earlier job) write
-    nothing and are not counted."""
+    nothing and are not counted.
+
+    A streaming query runs its micro-batches on its own thread, outside
+    the caller's job group; ``every_job=True`` counts every job started
+    while ``fn`` runs instead, so nothing else may run meanwhile."""
     import uuid
 
     sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
+    jsc.listenerBus().waitUntilEmpty()
+    before = store.jobsList(None)
+    first = 1 + max(
+        (before.apply(i).jobId() for i in range(before.size())), default=-1
+    )
     group = f"counted-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc._jsc.clearJobGroup()
-    jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
     no_status = sc._jvm.java.util.ArrayList()
     no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
     jobs = shuffle = 0
@@ -36,7 +45,10 @@ def job_counters(spark, fn) -> tuple[int, int]:
     for i in range(all_jobs.size()):
         job = all_jobs.apply(i)
         grp = job.jobGroup()
-        if not (grp.isDefined() and grp.get() == group):
+        if every_job:
+            if job.jobId() < first:
+                continue
+        elif not (grp.isDefined() and grp.get() == group):
             continue
         jobs += 1
         ids = job.stageIds()

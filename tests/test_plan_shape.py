@@ -502,21 +502,26 @@ def test_signature_aggregate_plan_unchanged_on_hash_partitioned_docs(
     assert _normalized_plan(spark, new) == _normalized_plan(spark, old)
 
 
-def _sf001_jobs(spark, monkeypatch, name: str) -> tuple[int, int]:
-    """(jobs, shuffle bytes) of registered query ``name`` at sf0.01.
-    defaultParallelism (the edge partition count of near_dup_groups) is
-    pinned, and the one-file documents table is checked to load as one
-    partition, so the counts do not depend on the machine's core
-    count."""
+def _sf001(spark, monkeypatch) -> str:
+    """The sf0.01 directory, with defaultParallelism (the edge partition
+    count of near_dup_groups) pinned and the one-file documents table
+    checked to load as one partition, so job counts do not depend on the
+    machine's core count."""
     import os
 
     from pyspark import SparkContext
 
-    from tests.conftest import job_counters
-
     sf = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 4))
     assert load_table(spark, sf, "documents").rdd.getNumPartitions() == 1
+    return sf
+
+
+def _sf001_jobs(spark, monkeypatch, name: str) -> tuple[int, int]:
+    """(jobs, shuffle bytes) of registered query ``name`` at sf0.01."""
+    from tests.conftest import job_counters
+
+    sf = _sf001(spark, monkeypatch)
     q = registry.queries()[name]
     return job_counters(
         spark,
@@ -584,6 +589,34 @@ def test_oph_similar_pairs_job_budget(spark, monkeypatch):
     assert shuffle <= 728_374, shuffle
 
 
+def test_store_ingest_job_budget(spark, monkeypatch, tmp_path):
+    """Budget for the band-store ingest the ``ingest_store`` benchmark
+    times, on a split of sf0.01: ``cross_pairs_against_store`` of the odd
+    doc ids against a store built from the even ones, then
+    ``build_band_store`` extending the store with them.  Measured 35
+    jobs, 202,675 shuffle bytes in each of three runs."""
+    from mapreduce_minhash_lsh_spark.operators.bandstore import (
+        build_band_store,
+        cross_pairs_against_store,
+    )
+    from tests.conftest import job_counters
+
+    cfg = registry.PIPELINE_CFG
+    docs = load_table(spark, _sf001(spark, monkeypatch), "documents")
+    store = str(tmp_path / "store")
+    build_band_store(docs.where(F.col("doc_id") % 2 == 0), cfg, store)
+    new = docs.where(F.col("doc_id") % 2 == 1)
+
+    def ingest():
+        out = cross_pairs_against_store(new, cfg, store)
+        out.write.format("noop").mode("overwrite").save()
+        build_band_store(new, cfg, store)
+
+    jobs, shuffle = job_counters(spark, ingest)
+    assert jobs <= 35, jobs
+    assert shuffle <= 202_675, shuffle
+
+
 def test_band_rows_compute_each_band_key_once(spark):
     """Spark infers a ``size(keys) > 0`` filter under a ``posexplode`` of
     an attribute and pushes it below the projection that builds the
@@ -603,3 +636,28 @@ def test_band_rows_compute_each_band_key_once(spark):
     executed = plan(rows)
     assert "Filter" not in executed, executed
     assert executed.count("md5(") == cfg.num_bands, executed
+
+
+def test_capped_drop_computes_each_band_key_once(spark):
+    """With ``max_bucket_size``, ``banded_pairs`` reads the band rows for
+    the bucket sizes, the survival vectors and both sides of the
+    self-join.  Bucket sizes come from a window over those rows, so after
+    execution the final plan of ``oversize='drop'`` computes the md5 band
+    keys in one place (the other reads are reused exchanges): num_bands
+    md5 calls.  With an aggregate joined back to the rows it held 12 for
+    4 bands."""
+    from mapreduce_minhash_lsh_spark.config import MinHashLSHConfig
+    from mapreduce_minhash_lsh_spark.operators.lsh import banded_pairs
+
+    cfg = MinHashLSHConfig(num_hashes=16, num_bands=4, id_strategy="md5")
+    # Band 0 makes buckets of 8 (kept), band 1 buckets of ~21 (dropped),
+    # bands 2-3 singletons.
+    sig = spark.range(64).selectExpr(
+        "id AS doc_id",
+        "transform(sequence(0, 15), j -> "
+        "IF(j < 4, id % 8, IF(j < 8, id % 3, id * 31 + j))) AS sig",
+    )
+    df = banded_pairs(sig, cfg, max_bucket_size=12, oversize="drop")
+    assert len(df.collect()) == 8 * 28
+    final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("md5(") == cfg.num_bands, final

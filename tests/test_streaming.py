@@ -981,9 +981,10 @@ def test_incremental_batch_shuffle_does_not_grow_with_state(spark, tmp_path):
     """The same one-file batch appended to a drained state of N docs and
     to one of 4N, whose extra 3N docs share no character shingle with
     any doc: both resumed runs return the same rows, and the 4N run
-    shuffles within 1.25x of the N run's bytes — the batch's band rows
-    and candidate ids are broadcast, so neither the band log nor the
-    shingle log shuffles whole."""
+    shuffles within 1.25x of the N run's bytes.  The verify broadcasts
+    the candidates' ids into the shingle log, so the log does not
+    shuffle whole; verifying through ``exact_jaccard`` shuffled 0.67 MB
+    over the N state and 7.2 MB over the 4N one."""
     import random
     import string
 
@@ -1024,8 +1025,9 @@ def test_incremental_batch_shuffle_does_not_grow_with_state(spark, tmp_path):
                     spark, str(sf), cfg, state_dir=state
                 ).collect()))
             ),
+            every_job=True,
         )
         runs[tag] = (out, shuffled)
     (small, b_small), (large, b_large) = runs["small"], runs["large"]
     assert small and small == large
-    assert b_large <= 1.25 * b_small, (b_small, b_large)
+    assert 0 < b_large <= 1.25 * b_small, (b_small, b_large)
